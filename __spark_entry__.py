@@ -1620,9 +1620,10 @@ def _q_reassembled_segments(spark, sf_dir):
 
 
 def _q_entity_linking(spark, sf_dir):
-    """The linking stage itself: fused exact gram join (Jaccard +
-    TF-IDF cosine in one shuffle) — oracle-checked against the same
-    formula in DuckDB, surfaces generated from the rule table."""
+    """The linking stage itself: the exact prefix-filtered join
+    (Jaccard + TF-IDF cosine verified per candidate pair) —
+    oracle-checked against the all-pairs formula in DuckDB, surfaces
+    generated from the rule table."""
     from code_index_spark.operators.link import link_mentions
 
     t = derived_transcripts(spark, sf_dir)

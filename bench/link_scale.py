@@ -21,6 +21,21 @@ star loop actually runs.
 Usage: python bench/link_scale.py [n_base]   (default 1_000_000)
 Appends/replaces the '## End-to-end linking past the LSH cutover'
 section of BENCH.md and prints one JSON line.
+
+Exact-path mode, BELOW the cutover:
+
+    python bench/link_scale.py --exact [--control DIR] [--runs N]
+
+times linked_pairs_exact alone on the four perfbench vocab_skew
+link-scaling inputs (5.8k / 7.2k / 11.0k / 11.9k distinct surfaces:
+chat transcripts from perfbench/gen.py → extract_triples_sql →
+mention_surfaces, checkpointed before timing) at local[4] with the
+session defaults. With --control DIR, the linked_pairs_exact of the
+checkout at DIR runs in the same JVM, interleaved call by call with
+this checkout's (the order alternates per run, after one untimed
+warm-up call of each), and the pair sets, Jaccard and cosine of the
+two are compared. Writes BENCH_link_exact.json (min and median per
+size) and prints it.
 """
 
 from __future__ import annotations
@@ -34,7 +49,111 @@ ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 sys.path.insert(0, ROOT)
 
 
+# perfbench/baseline.json "link_scaling": (turns, person families,
+# tickets, seed) of the four vocab_skew inputs
+EXACT_SIZES = ((6000, 2600, 400, 11), (5000, 3600, 500, 405),
+               (8000, 5600, 800, 12), (9000, 6000, 800, 11))
+
+
+def _control_link_module(root: str):
+    """operators.link of the checkout at `root`, imported as a separate
+    package so both versions run in one session."""
+    import importlib
+    import importlib.util
+
+    alias = "control_code_index_spark"
+    pkg = os.path.join(root, "code_index_spark")
+    spec = importlib.util.spec_from_file_location(
+        alias, os.path.join(pkg, "__init__.py"), submodule_search_locations=[pkg])
+    mod = importlib.util.module_from_spec(spec)
+    sys.modules[alias] = mod
+    spec.loader.exec_module(mod)
+    return importlib.import_module(f"{alias}.operators.link")
+
+
+def exact_main(control: str | None, runs: int) -> None:
+    import statistics
+    import tempfile
+
+    import pyspark
+
+    sys.path.insert(0, os.path.join(ROOT, "perfbench"))
+    import gen
+
+    from code_index_spark.operators import link
+    from code_index_spark.operators.extract import extract_triples_sql
+    from code_index_spark.session import get_spark
+
+    spark = get_spark("link-scale-exact", cores=4)
+    impls = {"change": link.linked_pairs_exact}
+    if control:
+        impls["control"] = _control_link_module(control).linked_pairs_exact
+
+    def pairs(df):
+        return {(r["surface_a"], r["surface_b"]): (r["jaccard"], r["cosine"])
+                for r in df.collect()}
+
+    with tempfile.TemporaryDirectory() as tmp:
+        inputs = []
+        for turns, families, tickets, seed in EXACT_SIZES:
+            path = os.path.join(tmp, f"chat_{seed}_{turns}.parquet")
+            gen.chat_transcripts(seed, path, turns, families, tickets)
+            surfaces = link.mention_surfaces(
+                extract_triples_sql(spark.read.parquet(path))
+            ).localCheckpoint(eager=True)
+            inputs.append(((turns, families, tickets, seed), surfaces, surfaces.count()))
+
+        _, warm, n_warm = inputs[0]
+        for fn in impls.values():
+            fn(warm, n_warm).localCheckpoint(eager=True)
+
+        result = []
+        for (turns, families, tickets, seed), surfaces, n in inputs:
+            walls = {name: [] for name in impls}
+            out = {}
+            for r in range(runs):
+                order = list(impls) if r % 2 == 0 else list(impls)[::-1]
+                for name in order:
+                    t0 = time.perf_counter()
+                    linked = impls[name](surfaces, n).localCheckpoint(eager=True)
+                    walls[name].append(round(time.perf_counter() - t0, 3))
+                    out.setdefault(name, linked)
+            row = {"turns": turns, "families": families, "tickets": tickets,
+                   "seed": seed, "distinct_surfaces": n}
+            for name, w in walls.items():
+                row[name] = {"wall_s": w, "min_s": min(w),
+                             "median_s": round(statistics.median(w), 3)}
+            got = pairs(out["change"])
+            row["pairs"] = len(got)
+            if control:
+                want = pairs(out["control"])
+                common = got.keys() & want.keys()
+                row["same_pairs"] = got.keys() == want.keys()
+                row["jaccard_bit_equal"] = all(got[k][0] == want[k][0] for k in common)
+                row["max_cosine_diff"] = max(
+                    (abs(got[k][1] - want[k][1]) for k in common), default=0.0)
+                row["median_speedup"] = round(
+                    row["control"]["median_s"] / row["change"]["median_s"], 2)
+            print(json.dumps(row), flush=True)
+            result.append(row)
+
+    doc = {
+        "metric": "linked_pairs_exact wall, localCheckpoint(eager) of the pairs",
+        "cores": 4, "spark_version": pyspark.__version__, "runs": runs,
+        "interleaved": bool(control), "sizes": result,
+    }
+    with open(os.path.join(ROOT, "BENCH_link_exact.json"), "w") as fh:
+        json.dump(doc, fh, indent=1)
+        fh.write("\n")
+
+
 def main() -> None:
+    if "--exact" in sys.argv:
+        argv = sys.argv[1:]
+        control = argv[argv.index("--control") + 1] if "--control" in argv else None
+        runs = int(argv[argv.index("--runs") + 1]) if "--runs" in argv else 3
+        exact_main(control, runs)
+        return
     n_base = int(sys.argv[1]) if len(sys.argv) > 1 else 1_000_000
 
     from pyspark.sql import functions as F

@@ -1,4 +1,5 @@
-"""Entity linking — minhash-banding blocking + TF-IDF cosine rescoring
+"""Entity linking — exact prefix-filtered similarity join at vocabulary
+scale, minhash-banding blocking + TF-IDF cosine rescoring beyond it
 (J1/E4 in SURVEY.md §2.5; the Spark-first re-expression of the
 reference's ANN similarity search, vector_store.py:386-530, where a
 query embedding is matched against the corpus under cosine with a
@@ -11,15 +12,30 @@ Pipeline (all DataFrame ops, zero Python UDFs):
     batch_scheduler.py:39-72, handled structurally);
  2. normalize + character-3-gram shingles (pure SQL: sequence +
     transform + substring — stays in WholeStageCodegen);
- 3. pair scoring — size-adaptive: up to ~10^6 distinct surfaces a
-    FUSED exact gram self-join computes Jaccard AND TF-IDF cosine in
-    one shuffle (linked_pairs_exact; measured faster than banding
-    there, and exact-recall by construction); beyond that, pure-SQL
-    minhash banding (functions.minhash, tables sized from a target
-    miss probability — see candidate_pairs_lsh) blocks candidates
-    first, then the explode-join TF-IDF cosine rescores them. Both
-    paths are plain shuffle joins + aggregations that AQE can re-plan
-    and skew-split.
+ 3. pair scoring — size-adaptive: up to ~10^6 distinct surfaces an
+    exact set-similarity join (linked_pairs_exact) joins only the
+    rare-gram PREFIX of each surface's gram set and verifies each
+    candidate pair's Jaccard AND TF-IDF cosine in place; beyond that,
+    pure-SQL minhash banding (functions.minhash, tables sized from a
+    target miss probability — see candidate_pairs_lsh) blocks
+    candidates first, then the explode-join TF-IDF cosine rescores
+    them.
+
+Bounds, stated once for the whole module:
+ - Prefix bound (exact): with grams ordered rarest first, two gram
+   sets of Jaccard >= t share a gram within the first
+   sz − ceil(t·sz) + 1 grams of each. The ceil is taken of
+   t·sz − 1e-9, so floating point can only LENGTHEN a prefix past the
+   exact-arithmetic bound, never shorten it: 1 − 0.7 is
+   0.30000000000000004, and an unguarded ceil(10 · that) = 4 gives a
+   10-gram prefix one gram shorter than the bound for t = 0.3. A
+   longer prefix only adds candidates that verification drops.
+ - Surface ids are xxhash64(surface) longs throughout (exact pair
+   stream, banding tables, tfidf_cosine, connected-component nodes):
+   two distinct surfaces share an id with probability about n²/2⁶⁴,
+   ≈ 5·10⁻⁸ at 10⁶ surfaces.
+ - LSH blocking misses at most target_miss of the pairs at the
+   threshold (candidate_pairs_lsh).
 
 Returns pairs (surface_a, surface_b, jaccard, cosine) with
 surface_a < surface_b, cosine >= min_cosine.
@@ -27,7 +43,7 @@ surface_a < surface_b, cosine >= min_cosine.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, functions as F
+from pyspark.sql import DataFrame, Window, functions as F
 
 from ..functions.minhash import (
     band_collision_pairs,
@@ -172,63 +188,115 @@ def linked_pairs_exact(
     min_jaccard: float = 0.4,
     min_cosine: float = 0.5,
 ) -> DataFrame:
-    """Blocking + rescoring FUSED into one weighted gram self-join:
-    the same explode-join computes |∩| (→ exact Jaccard) and Σ wa·wb
-    (→ exact TF-IDF cosine) per pair in a single shuffle + aggregation.
+    """Exact set-similarity join over gram sets: a prefix-filtered
+    candidate join, then per-pair verification of Jaccard AND TF-IDF
+    cosine. Equal to the all-gram self-join it replaced (same pairs,
+    bit-equal Jaccard, cosine up to summation order) without ever
+    building its Σ df·(df−1)/2 gram-collision stream.
 
-    This replaced minhash blocking for vocabulary-scale inputs after
-    measurement showed (a) the round-2 5-table OR-construction MISSED
-    ~8% of true pairs at jaccard 0.4, and (b) blocking+rescoring costs
-    more than the exact join up to ~10^6 surfaces (distinct-surface
-    tables are vocab-scale even at 10^12 turns). candidate_pairs_lsh
-    (now recall-sized AND-OR banding) remains the blocking stage
-    beyond that size.
-    Stop-gram fanout is the scale risk of the exact join: cap with
-    functions.skew.frequency_cap on the gram key, and AQE skew-split
-    handles the residue."""
-    # the pair stream is keyed on 60-something-bit surface ids, not the
-    # surface STRINGS (round 6): the gram self-join emits ~n²-per-gram
-    # collision rows (4.06M at sf0.1 from 1064 surfaces) and the
-    # (a, b) pair aggregation was hashing/exchanging two ~15-char
-    # strings per row; two longs shuffle ~3× narrower and hash/compare
-    # in O(1). xxhash64(surface) is the same deterministic id
-    # convention canon.connected_components uses for its node ids
-    # (collision odds n²/2⁶⁴ — negligible at the ≤10⁶-surface scale
-    # this exact path serves). The canonical surface_a < surface_b
-    # STRING orientation is restored after the string join via
-    # least/greatest (jaccard and cosine are symmetric).
-    sid = F.xxhash64("surface").alias("sid")
-    terms = surfaces.select(sid, F.explode("grams").alias("gram"))
-    df_ = terms.groupBy("gram").agg(F.countDistinct("sid").alias("df"))
-    weighted = (
-        terms.join(F.broadcast(df_), "gram")
-        .withColumn("w", F.log(F.lit(float(n_docs + 1)) / (F.col("df") + 1.0)) + 1.0)
+    1. Order + vectors. One global gram order, df ascending then the
+       gram (rarest first), encoded as one long key = df << 32 | the
+       gram's rank among the grams of its df: sorting keys sorts by the
+       order, and the idf weight w = ln((N+1)/(df+1)) + 1 is recomputed
+       from the key alone. Each surface becomes one row holding its
+       sorted key array v; sizes and norms are derived from v where
+       needed, so the postings and both verification lookups read ONE
+       aggregate exchange.
+    2. Prefix filter (*Scalable and Robust Set Similarity Join*, ICDE
+       2018). J(x, y) >= t implies |x ∩ y| >= t·|x ∪ y| >= t·|x|, so
+       the first sz − ceil(t·sz) + 1 keys of x and of y share a key
+       (rounded conservatively; see the module docstring).
+    3. Candidates: the prefix postings self-joined on the key, sid_a <
+       sid_b, plus the positional filter: at the pair's RAREST shared
+       key (the one row step 4 keeps) every shared key sits at or after
+       it in both vectors, so |x ∩ y| <= min(|x| − pos_x, |y| − pos_y),
+       and J >= t needs |x ∩ y| >= t/(1+t)·(|x| + |y|). The probe side
+       is spread over 2× the cores by an explicit repartition on sid_a:
+       AQE does not coalesce a user-numbered repartition, and left to
+       AQE the small postings input collapses into one task (the
+       session's full shuffle width only adds task overhead here).
+    4. Verification: c = array_intersect(va, vb) over the longs (the
+       hash path); |x ∩ y| = size(c) gives exact Jaccard, and
+       Σ_{k∈c} w(k)² the cosine numerator (grams are distinct per
+       surface, so tf ≡ 1 and wa = wb = w) over ‖va‖·‖vb‖. A pair is
+       kept only at its rarest shared key, c[0] = key: array_intersect
+       keeps va's ascending order, and a qualifying pair's rarest
+       shared key lies in both prefixes, so each pair survives exactly
+       once without a dedupe shuffle.
+
+    The candidate join reads only the prefix postings, Σ (sz −
+    ceil(t·sz) + 1) rows instead of Σ sz, and at vocabulary scale the
+    planner broadcasts its build side and the vector lookups, so no
+    exchange carries a pair stream. Stop-grams sort last and fall out
+    of every prefix but those of near-total-overlap surfaces. The
+    positional test keeps the same 1e-9 slack as the prefix bound.
+
+    Pairs are keyed on xxhash64 surface ids (module docstring); the
+    canonical surface_a < surface_b STRING orientation is restored via
+    least/greatest (Jaccard and cosine are symmetric)."""
+    terms = surfaces.select(
+        F.xxhash64("surface").alias("sid"), "surface", F.explode("grams").alias("gram")
     )
-    stats = weighted.groupBy("sid").agg(
-        F.count("*").alias("sz"),
-        F.sqrt(F.sum(F.col("w") * F.col("w"))).alias("nrm"),
+    # surfaces are distinct and grams distinct per surface (array_distinct),
+    # so a gram's df is its row count — one exchange, not a distinct count's two
+    df_ = terms.groupBy("gram").agg(F.count("*").alias("df"))
+    keys = df_.select(
+        "gram",
+        F.shiftleft("df", 32)
+        .bitwiseOR(F.row_number().over(Window.partitionBy("df").orderBy("gram")))
+        .alias("key"),
     )
-    smap = surfaces.select(sid, "surface")
-    wa = weighted.select(F.col("sid").alias("sid_a"), "gram", F.col("w").alias("wa"))
-    wb = weighted.select(F.col("sid").alias("sid_b"), "gram", F.col("w").alias("wb"))
-    pair_agg = (
-        wa.join(wb, "gram")
-        .filter(F.col("sid_a") < F.col("sid_b"))
-        .groupBy("sid_a", "sid_b")
-        .agg(F.count("*").alias("inter"), F.sum(F.col("wa") * F.col("wb")).alias("dot"))
+
+    def weight(key):
+        return F.log(F.lit(float(n_docs + 1)) / (F.shiftright(key, 32) + 1.0)) + 1.0
+
+    def sq_norm(v):
+        return F.aggregate(v, F.lit(0.0), lambda acc, k: acc + weight(k) * weight(k))
+
+    vec = (
+        terms.join(F.broadcast(keys), "gram")
+        .groupBy("sid", "surface")
+        .agg(F.sort_array(F.collect_list("key")).alias("v"))
     )
-    sa = stats.join(smap, "sid").select(
-        F.col("sid").alias("sid_a"), F.col("surface").alias("surf_a"),
-        F.col("sz").alias("sa"), F.col("nrm").alias("na"))
-    sb = stats.join(smap, "sid").select(
-        F.col("sid").alias("sid_b"), F.col("surface").alias("surf_b"),
-        F.col("sz").alias("sb"), F.col("nrm").alias("nb"))
+    sz = F.size("v")
+    post = vec.select(
+        "sid", sz.alias("sz"),
+        F.posexplode(F.slice("v", 1, sz - F.ceil(sz * float(min_jaccard) - 1e-9) + 1))
+        .alias("pos", "key"),
+    )
+    n_parts = 2 * surfaces.sparkSession.sparkContext.defaultParallelism
+    pa = post.select(F.col("sid").alias("sid_a"), F.col("sz").alias("za"),
+                     F.col("pos").alias("pa"), "key")
+    pb = post.select(F.col("sid").alias("sid_b"), F.col("sz").alias("zb"),
+                     F.col("pos").alias("pb"), "key")
+    overlap_ub = F.least(F.col("za") - F.col("pa"), F.col("zb") - F.col("pb"))
+    cands = (
+        pa.repartition(n_parts, "sid_a")
+        .join(pb, "key")
+        .filter(
+            (F.col("sid_a") < F.col("sid_b"))
+            & ((1.0 + min_jaccard) * overlap_ub
+               >= min_jaccard * (F.col("za") + F.col("zb")) - 1e-9)
+        )
+        .select("sid_a", "sid_b", "key")
+    )
+    va = vec.select(F.col("sid").alias("sid_a"), F.col("surface").alias("surf_a"),
+                    F.col("v").alias("va"))
+    vb = vec.select(F.col("sid").alias("sid_b"), F.col("surface").alias("surf_b"),
+                    F.col("v").alias("vb"))
+    inter = F.size("c")
     return (
-        pair_agg.join(F.broadcast(sa), "sid_a")
-        .join(F.broadcast(sb), "sid_b")
-        .withColumn("jaccard", F.col("inter") / (F.col("sa") + F.col("sb") - F.col("inter")))
-        .withColumn("cosine", F.col("dot") / (F.col("na") * F.col("nb")))
-        .filter((F.col("jaccard") >= min_jaccard) & (F.col("cosine") >= min_cosine))
+        cands.join(va, "sid_a")
+        .join(vb, "sid_b")
+        # one-row explode: a Generate is a pushdown barrier, so the
+        # filters below read c instead of re-running array_intersect
+        .select("key", "surf_a", "surf_b", "va", "vb",
+                F.explode(F.array(F.array_intersect("va", "vb"))).alias("c"))
+        .filter(F.get("c", 0) == F.col("key"))
+        .withColumn("jaccard", inter / (F.size("va") + F.size("vb") - inter))
+        .filter(F.col("jaccard") >= min_jaccard)
+        .withColumn("cosine", sq_norm("c") / F.sqrt(sq_norm("va") * sq_norm("vb")))
+        .filter(F.col("cosine") >= min_cosine)
         .select(
             F.least("surf_a", "surf_b").alias("surface_a"),
             F.greatest("surf_a", "surf_b").alias("surface_b"),
@@ -457,8 +525,8 @@ def link_mentions(
     surfaces — so this is cheap at any corpus size.
 
     Blocking strategy is size-adaptive and measured: up to
-    `lsh_above_surfaces` distinct surfaces the fused exact gram join
-    (linked_pairs_exact) is both faster and recall-exact; beyond it
+    `lsh_above_surfaces` distinct surfaces the prefix-filtered exact
+    join (linked_pairs_exact) is both faster and recall-exact; beyond it
     recall-sized AND-OR minhash banding (candidate_pairs_lsh, measured
     recall in BENCH.md + pytest containment gate) bounds candidate
     generation."""
@@ -471,10 +539,9 @@ def link_mentions(
     spark = triples.sparkSession
     n_surf = surfaces.count()
     if n_surf <= lsh_above_surfaces:
-        # the fused pair join's volume is gram-collision-driven (can be
-        # ~n² on gram-dense vocabularies), so it runs at FULL session
-        # shuffle width — measured 3.8s at 32 vs 5.6s at 2 partitions on
-        # a 1k-surface / 500k-pair input
+        # the exact join sizes its own candidate stage (prefix postings
+        # spread over 2× the cores); its volume is prefix-collision-
+        # driven, not all-gram-collision-driven
         return linked_pairs_exact(
             surfaces, n_surf,
             min_jaccard=1.0 - jaccard_max_dist, min_cosine=min_cosine,

@@ -19,14 +19,15 @@ from ..operators.materialize import (
 
 
 def build_graph(
-    transcripts: DataFrame,
+    transcripts: DataFrame | None,
     min_cosine: float = 0.5,
     triples: DataFrame | None = None,
 ) -> dict[str, DataFrame]:
     """Run the full pipeline; returns all intermediate + final tables.
 
     Pass a pre-extracted (ideally persisted) `triples` DataFrame to
-    avoid re-running extraction when composing with other jobs."""
+    avoid re-running extraction when composing with other jobs; the
+    transcripts are then unused and may be None."""
     if triples is None:
         # the Catalyst extractor: the graph stages never read span
         # offsets, so the whole extraction stays in WholeStageCodegen

@@ -25,24 +25,13 @@ def main(argv=None) -> None:
 
     from pyspark.sql import SparkSession
 
-    from code_index_spark.operators.canon import connected_components
-    from code_index_spark.operators.link import link_mentions
-    from code_index_spark.operators.materialize import (
-        assign_entities,
-        build_edges,
-        build_vertices,
-        object_vertices,
-    )
+    from code_index_spark.plans.pipeline import build_graph
 
     spark = SparkSession.builder.appName("kgp-build-graph").getOrCreate()
     triples = spark.read.parquet(args.triples).persist()
-    pairs = link_mentions(triples, min_cosine=args.min_cosine).persist()
-    components = connected_components(pairs).persist()
-    entity_map = assign_entities(triples, components).persist()
-    vertices = build_vertices(entity_map).unionByName(object_vertices(triples))
-    edges = build_edges(triples, entity_map)
-    vertices.write.mode("overwrite").parquet(f"{args.output}/vertices")
-    edges.write.mode("overwrite").partitionBy("pred").parquet(f"{args.output}/edges")
+    g = build_graph(None, min_cosine=args.min_cosine, triples=triples)
+    g["vertices"].write.mode("overwrite").parquet(f"{args.output}/vertices")
+    g["edges"].write.mode("overwrite").partitionBy("pred").parquet(f"{args.output}/edges")
     json.dump(
         {
             "vertices": spark.read.parquet(f"{args.output}/vertices").count(),

@@ -266,3 +266,105 @@ def test_search_index_parity(linked, spark, tmp_path):
         assert rows(search_index_topk(disk, q, k=10)) == want
     # the in-vocab query actually returns results (non-vacuous parity)
     assert rows(search_index_topk(index, "acme corp", k=10))
+
+
+# ---------------------------------------------------------------- exact join
+
+def _brute_force_pairs(rows, min_jaccard, min_cosine):
+    """All-pairs recomputation of linked_pairs_exact in Python: same
+    idf weight, same Jaccard expression, every pair that shares a gram."""
+    import math
+    from collections import Counter
+    from itertools import combinations
+
+    sets = {r["surface"]: set(r["grams"]) for r in rows}
+    n = len(sets)
+    df = Counter(g for gs in sets.values() for g in gs)
+    w = {g: math.log((n + 1) / (d + 1.0)) + 1.0 for g, d in df.items()}
+    nrm = {s: math.sqrt(sum(w[g] ** 2 for g in gs)) for s, gs in sets.items()}
+    out = {}
+    for a, b in combinations(sorted(sets), 2):
+        inter = sets[a] & sets[b]
+        if not inter:
+            continue
+        j = len(inter) / (len(sets[a]) + len(sets[b]) - len(inter))
+        c = sum(w[g] ** 2 for g in inter) / (nrm[a] * nrm[b])
+        if j >= min_jaccard and c >= min_cosine:
+            out[(a, b)] = (j, c)
+    return out
+
+
+def _assert_exact_join(surfaces, min_jaccard, min_cosine):
+    from code_index_spark.operators.link import linked_pairs_exact
+
+    rows = surfaces.select("surface", "grams").collect()
+    want = _brute_force_pairs(rows, min_jaccard, min_cosine)
+    out = linked_pairs_exact(surfaces, len(rows), min_jaccard, min_cosine).collect()
+    got = {(r["surface_a"], r["surface_b"]): (r["jaccard"], r["cosine"]) for r in out}
+    assert len(got) == len(out)  # each pair once
+    assert set(got) == set(want)
+    for k, (j, c) in want.items():
+        assert got[k][0] == j, k  # |∩| and sizes are integers: bit-equal
+        assert abs(got[k][1] - c) <= 1e-9, k
+    return want
+
+
+def _gram_surfaces(spark, pairs):
+    """Surfaces with explicit gram sets: each (a, b, o) plants x with a
+    grams and y with b grams sharing o. The unshared grams are unique
+    (df 1) and the shared ones have df 2, so the shared grams sort LAST
+    in both vectors — the rarest shared gram sits as deep as the prefix
+    and positional bounds allow."""
+    rows = []
+    for a, b, o in pairs:
+        tag = f"{a}_{b}_{o}"
+        shared = [f"s{tag}_{i}" for i in range(o)]
+        rows.append((f"x{tag}", [f"x{tag}_{i}" for i in range(a - o)] + shared))
+        rows.append((f"y{tag}", [f"y{tag}_{i}" for i in range(b - o)] + shared))
+    return spark.createDataFrame(rows, "surface string, grams array<string>")
+
+
+@pytest.mark.parametrize("min_jaccard", [0.4, 1 - 0.7])
+@pytest.mark.parametrize("min_cosine", [0.0, 0.5])
+def test_exact_join_boundary_sizes(spark, min_jaccard, min_cosine):
+    """Gram-set sizes 5/10/15/20, where t·sz is an integer for t = 0.4
+    (and for t = 1 − 0.7 = 0.30000000000000004 at 10 and 20), with every
+    overlap o: pairs at, above and below the threshold, including y ⊂ x
+    at J = t exactly, must match brute force."""
+    sizes = (5, 10, 15, 20)
+    plan = [(a, b, o) for a in sizes for b in sizes for o in range(1, min(a, b) + 1)]
+    want = _assert_exact_join(_gram_surfaces(spark, plan), min_jaccard, min_cosine)
+    if min_jaccard == 0.4:  # pairs sit exactly on the threshold
+        assert min(j for j, _ in want.values()) == 0.4
+
+
+def _string_surfaces(spark, names):
+    from code_index_spark.operators.link import char_ngrams, normalize_surface
+
+    return (
+        spark.createDataFrame([(s,) for s in names], "surface string")
+        .withColumn("norm", normalize_surface(F.col("surface")))
+        .withColumn("grams", char_ngrams(F.col("norm")))
+    )
+
+
+def test_exact_join_matches_brute_force(spark):
+    """Adversarial surface shapes through the production gram builder:
+    1–3-gram surfaces, a stop-gram vocabulary (every surface shares its
+    most frequent grams), non-ASCII text, and distinct surfaces that
+    normalize to one string (J = 1)."""
+    short = ["a", "b", "ab", "ba", "x", "xy", "xyz", "@", "-"]
+    stop = ([f"service_handler_{c}{d}" for c in "abcdefgh" for d in "pqrs"]
+            + ["service handler", "service_handler_ab_x"])
+    unicode_ = ["Zoë Müller", "zoe muller", "Zoë-Müller", "東京タワー", "東京タワ",
+                "京都タワー", "Ärzte Ost", "ärzte_ost", "🚀 launch", "🚀launch"]
+    same_norm = ["Acme-Corp", "acme_corp", "@acme corp", "ACME  CORP"]
+    surfaces = _string_surfaces(spark, short + stop + unicode_ + same_norm)
+    for min_cosine in (0.5, 0.0):
+        want = _assert_exact_join(surfaces, 0.4, min_cosine)
+        assert want[("@acme corp", "Acme-Corp")][0] == 1.0
+        assert ("Zoë Müller", "Zoë-Müller") in want
+        assert ("東京タワ", "東京タワー") in want
+    # min_cosine = 0 returns every pair above the Jaccard threshold
+    assert len(want) > len(_brute_force_pairs(
+        surfaces.select("surface", "grams").collect(), 0.4, 0.5))

@@ -184,3 +184,83 @@ def test_shuffle_shards_single_exchange(spark):
     assert "hashpartitioning(shard" in main
     assert "rangepartitioning" not in main
     assert "MapInPandas" not in main and "BatchEvalPython" not in main
+
+
+def _plan_children(node) -> list:
+    """Children of an executed plan node, descending through AQE query
+    stages and reused exchanges to the operators that ran."""
+    cls = node.getClass().getSimpleName()
+    if cls == "AdaptiveSparkPlanExec":
+        return [node.executedPlan()]
+    if cls.endswith("QueryStageExec"):
+        return [node.plan()]
+    if cls == "ReusedExchangeExec":
+        return [node.child()]
+    it = node.children().iterator()
+    out = []
+    while it.hasNext():
+        out.append(it.next())
+    return out
+
+
+def _metric(node, name: str):
+    m = node.metrics().get(name)
+    return m.get().value() if m.isDefined() else None
+
+
+def test_exact_join_reads_only_prefix_postings(spark):
+    """linked_pairs_exact's candidate self-join reads only the prefix
+    postings, Σ (sz − ceil(t·sz) + 1) rows per side (< Σ sz), and no
+    exchange sits above it: the candidate stream, larger here than
+    every gram row of the input, is never shuffled or broadcast.
+    Fixture: a stop-gram vocabulary, every surface sharing the grams of
+    one long common prefix."""
+    import math
+    from fractions import Fraction
+
+    from code_index_spark.operators.link import (
+        char_ngrams,
+        linked_pairs_exact,
+        normalize_surface,
+    )
+
+    names = [f"service_handler_{i}" for i in range(200)] + ["acme corp", "Acme-Corp"]
+    surfaces = (
+        spark.createDataFrame([(s,) for s in names], "surface string")
+        .withColumn("norm", normalize_surface(F.col("surface")))
+        .withColumn("grams", char_ngrams(F.col("norm")))
+        .localCheckpoint(eager=True)
+    )
+    sizes = [len(r["grams"]) for r in surfaces.select("grams").collect()]
+    t = Fraction(2, 5)
+    prefix_rows = sum(sz - math.ceil(t * sz) + 1 for sz in sizes)
+    assert prefix_rows < sum(sizes)
+
+    out = linked_pairs_exact(surfaces, len(names), min_jaccard=0.4)
+    assert out.collect()  # runs THIS plan, so its final AQE plan has metrics
+    found = []
+
+    def visit(node, exchanges_above: int) -> None:
+        text = node.simpleString(400)
+        if "Join" in node.nodeName() and "(sid_a" in text and "< sid_b" in text:
+            found.append((node, exchanges_above))
+        if node.nodeName() in ("Exchange", "BroadcastExchange"):
+            exchanges_above += 1
+        for child in _plan_children(node):
+            visit(child, exchanges_above)
+
+    def rows_into(node) -> int:
+        while _metric(node, "shuffleRecordsWritten") is None and not (
+            node.nodeName() == "BroadcastExchange"
+        ):
+            (node,) = _plan_children(node)
+        if node.nodeName() == "BroadcastExchange":
+            return _metric(node, "numOutputRows")
+        return _metric(node, "shuffleRecordsWritten")
+
+    visit(out._jdf.queryExecution().executedPlan(), 0)
+    assert len(found) == 1, "one candidate self-join"
+    join, exchanges_above = found[0]
+    assert exchanges_above == 0  # the candidate stream is never exchanged
+    assert [rows_into(c) for c in _plan_children(join)] == [prefix_rows] * 2
+    assert _metric(join, "numOutputRows") > sum(sizes)
