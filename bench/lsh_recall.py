@@ -2,9 +2,9 @@
 (operators/link.candidate_pairs_lsh) at the link_mentions cutover.
 
 Why this exists: link_mentions routes to minhash banding exactly when
-the vocabulary exceeds 10⁶ distinct surfaces (link.py lsh_above_
-surfaces) — the one regime where blocking recall cannot be recovered
-by rescoring. Round 2 shipped a fixed k=5 OR-construction whose
+the vocabulary exceeds 10⁶ distinct surfaces (link.py
+LSH_ABOVE_SURFACES) — the one regime where blocking recall cannot be
+recovered by rescoring. Round 2 shipped a fixed k=5 OR-construction whose
 measured miss rate was ~8% at jaccard 0.4; round 3 sizes k from a
 target miss probability (functions.minhash.tables_for_recall). This
 script MEASURES recall at the cutover scale instead of asserting it.

@@ -4,7 +4,8 @@ Five strategies, each a DataFrame-in/DataFrame-out operator over a
 (id, text) or (id, embedding) table:
 
   exact            — hash-groupBy on md5(text); zero false positives
-  ngram_jaccard    — exact n-gram Jaccard pairs via explode + hash join
+  ngram_jaccard    — exact n-gram Jaccard pairs via the prefix-filtered
+                     set-similarity join (functions.simjoin)
   minhash_lsh      — md5-60bit minhash banding, pure Catalyst (the
                      100 TB path: candidate pairs only, never O(n²))
   simhash          — 60-bit simhash, pure Catalyst (md5 token hashes) +
@@ -23,6 +24,7 @@ from __future__ import annotations
 import numpy as np
 from pyspark.sql import DataFrame, Window, functions as F
 
+from ..functions.simjoin import minhash_join, prefix_join
 from ..functions.spread import spread_narrow_scan
 
 
@@ -60,35 +62,22 @@ def word_ngrams(col, n: int = 3):
 def ngram_jaccard_pairs(
     df: DataFrame, id_col: str, text_col: str, n: int = 3, threshold: float = 0.8
 ) -> DataFrame:
-    """Exact Jaccard similarity pairs over word n-grams.
+    """Exact Jaccard similarity pairs over word n-grams: (id_a, id_b,
+    jaccard) with id_a < id_b and jaccard >= threshold; NULL texts are
+    dropped (_shingled).
 
-    explode → self hash-join on shingle → |∩| per pair → Jaccard via
-    |A|+|B|-|∩|. The join key is the shingle, so common shingles fan
-    out — at 100 TB this runs *after* minhash_lsh blocking (use this
-    as the exact rescoring stage); standalone it is exact and fine to
-    ~10^6 docs per shingle-frequency cap."""
-    grams = df.select(
-        F.col(id_col).alias("id"), F.explode(word_ngrams(F.col(text_col), n)).alias("g")
-    )
-    sizes = grams.groupBy("id").agg(F.count("*").alias("sz"))
-    a = grams.select(F.col("id").alias("id_a"), "g")
-    b = grams.select(F.col("id").alias("id_b"), "g")
-    inter = (
-        a.join(b, "g")
-        .filter(F.col("id_a") < F.col("id_b"))
-        .groupBy("id_a", "id_b")
-        .agg(F.count("*").alias("inter"))
-    )
-    return (
-        inter.join(sizes.select(F.col("id").alias("id_a"), F.col("sz").alias("sz_a")), "id_a")
-        .join(sizes.select(F.col("id").alias("id_b"), F.col("sz").alias("sz_b")), "id_b")
-        .withColumn(
-            "jaccard",
-            F.col("inter") / (F.col("sz_a") + F.col("sz_b") - F.col("inter")),
-        )
-        .filter(F.col("jaccard") >= threshold)
-        .select("id_a", "id_b", "jaccard")
-    )
+    functions.simjoin.prefix_join over the shingle sets: only each
+    doc's rarest-shingle prefix is self-joined and each candidate is
+    verified in place, so common shingles (boilerplate, templates)
+    fall out of every prefix but those of near-total-overlap docs
+    instead of fanning out as an all-shingle join would. The candidate
+    volume is that of the prefix collisions; at crawl scale
+    minhash_verified_pairs is the linear-in-bucket-sizes alternative
+    with a stated miss probability."""
+    # checkpointed: the prefix join reads the shingle table from
+    # several plan branches, and the shingle build should run once
+    grams = _shingled(df, id_col, text_col, n).localCheckpoint(eager=True)
+    return prefix_join(grams, threshold)
 
 
 # ------------------------------------------- cross-doc duplicated windows
@@ -382,7 +371,8 @@ def _shingled(df: DataFrame, id_col: str, text_col: str, n: int) -> DataFrame:
     signatures run at session width. Inputs already wider than the core
     count (any real corpus) skip the shuffle.
 
-    NULL/whitespace-only texts gram to the single '' shingle, so they
+    NULL texts are dropped (the DuckDB oracles drop them too). Empty and
+    whitespace-only texts gram to the single '' shingle, so they
     mutually pair at jaccard 1.0 — intentional (they ARE near-identical,
     and the DuckDB oracles derive the same grams), but a crawl corpus
     with MANY empty docs puts them all in one band bucket (the
@@ -478,29 +468,8 @@ def minhash_lsh_pairs(
     # checkpoint truncates the re-analysis + recompute of the upstream
     # scan three times over — the CLAUDE.md persist-vs-plan lesson)
     grams = _shingled(df, id_col, text_col, n).localCheckpoint(eager=True)
-    cands = minhash_band_candidates(
-        df, id_col, text_col, n, num_hash_tables, shingled=grams,
-        max_bucket=max_bucket,
-    )
-    # MERGE hint on the gram sides (round 6): left to AQE the rescore
-    # broadcasts the whole gram-array table twice (it fits the session's
-    # 64 MB estimate at bench scale) — two serial driver-built hashed
-    # relations of wide array rows, measured 3.2-6.5s at sf0.1 vs
-    # ~0.8-1.1s for either shuffled join. Between the shuffled
-    # strategies, sort-merge is the one that survives corpus scale: a
-    # shuffled-hash build side holding a partition's gram ARRAYS cannot
-    # spill and was observed to OOM at 2M surfaces on the link path
-    # ("Can't acquire ... to build hash relation"), while SMJ sorts on
-    # the long id cheaply and spills gracefully; at sf0.1 the two
-    # measured within noise (0.77-0.93s vs 0.83-1.08s).
-    a = grams.select(F.col("id").alias("id_a"), F.col("grams").alias("ga")).hint("merge")
-    b = grams.select(F.col("id").alias("id_b"), F.col("grams").alias("gb")).hint("merge")
-    inter = F.size(F.array_intersect("ga", "gb"))
-    return (
-        cands.join(a, "id_a").join(b, "id_b")
-        .withColumn("jaccard", inter / (F.size("ga") + F.size("gb") - inter))
-        .filter(F.col("jaccard") >= 1.0 - jaccard_max_dist)
-        .select("id_a", "id_b", "jaccard")
+    return minhash_join(
+        grams, 1.0 - jaccard_max_dist, num_hash_tables, max_bucket=max_bucket
     )
 
 

@@ -21,15 +21,9 @@ Pipeline (all DataFrame ops, zero Python UDFs):
     candidates first, then the explode-join TF-IDF cosine rescores
     them.
 
-Bounds, stated once for the whole module:
- - Prefix bound (exact): with grams ordered rarest first, two gram
-   sets of Jaccard >= t share a gram within the first
-   sz − ceil(t·sz) + 1 grams of each. The ceil is taken of
-   t·sz − 1e-9, so floating point can only LENGTHEN a prefix past the
-   exact-arithmetic bound, never shorten it: 1 − 0.7 is
-   0.30000000000000004, and an unguarded ceil(10 · that) = 4 gives a
-   10-gram prefix one gram shorter than the bound for t = 0.3. A
-   longer prefix only adds candidates that verification drops.
+Both joins and the TF-IDF weighting are the shared set-similarity
+core, functions.simjoin (prefix_join, minhash_join, gram_weights); its
+docstring states the prefix bound. Bounds of this module:
  - Surface ids are xxhash64(surface) longs throughout (exact pair
    stream, banding tables, tfidf_cosine, connected-component nodes):
    two distinct surfaces share an id with probability about n²/2⁶⁴,
@@ -43,13 +37,14 @@ surface_a < surface_b, cosine >= min_cosine.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, Window, functions as F
+from pyspark.sql import DataFrame, functions as F
 
-from ..functions.minhash import (
-    band_collision_pairs,
-    bands_for_recall,
-    minhash_bands,
-)
+from ..functions.minhash import bands_for_recall
+from ..functions.simjoin import gram_weights, minhash_join, prefix_join
+
+# link_mentions' cutover: up to this many distinct surfaces the exact
+# prefix join runs, beyond it minhash banding blocks candidates first
+LSH_ABOVE_SURFACES = 1_000_000
 
 
 def normalize_surface(col):
@@ -87,6 +82,26 @@ def mention_surfaces(triples: DataFrame) -> DataFrame:
     )
 
 
+def _surface_pairs(pairs: DataFrame, surfaces: DataFrame, *cols: str) -> DataFrame:
+    """(id_a, id_b, *cols) keyed on xxhash64 surface ids →
+    (surface_a, surface_b, *cols): the strings re-attach to the
+    pair-scale output, and the canonical surface_a < surface_b STRING
+    orientation is restored via least/greatest (jaccard and cosine are
+    symmetric)."""
+    sa = surfaces.select(F.xxhash64("surface").alias("id_a"), F.col("surface").alias("surf_a"))
+    sb = surfaces.select(F.xxhash64("surface").alias("id_b"), F.col("surface").alias("surf_b"))
+    return pairs.join(sa, "id_a").join(sb, "id_b").select(
+        F.least("surf_a", "surf_b").alias("surface_a"),
+        F.greatest("surf_a", "surf_b").alias("surface_b"),
+        *cols,
+    )
+
+
+def _surface_sets(surfaces: DataFrame) -> DataFrame:
+    """(id, grams) sets keyed on xxhash64(surface) for functions.simjoin."""
+    return surfaces.select(F.xxhash64("surface").alias("id"), "grams")
+
+
 def candidate_pairs_lsh(
     surfaces: DataFrame,
     jaccard_max_dist: float = 0.6,
@@ -98,7 +113,7 @@ def candidate_pairs_lsh(
 ) -> DataFrame:
     """Minhash AND-OR banding blocking self-join over surfaces →
     candidate pairs with exact gram Jaccard (computed on candidates
-    only).
+    only; functions.simjoin.minhash_join).
 
     Recall is SIZED, not guessed (round-3 fix): the band count defaults
     to bands_for_recall(1 - jaccard_max_dist, target_miss, r) — a pair
@@ -129,57 +144,18 @@ def candidate_pairs_lsh(
     table is |surfaces| × b rows and the collision join + pair dedup
     shuffle it — carrying ~25-char surface strings through that
     exchange roughly doubled its bytes vs (long, int, long) rows.
-    Surface strings re-attach after the jaccard filter; the canonical
-    surface_a < surface_b STRING orientation is restored via
-    least/greatest (jaccard is symmetric), so the output contract is
-    unchanged."""
+    Surface strings re-attach after the jaccard filter, so the output
+    contract is unchanged."""
     if num_hash_tables is None:
         num_hash_tables = bands_for_recall(
             1.0 - jaccard_max_dist, target_miss, rows_per_band
         )
-    keyed = surfaces.select(
-        F.xxhash64("surface").alias("sid"), "surface", "grams"
+    scored = minhash_join(
+        _surface_sets(surfaces), 1.0 - jaccard_max_dist, num_hash_tables,
+        rows_per_band=rows_per_band, max_bucket=max_bucket,
+        num_partitions=num_partitions,
     )
-    bands = minhash_bands(
-        keyed.select(F.col("sid").alias("id"), "grams"),
-        "id", "grams", num_hash_tables, rows_per_band=rows_per_band,
-    )
-    cands = band_collision_pairs(
-        bands, max_bucket=max_bucket, num_partitions=num_partitions
-    )
-    # MERGE hint: same rationale as minhash_lsh_pairs' rescore — the
-    # wide gram-array sides must not be driver-broadcast (serial
-    # build, impossible at the >10^6-surface scale this path serves)
-    # NOR shuffled-hash (a build side holding a partition's gram
-    # arrays cannot spill: observed "Can't acquire ... to build hash
-    # relation" OOM at 2M surfaces); sort-merge on the long ids spills
-    # gracefully and measured within noise of SHJ at bench scale. The
-    # rescore sides carry ONLY (sid, grams) — the surface strings
-    # re-attach to the post-filter pair set (dup-scale, not
-    # candidate-scale) in the final mapping joins below.
-    ga = keyed.select(F.col("sid").alias("id_a"),
-                      F.col("grams").alias("ga")).hint("merge")
-    gb = keyed.select(F.col("sid").alias("id_b"),
-                      F.col("grams").alias("gb")).hint("merge")
-    inter = F.size(F.array_intersect("ga", "gb"))
-    scored = (
-        cands.join(ga, "id_a")
-        .join(gb, "id_b")
-        .withColumn("jaccard", inter / (F.size("ga") + F.size("gb") - inter))
-        .filter(F.col("jaccard") >= 1.0 - jaccard_max_dist)
-        .select("id_a", "id_b", "jaccard")
-    )
-    sa = keyed.select(F.col("sid").alias("id_a"), F.col("surface").alias("surf_a"))
-    sb = keyed.select(F.col("sid").alias("id_b"), F.col("surface").alias("surf_b"))
-    return (
-        scored.join(sa, "id_a")
-        .join(sb, "id_b")
-        .select(
-            F.least("surf_a", "surf_b").alias("surface_a"),
-            F.greatest("surf_a", "surf_b").alias("surface_b"),
-            "jaccard",
-        )
-    )
+    return _surface_pairs(scored, surfaces, "jaccard")
 
 
 def linked_pairs_exact(
@@ -188,127 +164,25 @@ def linked_pairs_exact(
     min_jaccard: float = 0.4,
     min_cosine: float = 0.5,
 ) -> DataFrame:
-    """Exact set-similarity join over gram sets: a prefix-filtered
-    candidate join, then per-pair verification of Jaccard AND TF-IDF
-    cosine. Equal to the all-gram self-join it replaced (same pairs,
-    bit-equal Jaccard, cosine up to summation order) without ever
-    building its Σ df·(df−1)/2 gram-collision stream.
-
-    1. Order + vectors. One global gram order, df ascending then the
-       gram (rarest first), encoded as one long key = df << 32 | the
-       gram's rank among the grams of its df: sorting keys sorts by the
-       order, and the idf weight w = ln((N+1)/(df+1)) + 1 is recomputed
-       from the key alone. Each surface becomes one row holding its
-       sorted key array v; sizes and norms are derived from v where
-       needed, so the postings and both verification lookups read ONE
-       aggregate exchange.
-    2. Prefix filter (*Scalable and Robust Set Similarity Join*, ICDE
-       2018). J(x, y) >= t implies |x ∩ y| >= t·|x ∪ y| >= t·|x|, so
-       the first sz − ceil(t·sz) + 1 keys of x and of y share a key
-       (rounded conservatively; see the module docstring).
-    3. Candidates: the prefix postings self-joined on the key, sid_a <
-       sid_b, plus the positional filter: at the pair's RAREST shared
-       key (the one row step 4 keeps) every shared key sits at or after
-       it in both vectors, so |x ∩ y| <= min(|x| − pos_x, |y| − pos_y),
-       and J >= t needs |x ∩ y| >= t/(1+t)·(|x| + |y|). The probe side
-       is spread over 2× the cores by an explicit repartition on sid_a:
-       AQE does not coalesce a user-numbered repartition, and left to
-       AQE the small postings input collapses into one task (the
-       session's full shuffle width only adds task overhead here).
-    4. Verification: c = array_intersect(va, vb) over the longs (the
-       hash path); |x ∩ y| = size(c) gives exact Jaccard, and
-       Σ_{k∈c} w(k)² the cosine numerator (grams are distinct per
-       surface, so tf ≡ 1 and wa = wb = w) over ‖va‖·‖vb‖. A pair is
-       kept only at its rarest shared key, c[0] = key: array_intersect
-       keeps va's ascending order, and a qualifying pair's rarest
-       shared key lies in both prefixes, so each pair survives exactly
-       once without a dedupe shuffle.
-
-    The candidate join reads only the prefix postings, Σ (sz −
-    ceil(t·sz) + 1) rows instead of Σ sz, and at vocabulary scale the
-    planner broadcasts its build side and the vector lookups, so no
-    exchange carries a pair stream. Stop-grams sort last and fall out
-    of every prefix but those of near-total-overlap surfaces. The
-    positional test keeps the same 1e-9 slack as the prefix bound.
+    """Exact set-similarity join over gram sets: the prefix-filtered
+    candidate join of functions.simjoin.prefix_join, verifying each
+    candidate pair's Jaccard AND TF-IDF cosine in place. Equal to an
+    all-gram self-join (same pairs, bit-equal Jaccard, cosine up to
+    summation order) without ever building its Σ df·(df−1)/2
+    gram-collision stream.
 
     Pairs are keyed on xxhash64 surface ids (module docstring); the
-    canonical surface_a < surface_b STRING orientation is restored via
-    least/greatest (Jaccard and cosine are symmetric)."""
-    terms = surfaces.select(
-        F.xxhash64("surface").alias("sid"), "surface", F.explode("grams").alias("gram")
-    )
-    # surfaces are distinct and grams distinct per surface (array_distinct),
-    # so a gram's df is its row count — one exchange, not a distinct count's two
-    df_ = terms.groupBy("gram").agg(F.count("*").alias("df"))
-    keys = df_.select(
-        "gram",
-        F.shiftleft("df", 32)
-        .bitwiseOR(F.row_number().over(Window.partitionBy("df").orderBy("gram")))
-        .alias("key"),
-    )
-
-    def weight(key):
-        return F.log(F.lit(float(n_docs + 1)) / (F.shiftright(key, 32) + 1.0)) + 1.0
-
-    def sq_norm(v):
-        return F.aggregate(v, F.lit(0.0), lambda acc, k: acc + weight(k) * weight(k))
-
-    vec = (
-        terms.join(F.broadcast(keys), "gram")
-        .groupBy("sid", "surface")
-        .agg(F.sort_array(F.collect_list("key")).alias("v"))
-    )
-    sz = F.size("v")
-    post = vec.select(
-        "sid", sz.alias("sz"),
-        F.posexplode(F.slice("v", 1, sz - F.ceil(sz * float(min_jaccard) - 1e-9) + 1))
-        .alias("pos", "key"),
-    )
-    n_parts = 2 * surfaces.sparkSession.sparkContext.defaultParallelism
-    pa = post.select(F.col("sid").alias("sid_a"), F.col("sz").alias("za"),
-                     F.col("pos").alias("pa"), "key")
-    pb = post.select(F.col("sid").alias("sid_b"), F.col("sz").alias("zb"),
-                     F.col("pos").alias("pb"), "key")
-    overlap_ub = F.least(F.col("za") - F.col("pa"), F.col("zb") - F.col("pb"))
-    cands = (
-        pa.repartition(n_parts, "sid_a")
-        .join(pb, "key")
-        .filter(
-            (F.col("sid_a") < F.col("sid_b"))
-            & ((1.0 + min_jaccard) * overlap_ub
-               >= min_jaccard * (F.col("za") + F.col("zb")) - 1e-9)
-        )
-        .select("sid_a", "sid_b", "key")
-    )
-    va = vec.select(F.col("sid").alias("sid_a"), F.col("surface").alias("surf_a"),
-                    F.col("v").alias("va"))
-    vb = vec.select(F.col("sid").alias("sid_b"), F.col("surface").alias("surf_b"),
-                    F.col("v").alias("vb"))
-    inter = F.size("c")
-    return (
-        cands.join(va, "sid_a")
-        .join(vb, "sid_b")
-        # one-row explode: a Generate is a pushdown barrier, so the
-        # filters below read c instead of re-running array_intersect
-        .select("key", "surf_a", "surf_b", "va", "vb",
-                F.explode(F.array(F.array_intersect("va", "vb"))).alias("c"))
-        .filter(F.get("c", 0) == F.col("key"))
-        .withColumn("jaccard", inter / (F.size("va") + F.size("vb") - inter))
-        .filter(F.col("jaccard") >= min_jaccard)
-        .withColumn("cosine", sq_norm("c") / F.sqrt(sq_norm("va") * sq_norm("vb")))
-        .filter(F.col("cosine") >= min_cosine)
-        .select(
-            F.least("surf_a", "surf_b").alias("surface_a"),
-            F.greatest("surf_a", "surf_b").alias("surface_b"),
-            "jaccard", "cosine",
-        )
+    strings re-attach to the linked pairs only."""
+    pairs = prefix_join(_surface_sets(surfaces), min_jaccard, n_docs)
+    return _surface_pairs(
+        pairs.filter(F.col("cosine") >= min_cosine), surfaces, "jaccard", "cosine"
     )
 
 
 def tfidf_cosine(pairs: DataFrame, surfaces: DataFrame, n_docs: int | None = None) -> DataFrame:
     """Exact TF-IDF cosine over candidate pairs via explode-join.
 
-    terms(sid, gram, w): w = idf(gram) = ln((N+1)/(df+1)) + 1;
+    functions.simjoin.gram_weights gives (sid, gram, w, nrm);
     cosine(a,b) = Σ wa·wb / (‖a‖·‖b‖). Pure SQL — scales as a hash
     join on gram, with AQE skew splitting for stop-grams.
 
@@ -321,98 +195,49 @@ def tfidf_cosine(pairs: DataFrame, surfaces: DataFrame, n_docs: int | None = Non
     dup-scale output via the vocab-sized surface map."""
     if n_docs is None:
         n_docs = surfaces.count()
-    sid = F.xxhash64("surface").alias("sid")
-    terms = surfaces.select(sid, F.explode("grams").alias("gram"))
-    df_ = terms.groupBy("gram").agg(F.countDistinct("sid").alias("df"))
-    weighted = (
-        terms.join(F.broadcast(df_), "gram")
-        .withColumn("w", F.log((F.lit(float(n_docs + 1))) / (F.col("df") + 1.0)) + 1.0)
-    )
-    norms = weighted.groupBy("sid").agg(
-        F.sqrt(F.sum(F.col("w") * F.col("w"))).alias("nrm")
-    )
+    weighted = gram_weights(_surface_sets(surfaces), n_docs)
     ids = pairs.select(
         F.xxhash64("surface_a").alias("id_a"),
         F.xxhash64("surface_b").alias("id_b"),
         "jaccard",
     )
-    wa = weighted.select(F.col("sid").alias("id_a"), "gram", F.col("w").alias("wa"))
-    wb = weighted.select(F.col("sid").alias("id_b"), "gram", F.col("w").alias("wb"))
-    dots = (
+    wa = weighted.select(F.col("id").alias("id_a"), "gram",
+                         F.col("w").alias("wa"), F.col("nrm").alias("na"))
+    wb = weighted.select(F.col("id").alias("id_b"), "gram",
+                         F.col("w").alias("wb"), F.col("nrm").alias("nb"))
+    cosine = (
         ids.join(wa, "id_a")
         .join(wb, ["id_b", "gram"])
-        .groupBy("id_a", "id_b", "jaccard")
-        .agg(F.sum(F.col("wa") * F.col("wb")).alias("dot"))
+        .groupBy("id_a", "id_b", "jaccard", "na", "nb")
+        .agg((F.sum(F.col("wa") * F.col("wb")) / (F.col("na") * F.col("nb"))).alias("cosine"))
     )
-    na = norms.select(F.col("sid").alias("id_a"), F.col("nrm").alias("na"))
-    nb = norms.select(F.col("sid").alias("id_b"), F.col("nrm").alias("nb"))
-    smap_a = surfaces.select(F.xxhash64("surface").alias("id_a"),
-                             F.col("surface").alias("surface_a"))
-    smap_b = surfaces.select(F.xxhash64("surface").alias("id_b"),
-                             F.col("surface").alias("surface_b"))
-    return (
-        dots.join(na, "id_a")
-        .join(nb, "id_b")
-        .join(smap_a, "id_a")
-        .join(smap_b, "id_b")
-        .select(
-            "surface_a", "surface_b", "jaccard",
-            (F.col("dot") / (F.col("na") * F.col("nb"))).alias("cosine"),
-        )
+    return _surface_pairs(cosine, surfaces, "jaccard", "cosine")
+
+
+def _search_index(triples: DataFrame) -> DataFrame:
+    """(gram, surface, w, nrm): gram_weights over the distinct mention
+    surfaces — the corpus side of every search path."""
+    surfaces = mention_surfaces(triples).localCheckpoint(eager=True)
+    index = gram_weights(
+        surfaces.select(F.col("surface").alias("id"), "grams"), surfaces.count()
     )
+    return index.select("gram", F.col("id").alias("surface"), "w", "nrm")
 
 
 def search_surfaces(triples: DataFrame, query: str, k: int = 10) -> DataFrame:
     """Query-side search (reference §3.2: embed query → ANN → top-k):
     TF-IDF cosine of the query string against the distinct mention
-    corpus, exact, JVM-side only.
+    corpus, exact, JVM-side only — the query is normalized and gram-ed
+    in Spark, and the corpus side is rebuilt per call.
 
     The corpus side is distinct surfaces (small even at 10^12 turns);
-    at larger mention-vocabulary scale the LSH bucketing of
-    candidate_pairs_lsh becomes the blocking stage — this exact path is
-    both the baseline and the rescorer."""
+    build_search_index + search_index_topk serve the same scores from
+    a corpus side built once."""
     spark = triples.sparkSession
-    surfaces = mention_surfaces(triples).localCheckpoint(eager=True)
-    n_docs = surfaces.count()
-    terms = surfaces.select("surface", F.explode("grams").alias("gram"))
-    df_ = terms.groupBy("gram").agg(F.countDistinct("surface").alias("df"))
-    weighted = terms.join(F.broadcast(df_), "gram").withColumn(
-        "w", F.log(F.lit(float(n_docs + 1)) / (F.col("df") + 1.0)) + 1.0
+    qgrams = spark.createDataFrame([(query,)], "q string").select(
+        F.explode(char_ngrams(normalize_surface(F.col("q")))).alias("gram")
     )
-    norms = weighted.groupBy("surface").agg(
-        F.sqrt(F.sum(F.col("w") * F.col("w"))).alias("nrm")
-    )
-    qdf = (
-        spark.createDataFrame([(query,)], "q string")
-        .withColumn("norm", normalize_surface(F.col("q")))
-        .withColumn("gram", F.explode(char_ngrams(F.col("norm"))))
-        .select("gram")
-    )
-    # query weights: idf from the corpus; query norm computed over the
-    # query grams that exist in the corpus vocabulary (OOV grams can't
-    # contribute to any dot product)
-    qw = qdf.join(F.broadcast(df_), "gram").withColumn(
-        "qw", F.log(F.lit(float(n_docs + 1)) / (F.col("df") + 1.0)) + 1.0
-    )
-    qnorm = float(
-        qw.agg(F.sqrt(F.sum(F.col("qw") * F.col("qw")))).first()[0] or 0.0
-    )
-    if qnorm == 0.0:
-        return spark.createDataFrame([], "surface string, score double")
-    dots = (
-        weighted.join(F.broadcast(qw.select("gram", "qw")), "gram")
-        .groupBy("surface")
-        .agg(F.sum(F.col("w") * F.col("qw")).alias("dot"))
-    )
-    return (
-        dots.join(norms, "surface")
-        .select(
-            "surface",
-            F.round(F.col("dot") / (F.col("nrm") * F.lit(qnorm)), 4).alias("score"),
-        )
-        .orderBy(F.desc("score"), F.asc("surface"))
-        .limit(k)
-    )
+    return _topk(_search_index(triples).join(F.broadcast(qgrams), "gram"), k)
 
 
 def build_search_index(
@@ -436,17 +261,7 @@ def build_search_index(
     row-group stats. Reference bar: the persistent Qdrant index that
     makes reference queries cost 55.68 ms while indexing is the batch
     job (vector_store.py:386-477)."""
-    surfaces = mention_surfaces(triples).localCheckpoint(eager=True)
-    n_docs = surfaces.count()
-    terms = surfaces.select("surface", F.explode("grams").alias("gram"))
-    df_ = terms.groupBy("gram").agg(F.countDistinct("surface").alias("df"))
-    weighted = terms.join(F.broadcast(df_), "gram").withColumn(
-        "w", F.log(F.lit(float(n_docs + 1)) / (F.col("df") + 1.0)) + 1.0
-    )
-    norms = weighted.groupBy("surface").agg(
-        F.sqrt(F.sum(F.col("w") * F.col("w"))).alias("nrm")
-    )
-    index = weighted.join(norms, "surface").select("gram", "surface", "w", "nrm")
+    index = _search_index(triples)
     if path is not None:
         index.write.mode("overwrite").parquet(path)
         return triples.sparkSession.read.parquet(path)
@@ -483,7 +298,13 @@ def search_index_topk(index: DataFrame, query: str, k: int = 10) -> DataFrame:
     aggregation — the index is touched only at the query's grams, so
     request cost is independent of corpus size."""
     qgrams = _py_char_ngrams(_py_normalize(query))
-    hits = index.filter(F.col("gram").isin(qgrams))
+    return _topk(index.filter(F.col("gram").isin(qgrams)), k)
+
+
+def _topk(hits: DataFrame, k: int) -> DataFrame:
+    """Top-k (surface, score) from the index rows at the query's
+    distinct grams: dot = Σ w² over the shared grams, score =
+    dot / (nrm · ‖q‖), rounded to 4 places."""
     # ‖q‖ over the query grams that exist in the vocabulary (OOV grams
     # cannot contribute to any dot product) — distinct (gram, w) rows,
     # folded into the SAME plan as a broadcast one-row aggregate so a
@@ -513,7 +334,6 @@ def link_mentions(
     jaccard_max_dist: float = 0.6,
     min_cosine: float = 0.5,
     surfaces: DataFrame | None = None,
-    lsh_above_surfaces: int = 1_000_000,
 ) -> DataFrame:
     """triples → linked surface pairs (surface_a, surface_b, jaccard, cosine).
 
@@ -525,7 +345,7 @@ def link_mentions(
     surfaces — so this is cheap at any corpus size.
 
     Blocking strategy is size-adaptive and measured: up to
-    `lsh_above_surfaces` distinct surfaces the prefix-filtered exact
+    LSH_ABOVE_SURFACES distinct surfaces the prefix-filtered exact
     join (linked_pairs_exact) is both faster and recall-exact; beyond it
     recall-sized AND-OR minhash banding (candidate_pairs_lsh, measured
     recall in BENCH.md + pytest containment gate) bounds candidate
@@ -538,7 +358,7 @@ def link_mentions(
     # overhead (same lever as connected_components)
     spark = triples.sparkSession
     n_surf = surfaces.count()
-    if n_surf <= lsh_above_surfaces:
+    if n_surf <= LSH_ABOVE_SURFACES:
         # the exact join sizes its own candidate stage (prefix postings
         # spread over 2× the cores); its volume is prefix-collision-
         # driven, not all-gram-collision-driven

@@ -104,3 +104,41 @@ def test_extraction_parity_on_random_text(spark, corpus):
     ).fetchall()
     want = Counter(rows)
     assert got == want
+
+
+def test_ngram_jaccard_parity_with_nulls_and_planted_dups(spark, corpus):
+    """ngram_jaccard_pairs against the registry's DuckDB oracle on the
+    random corpus plus NULL, empty and whitespace-only texts, exact
+    duplicates and planted near-duplicates. A NULL text has no
+    shingles, so it pairs with nothing; '' and '   ' share the ''
+    shingle and pair at 1.0."""
+    import __spark_entry__ as entry
+    from pyspark.sql import functions as F
+
+    from code_index_spark.operators.dedupe import ngram_jaccard_pairs
+
+    rnd = random.Random(99)
+    words = [f"{rnd.choice(_WORDS)}{i}" for i in range(30)]
+    long_doc = " ".join(words)
+    short_doc = next(t for t in corpus.text if len(t.split()) >= 5)
+    extra = [
+        (100, "user", None), (101, "user", ""), (102, "tool", "   "),
+        (103, "user", None), (104, "user", "a b c d"),
+        (105, "user", long_doc), (106, "user", long_doc),
+        (107, "user", long_doc + " tail"),
+        (108, "user", " ".join(words[:15] + ["swapped"] + words[16:])),
+        (109, "user", short_doc),
+    ]
+    docs = pd.concat([corpus, pd.DataFrame(extra, columns=corpus.columns)],
+                     ignore_index=True)
+    sdf = spark.createDataFrame(docs[["doc_id", "text"]], "doc_id long, text string")
+    got = sorted(
+        tuple(r) for r in ngram_jaccard_pairs(sdf, "doc_id", "text", 3, 0.8)
+        .select("id_a", "id_b", F.round("jaccard", 4)).collect()
+    )
+    want = sorted(map(tuple, _duck(docs).execute(
+        entry.oracle_sql()["dedup_ngram_jaccard"]).fetchall()))
+    assert got == want
+    assert not [p for p in got if {100, 103} & set(p[:2])]
+    assert {(101, 102, 1.0), (105, 106, 1.0)} <= set(got)
+    assert {(105, 107), (105, 108)} <= {p[:2] for p in got}

@@ -10,7 +10,9 @@ correct (SURVEY.md §4):
 """
 
 import re
+from fractions import Fraction
 
+import pytest
 from pyspark.sql import functions as F
 
 from code_index_spark.operators.extract import extract_triples
@@ -208,16 +210,9 @@ def _metric(node, name: str):
     return m.get().value() if m.isDefined() else None
 
 
-def test_exact_join_reads_only_prefix_postings(spark):
-    """linked_pairs_exact's candidate self-join reads only the prefix
-    postings, Σ (sz − ceil(t·sz) + 1) rows per side (< Σ sz), and no
-    exchange sits above it: the candidate stream, larger here than
-    every gram row of the input, is never shuffled or broadcast.
-    Fixture: a stop-gram vocabulary, every surface sharing the grams of
-    one long common prefix."""
-    import math
-    from fractions import Fraction
-
+def _surface_join(spark):
+    """linked_pairs_exact over a stop-gram vocabulary: every surface
+    shares the char-3-grams of one long common prefix."""
     from code_index_spark.operators.link import (
         char_ngrams,
         linked_pairs_exact,
@@ -232,11 +227,39 @@ def test_exact_join_reads_only_prefix_postings(spark):
         .localCheckpoint(eager=True)
     )
     sizes = [len(r["grams"]) for r in surfaces.select("grams").collect()]
-    t = Fraction(2, 5)
+    return linked_pairs_exact(surfaces, len(names), min_jaccard=0.4), sizes, Fraction(2, 5)
+
+
+def _shingle_join(spark):
+    """ngram_jaccard_pairs over boilerplate documents: every doc shares
+    the word-3-gram shingles of one twelve-word phrase and adds one
+    word of its own."""
+    from code_index_spark.operators.dedupe import ngram_jaccard_pairs, word_ngrams
+
+    phrase = "the quick brown fox jumps over the lazy dog by the river"
+    docs = spark.createDataFrame(
+        [(i, f"{phrase} tok{i}") for i in range(100)], "doc_id long, text string"
+    )
+    sizes = [len(r["g"]) for r in docs.select(word_ngrams(F.col("text"), 3).alias("g")).collect()]
+    return ngram_jaccard_pairs(docs, "doc_id", "text", 3, 0.8), sizes, Fraction(4, 5)
+
+
+@pytest.mark.parametrize(
+    "exact_join", [_surface_join, _shingle_join],
+    ids=["linked_pairs_exact", "ngram_jaccard_pairs"],
+)
+def test_exact_join_reads_only_prefix_postings(spark, exact_join):
+    """The prefix join's candidate self-join (functions.simjoin, under
+    both exact-join callers) reads only the prefix postings, Σ (sz −
+    ceil(t·sz) + 1) rows per side (< Σ sz), and no exchange sits above
+    it: the candidate stream, larger here than every gram row of the
+    input, is never shuffled or broadcast."""
+    import math
+
+    out, sizes, t = exact_join(spark)
     prefix_rows = sum(sz - math.ceil(t * sz) + 1 for sz in sizes)
     assert prefix_rows < sum(sizes)
 
-    out = linked_pairs_exact(surfaces, len(names), min_jaccard=0.4)
     assert out.collect()  # runs THIS plan, so its final AQE plan has metrics
     found = []
 
