@@ -1694,18 +1694,12 @@ def _q_graph_entities_named(spark, sf_dir):
     (canonical_name, n_surfaces, mention_count) per connected
     component — fully oracle-checked (linking + CC + canonicalization
     all reproduced in DuckDB, CC via a recursive-closure CTE)."""
-    from code_index_spark.operators.canon import connected_components
-    from code_index_spark.operators.link import link_mentions, mention_surfaces
-    from code_index_spark.operators.materialize import assign_entities, build_vertices
+    from code_index_spark.operators.materialize import build_vertices
+    from code_index_spark.plans.pipeline import build_graph
 
-    t = derived_transcripts(spark, sf_dir)
-    triples = extract_triples_sql(t)
-    surfaces = mention_surfaces(triples).localCheckpoint(eager=True)
-    pairs = link_mentions(triples, surfaces=surfaces)
-    comps = connected_components(pairs)
-    em = assign_entities(triples, comps, surfaces=surfaces)
+    g = build_graph(derived_transcripts(spark, sf_dir))
     return (
-        build_vertices(em)
+        build_vertices(g["entity_map"])
         .select(
             "canonical_name",
             F.size("surface_forms").cast("int").alias("n_surfaces"),
@@ -1730,23 +1724,11 @@ def _q_graph_vertices_named(spark, sf_dir):
     lacks; this named twin makes the complete vertex construction —
     linking, CC, canonicalization AND the object-vertex aggregation —
     value-hash checkable."""
-    from code_index_spark.operators.canon import connected_components
-    from code_index_spark.operators.link import link_mentions, mention_surfaces
-    from code_index_spark.operators.materialize import (
-        assign_entities,
-        build_vertices,
-        object_vertices,
-    )
+    from code_index_spark.plans.pipeline import build_graph
 
-    t = derived_transcripts(spark, sf_dir)
-    triples = extract_triples_sql(t)
-    surfaces = mention_surfaces(triples).localCheckpoint(eager=True)
-    pairs = link_mentions(triples, surfaces=surfaces)
-    comps = connected_components(pairs)
-    em = assign_entities(triples, comps, surfaces=surfaces)
-    allv = build_vertices(em).unionByName(object_vertices(triples))
+    g = build_graph(derived_transcripts(spark, sf_dir))
     return (
-        allv.select(
+        g["vertices"].select(
             "canonical_name",
             F.size("surface_forms").cast("int").alias("n_surfaces"),
             "mention_count",
@@ -1768,20 +1750,11 @@ def _q_edge_rollup_named(spark, sf_dir):
     ENTIRE edge path — linking, CC, per-turn endpoint dedup at max
     confidence, pair emission, map-side-combined rollup — against a
     DuckDB re-derivation."""
-    from code_index_spark.operators.canon import connected_components
-    from code_index_spark.operators.link import link_mentions, mention_surfaces
-    from code_index_spark.operators.materialize import (
-        assign_entities,
-        build_edges_agg,
-        build_vertices,
-    )
+    from code_index_spark.operators.materialize import build_edges_agg, build_vertices
+    from code_index_spark.plans.pipeline import build_graph
 
-    t = derived_transcripts(spark, sf_dir)
-    triples = extract_triples_sql(t)
-    surfaces = mention_surfaces(triples).localCheckpoint(eager=True)
-    pairs = link_mentions(triples, surfaces=surfaces)
-    comps = connected_components(pairs)
-    em = assign_entities(triples, comps, surfaces=surfaces)
+    g = build_graph(derived_transcripts(spark, sf_dir))
+    triples, em = g["triples"], g["entity_map"]
     rolled = build_edges_agg(triples, em)
     ent_names = build_vertices(em).select("entity_id", "canonical_name")
     lit_names = (

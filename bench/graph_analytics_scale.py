@@ -174,19 +174,14 @@ def main() -> None:
 
     from pyspark.sql import functions as F
 
-    from code_index_spark.operators.canon import connected_components
-    from code_index_spark.operators.extract import extract_triples_sql
     from code_index_spark.operators.graphalgo import (
         khop_neighbors,
         neighbor_jaccard_pairs,
         pmi_edges,
         triangle_counts,
     )
-    from code_index_spark.operators.link import link_mentions, mention_surfaces
-    from code_index_spark.operators.materialize import (
-        assign_entities,
-        build_edges_agg,
-    )
+    from code_index_spark.operators.materialize import build_edges_agg
+    from code_index_spark.plans.pipeline import build_graph
     from code_index_spark.session import get_spark
     from code_index_spark.sources.tpch import derived_transcripts
 
@@ -204,15 +199,9 @@ def main() -> None:
         )
     t = t.repartition(width, "conv_id").persist()
     t.count()
-    triples = extract_triples_sql(t).persist()
+    g = build_graph(t)
+    triples, em = g["triples"], g["entity_map"]
     n_triples = triples.count()
-
-    surfaces = mention_surfaces(triples).localCheckpoint(eager=True)
-    pairs = link_mentions(triples, surfaces=surfaces)
-    comps = connected_components(pairs).localCheckpoint(eager=True)
-    em = assign_entities(triples, comps, surfaces=surfaces).localCheckpoint(
-        eager=True
-    )
     edges = build_edges_agg(triples, em).localCheckpoint(eager=True)
     n_edges = edges.count()
     # per-turn ENTITY mention stream (pmi_edges' contract unit)

@@ -1,9 +1,11 @@
 """Capture .explain("formatted") for every bench.py stage into
 plans/r06/<stage>_<tag>.txt (tag = before/after, argv[1]).
 
-Read-only with respect to the bench contract: builds the same
-DataFrames bench.py times and dumps their physical plans. Run solo
-(one Spark session), e.g.:
+Read-only with respect to the bench contract: walks the same stage
+definitions bench.py times — plans.pipeline.STAGES for the graph
+build (each stage's plan is dumped before it is materialized) and
+bench.py's headline_queries for the rest — and dumps their physical
+plans. Run solo (one Spark session), e.g.:
 
     python bench/plan_capture.py before
 """
@@ -11,36 +13,28 @@ DataFrames bench.py times and dumps their physical plans. Run solo
 from __future__ import annotations
 
 import os
+import runpy
 import sys
 
-sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
+ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, ROOT)
 
 
 def main() -> None:
     tag = sys.argv[1] if len(sys.argv) > 1 else "before"
-    out_dir = os.path.join(os.path.dirname(os.path.dirname(os.path.abspath(__file__))),
-                           "plans", "r06")
+    out_dir = os.path.join(ROOT, "plans", "r06")
     os.makedirs(out_dir, exist_ok=True)
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     cores = int(os.environ.get("SPARK_GRAFT_CPUS", os.cpu_count() or 8))
 
-    from pyspark.sql import functions as F
-
-    from code_index_spark.operators.canon import connected_components
-    from code_index_spark.operators.dedupe import (
-        minhash_lsh_pairs, simhash, simhash_near_pairs,
-    )
-    from code_index_spark.operators.extract import extract_triples, extract_triples_sql
-    from code_index_spark.operators.link import link_mentions, mention_surfaces
-    from code_index_spark.operators.materialize import (
-        assign_entities, build_edges, build_edges_agg, build_vertices,
-        object_vertices,
-    )
+    from code_index_spark.operators.extract import extract_triples
+    from code_index_spark.operators.materialize import build_edges_agg
     from code_index_spark.operators.segment import segment
-    from code_index_spark.operators.simsearch import brute_force_topk
+    from code_index_spark.plans.pipeline import STAGES, keep
     from code_index_spark.session import get_spark
     from code_index_spark.sources.tpch import derived_transcripts, load_tables
 
+    headline_queries = runpy.run_path(os.path.join(ROOT, "bench.py"))["headline_queries"]
     spark = get_spark("plan-capture", cores=cores, shuffle_partitions=max(cores, 32))
 
     def dump(name: str, df) -> None:
@@ -50,51 +44,22 @@ def main() -> None:
                 spark._jvm.org.apache.spark.sql.execution.ExplainMode.fromString("formatted")))
         print(f"wrote {path}")
 
-    tbl = load_tables(spark, sf_dir)
     transcripts = derived_transcripts(spark, sf_dir)
     dump("load_transcripts", transcripts)
     transcripts = transcripts.persist()
     transcripts.count()
-
-    dump("extract_triples", extract_triples_sql(transcripts))
     dump("extract_triples_python_info", extract_triples(transcripts))
-    triples = extract_triples_sql(transcripts).persist()
-    triples.count()
     dump("segment", segment(transcripts))
 
-    dump("graph_surfaces", mention_surfaces(triples))
-    surfaces = mention_surfaces(triples).localCheckpoint(eager=True)
-    # link_mentions executes eagerly (checkpointed output) — capture the
-    # inner pair-join plan instead
-    from code_index_spark.operators.link import linked_pairs_exact
-    n_surf = surfaces.count()
-    dump("graph_link", linked_pairs_exact(surfaces, n_surf, min_jaccard=0.4,
-                                          min_cosine=0.5))
-    pairs = link_mentions(triples, surfaces=surfaces)
-    comps = connected_components(pairs).localCheckpoint(eager=True)
-    em = assign_entities(triples, comps, surfaces=surfaces)
-    dump("graph_entities", em)
-    em = em.localCheckpoint(eager=True)
-    dump("graph_vertices", build_vertices(em).unionByName(object_vertices(triples)))
-    dump("graph_edges", build_edges(triples, em))
-    dump("graph_edges_agg", build_edges_agg(triples, em))
+    g = {"transcripts": transcripts}
+    for stage in STAGES:
+        df = stage.build(g, 0.5)
+        dump(stage.name, df)
+        g[stage.table] = keep(df, stage.keep)
+    dump("graph_edges_agg", build_edges_agg(g["triples"], g["entity_map"]))
 
-    dump("q1_pricing", tbl["lineitem"]
-         .filter(F.col("l_shipdate") <= F.lit("1998-09-02").cast("timestamp"))
-         .groupBy("l_returnflag", "l_linestatus")
-         .agg(F.sum("l_quantity"), F.avg("l_discount"), F.count("*")))
-    dump("q3_top_revenue", tbl["customer"]
-         .filter(F.col("c_mktsegment") == "BUILDING")
-         .join(tbl["orders"], F.col("c_custkey") == F.col("o_custkey"))
-         .join(tbl["lineitem"], F.col("o_orderkey") == F.col("l_orderkey"))
-         .groupBy("o_orderkey")
-         .agg(F.sum(F.col("l_extendedprice") * (1 - F.col("l_discount"))).alias("rev"))
-         .orderBy(F.desc("rev")).limit(10))
-    emb = tbl["embeddings"].withColumn("v", F.col("embedding").cast("array<double>"))
-    qvec = [float(x) for x in emb.filter(F.col("vec_id") == 0).first()["v"]]
-    dump("ann_topk", brute_force_topk(emb, "vec_id", "v", qvec, 10))
-    dump("minhash_dedup", minhash_lsh_pairs(tbl["documents"], "doc_id", "text"))
-    dump("simhash_dedup", simhash_near_pairs(simhash(tbl["documents"], "doc_id", "text")))
+    for name, (build, _) in headline_queries(load_tables(spark, sf_dir)).items():
+        dump(name, build())
     spark.stop()
 
 

@@ -1,7 +1,7 @@
-"""Round-6 stage decomposition probes (guide §1.4 noop-sink isolation).
+"""Round-6 stage decomposition probes.
 
 Reproduces the measurements OPTIMIZATION_r06.md cites, each as a
-noop-sink (or count) timing of one sub-plan so the computation is
+checkpoint or count timing of one sub-plan so the computation is
 timed without the real sink:
 
   shingle   — dedupe._shingled materialization (the duplicated-filter
@@ -10,7 +10,9 @@ timed without the real sink:
   extract   — full Catalyst extraction vs a regex-only probe (the
               floor argument: sizes of regexp_extract_all per rule,
               no structs/flatten/explode)
-  edges     — keyed scan / per-turn collect / full expansion walls
+  edges     — full edge build over plans.pipeline.build_graph's
+              materialized stages (the keyed-scan and per-turn-collect
+              sub-probes' r06 readings are in OPTIMIZATION_r06.md)
 
 Usage: python bench/profile_stages.py [sf_dir] [probe ...]
        (default sf0.1 and all probes; run solo, numbers are walls)
@@ -24,12 +26,6 @@ import time
 
 ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 sys.path.insert(0, ROOT)
-
-
-def _noop(df) -> float:
-    t0 = time.perf_counter()
-    df.write.format("noop").mode("overwrite").save()
-    return time.perf_counter() - t0
 
 
 def main() -> None:
@@ -120,47 +116,13 @@ def main() -> None:
                       f"regex-only {floor:.2f}s ({s}) — "
                       f"floor share {floor/full:.0%}", flush=True)
         if "edges" in probes:
-            from code_index_spark.operators.canon import connected_components
-            from code_index_spark.operators.link import (
-                link_mentions, mention_surfaces,
-            )
-            from code_index_spark.operators.materialize import (
-                assign_entities, build_edges,
-            )
+            from code_index_spark.plans.pipeline import build_graph
 
-            triples = extract_triples_sql(transcripts).persist()
-            triples.count()
-            surfaces = mention_surfaces(triples).localCheckpoint(eager=True)
-            pairs = link_mentions(triples, surfaces=surfaces)
-            comps = connected_components(pairs).localCheckpoint(eager=True)
-            em = assign_entities(triples, comps, surfaces=surfaces) \
-                .localCheckpoint(eager=True)
-            keyed = (
-                triples.join(
-                    F.broadcast(em.select(F.col("surface").alias("obj"),
-                                          "entity_id")), "obj", "left")
-                .select(
-                    "conv_id", "turn_idx", "pred",
-                    F.when(F.col("pred") == "class", F.col("entity_id"))
-                    .otherwise(F.xxhash64(F.concat_ws(":", "pred", "obj")))
-                    .alias("node_id"),
-                    "confidence")
-                .filter(F.col("node_id").isNotNull())
-            )
-            per_turn = keyed.groupBy("conv_id", "turn_idx").agg(
-                F.sort_array(F.collect_list(
-                    F.struct("pred", "node_id",
-                             F.col("confidence").alias("conf")))).alias("srt"))
+            edges = build_graph(transcripts)["edges"]
             for trial in range(2):
-                sc.setJobDescription("probe: edges keyed scan")
-                print(f"edges keyed trial{trial}: {_noop(keyed):.2f}s",
-                      flush=True)
-                sc.setJobDescription("probe: edges per-turn collect")
-                print(f"edges collect trial{trial}: {_noop(per_turn):.2f}s",
-                      flush=True)
                 sc.setJobDescription("probe: edges full")
                 t0 = time.perf_counter()
-                n = build_edges(triples, em).count()
+                n = edges.count()
                 print(f"edges full trial{trial}: "
                       f"{time.perf_counter()-t0:.2f}s ({n} edges)", flush=True)
     spark.stop()

@@ -335,7 +335,9 @@ def link_mentions(
     min_cosine: float = 0.5,
     surfaces: DataFrame | None = None,
 ) -> DataFrame:
-    """triples → linked surface pairs (surface_a, surface_b, jaccard, cosine).
+    """triples → linked surface pairs (surface_a, surface_b, jaccard, cosine),
+    as a LAZY DataFrame: callers materialize it (plans.pipeline.STAGES
+    checkpoints it in the KG build).
 
     surfaces are localCheckpoint-ed, not just persisted: the pair joins
     copy the input logical plan several times, and without truncation
@@ -365,7 +367,7 @@ def link_mentions(
         return linked_pairs_exact(
             surfaces, n_surf,
             min_jaccard=1.0 - jaccard_max_dist, min_cosine=min_cosine,
-        ).localCheckpoint(eager=True)
+        )
     # LSH path: candidate volume is bounded by banding, so downsize the
     # blocking join to the surface count (scheduling overhead
     # otherwise) — PLAN-LOCALLY via an explicit repartition on the
@@ -379,4 +381,4 @@ def link_mentions(
         surfaces, jaccard_max_dist, num_partitions=loop_parts
     )
     scored = tfidf_cosine(pairs, surfaces, n_docs=n_surf)
-    return scored.filter(F.col("cosine") >= min_cosine).localCheckpoint(eager=True)
+    return scored.filter(F.col("cosine") >= min_cosine)

@@ -24,6 +24,8 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, Window, functions as F
 
+from .link import mention_surfaces
+
 
 def assign_entities(
     triples: DataFrame, components: DataFrame, surfaces: DataFrame | None = None
@@ -33,11 +35,7 @@ def assign_entities(
     surfaces table from the linking stage to avoid re-aggregating the
     full triple set."""
     if surfaces is None:
-        surfaces = (
-            triples.filter(F.col("pred") == "class")
-            .groupBy(F.col("obj").alias("surface"))
-            .agg(F.count("*").alias("mention_count"))
-        )
+        surfaces = mention_surfaces(triples)
     surfaces = surfaces.select("surface", "mention_count")
     return surfaces.join(components, "surface", "left").select(
         "surface",

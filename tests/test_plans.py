@@ -23,6 +23,13 @@ def _plan(df) -> str:
     return df._jdf.queryExecution().executedPlan().toString()
 
 
+# the edge build's exchanges: a plan string also embeds a cached input's
+# own (upstream) exchanges inside its InMemoryRelation, so the edge
+# tests assert on the exchange KEYS that stage could add, not on a count
+_TURN_EXCHANGE = re.compile(r"Exchange hashpartitioning\(conv_id#\d+, turn_idx")
+_ROLLUP_EXCHANGE = re.compile(r"Exchange hashpartitioning\(src_entity#\d+")
+
+
 def test_filter_and_column_pushdown(spark):
     tbl = load_tables(spark, "/root/testdata/sf0.001")
     q = (
@@ -100,7 +107,7 @@ def test_edge_build_reuses_turn_partitioning(spark):
     # cached plan's hash partitioning to downstream requirements, while
     # a checkpoint's LogicalRDD drops it (measured: the same groupBy
     # re-exchanges on (conv_id, turn_idx) over checkpointed input) —
-    # this mirrors bench.py / bench/scaling.py, which persist
+    # this is plans.pipeline.STAGES' policy for triples
     t = (
         derived_transcripts(spark, "/root/testdata/sf0.001")
         .repartition(4, "conv_id")
@@ -115,21 +122,42 @@ def test_edge_build_reuses_turn_partitioning(spark):
             "surface string, mention_count long, entity_id long",
         )
 
-        # the plan string embeds the cached input's own (upstream)
-        # exchanges inside InMemoryRelation — assert on the exchange
-        # KEYS this stage could add, not on a bare count
-        turn_exchange = re.compile(r"Exchange hashpartitioning\(conv_id#\d+, turn_idx")
-        rollup_exchange = re.compile(r"Exchange hashpartitioning\(src_entity#\d+")
-
         edges_plan = _plan(build_edges(triples, emap))
-        assert not turn_exchange.search(edges_plan)
-        assert not rollup_exchange.search(edges_plan)
+        assert not _TURN_EXCHANGE.search(edges_plan)
+        assert not _ROLLUP_EXCHANGE.search(edges_plan)
         agg_plan = _plan(build_edges_agg(triples, emap))
-        assert not turn_exchange.search(agg_plan)
-        assert len(rollup_exchange.findall(agg_plan)) >= 1
+        assert not _TURN_EXCHANGE.search(agg_plan)
+        assert len(_ROLLUP_EXCHANGE.findall(agg_plan)) >= 1
         assert "partial_sum" in agg_plan
     finally:
         triples.unpersist()
+
+
+def test_build_graph_materialization_policy(spark):
+    """plans.pipeline.STAGES' policy as build_graph applies it: triples
+    are cached (InMemoryRelation), the vocab-scale tables are eager
+    checkpoints (LogicalRDD), and over the cached triples the production
+    edge build adds no per-turn exchange (the entity map broadcasts)
+    while the rollup adds exactly one, on src_entity."""
+    from code_index_spark.operators.materialize import build_edges_agg
+    from code_index_spark.plans.pipeline import build_graph
+
+    g = build_graph(derived_transcripts(spark, "/root/testdata/sf0.001"))
+    try:
+        def root(df) -> str:
+            return df._jdf.queryExecution().optimizedPlan().getClass().getSimpleName()
+
+        assert root(g["triples"]) == "InMemoryRelation"
+        for name in ("surfaces", "pairs", "components", "entity_map"):
+            assert root(g[name]) == "LogicalRDD", name
+
+        edges_plan = _plan(g["edges"])
+        assert not _TURN_EXCHANGE.search(edges_plan)
+        assert "BroadcastHashJoin" in edges_plan
+        agg_plan = _plan(build_edges_agg(g["triples"], g["entity_map"]))
+        assert len(_ROLLUP_EXCHANGE.findall(agg_plan)) == 1
+    finally:
+        g["triples"].unpersist()
 
 
 def test_q17_correlated_subquery_decorrelates(spark):
