@@ -20,11 +20,10 @@ from __future__ import annotations
 
 import json
 import os
-import statistics
 import sys
-import time
 
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
+from bench import harness  # noqa: E402
 
 
 def headline_queries(tbl) -> dict:
@@ -79,13 +78,9 @@ def main() -> None:
     def timed(name: str, fn, n: int = trials):
         """Median-of-n stage timing; returns the LAST run's output so
         downstream stages consume a live result."""
-        secs, out = [], None
-        for _ in range(n):
-            t0 = time.perf_counter()
-            out = fn()
-            secs.append(time.perf_counter() - t0)
-        timings[name] = round(statistics.median(secs), 3)
-        return out
+        runs = harness.timed(fn, n, warm=False)
+        timings[name] = round(runs.median, 3)
+        return runs.out
 
     tbl = load_tables(spark, sf_dir)
     # The derived view's turn_idx row_number window already hash-

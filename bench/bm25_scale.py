@@ -34,16 +34,12 @@ BENCH.md and prints one JSON line.
 from __future__ import annotations
 
 import hashlib
-import json
 import os
-import statistics
 import sys
 import time
 
-ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
-sys.path.insert(0, ROOT)
-
-SECTION = "## BM25 index + serving at scale"
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
+from bench.harness import cores, report, timed  # noqa: E402
 
 
 def _tok(tag: str, i: int) -> str:
@@ -103,8 +99,7 @@ def main() -> None:
     from code_index_spark.operators.rank import bm25_topk
     from code_index_spark.sources.bucketed import read_bucketed, write_bucketed
 
-    cores = int(os.environ.get("SPARK_GRAFT_CPUS", 32))
-    spark = _build_session(cores)
+    spark = _build_session(cores())
     idx, n_postings, t_build = _build(spark, n_docs)
 
     path = "/tmp/bm25_scale_idx"
@@ -113,12 +108,10 @@ def main() -> None:
     t_write = round(time.perf_counter() - t0, 1)
 
     def serve_lat(index_df, queries) -> float:
-        lats = []
-        for q in queries:
-            t0 = time.perf_counter()
-            bm25_topk(index_df, q, k=10).collect()
-            lats.append(time.perf_counter() - t0)
-        return round(statistics.median(lats), 3)
+        """Median request latency over the queries, one request each."""
+        it = iter(queries)
+        return round(timed(lambda: bm25_topk(index_df, next(it), k=10).collect(),
+                           len(queries), warm=False).median, 3)
 
     serve_lat(idx, _rare_queries())  # warm code paths once, untimed
     bucketed = read_bucketed(spark, "bm25_scale_idx")
@@ -164,14 +157,12 @@ def main() -> None:
         "capped_build_sec": t_capped,
         "scaling_walls": walls,
         "scaling_eff": eff,
-        "cores": cores,
+        "cores": cores(),
     }
-    print(json.dumps(out))
-
     lines = [
-        SECTION,
+        "## BM25 index + serving at scale",
         "",
-        f"({n_docs} docs ≈ {n_postings} postings, local[{cores}], "
+        f"({n_docs} docs ≈ {n_postings} postings, local[{cores()}], "
         "bench/bm25_scale.py; rare = 2 planted df≈1 tokens, stopword+ "
         "= 1 planted + 'the' (df≈n_docs), median of 5)",
         "",
@@ -199,22 +190,7 @@ def main() -> None:
             f"{walls[scaling_n]}s → {walls[4 * scaling_n]}s, "
             f"efficiency {eff} |"
         )
-    lines.append("")
-    _patch_bench_md("\n".join(lines))
-
-
-def _patch_bench_md(block: str) -> None:
-    p = os.path.join(ROOT, "BENCH.md")
-    with open(p) as f:
-        txt = f.read()
-    if SECTION in txt:
-        start = txt.index(SECTION)
-        nxt = txt.find("\n## ", start + 1)
-        txt = txt[:start] + block + (txt[nxt + 1:] if nxt != -1 else "")
-    else:
-        txt = txt.rstrip() + "\n\n" + block
-    with open(p, "w") as f:
-        f.write(txt)
+    report(out, "\n".join(lines))
 
 
 if __name__ == "__main__":

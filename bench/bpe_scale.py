@@ -27,14 +27,12 @@ rule's two-parallelism evidence.
 
 from __future__ import annotations
 
-import json
 import os
-import subprocess
 import sys
 import time
 
-ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
-sys.path.insert(0, ROOT)
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
+from bench.harness import cores, n_vs_4n, report, scaling_table, timed  # noqa: E402
 
 VOCAB = 50_000
 WORDS_PER_DOC = 40
@@ -61,72 +59,25 @@ def make_zipf_corpus(spark, n_docs: int):
         )
     return (
         df.select("doc_id", F.concat_ws(" ", *cols).alias("text"))
-        .repartition(int(os.environ.get("SPARK_GRAFT_CPUS", 32)) * 2,
-                     "doc_id")
+        .repartition(cores() * 2, "doc_id")
         .localCheckpoint(eager=True)
     )
 
 
-_CHILD = r"""
-import json, sys, time
-sys.path.insert(0, sys.argv[4])
-from pyspark.sql import functions as F
-from code_index_spark.session import get_spark
-from code_index_spark.operators.bpe import encode_bpe, train_bpe
-from bench.bpe_scale import make_zipf_corpus
+def encode_level(cores: int, n_docs: int, trials: int) -> dict:
+    """One parallelism level (run in a fresh JVM): encode-pass rate,
+    merges retrained first (deterministic, untimed)."""
+    from pyspark.sql import functions as F
 
-cores = int(sys.argv[1]); n_docs = int(sys.argv[2]); trials = int(sys.argv[3])
-spark = get_spark(f"bpe{cores}", cores=cores, shuffle_partitions=32)
-docs = make_zipf_corpus(spark, n_docs)
-merges = train_bpe(docs, 128, "text", min_count=2)  # untimed, deterministic
-run = lambda: encode_bpe(docs, merges).agg(
-    F.count("*"), F.sum("learned_tokens")).collect()
-run()  # warm (Python workers + cache shape)
-rates = []
-for _ in range(trials):
-    t0 = time.perf_counter()
-    run()
-    rates.append(n_docs / (time.perf_counter() - t0))
-rates.sort()
-print(json.dumps({"cores": cores,
-                  "median_rate": round(rates[len(rates) // 2]),
-                  "rates": [round(r) for r in rates]}))
-"""
+    from code_index_spark.operators.bpe import encode_bpe, train_bpe
+    from code_index_spark.session import get_spark
 
-
-def _run_level(cores: int, n_docs: int, trials: int) -> dict:
-    out = subprocess.run(
-        [sys.executable, "-c", _CHILD, str(cores), str(n_docs), str(trials),
-         ROOT],
-        capture_output=True, text=True, cwd=ROOT, check=True,
-    )
-    return json.loads(out.stdout.strip().splitlines()[-1])
-
-
-def _scaling(n_docs: int, n_lo: int, trials: int = 3) -> None:
-    n_hi = n_lo * 4
-    lo = _run_level(n_lo, n_docs, trials)
-    hi = _run_level(n_hi, n_docs, trials)
-    eff = round(hi["median_rate"] / lo["median_rate"] / 4, 3)
-    out = {"metric": "bpe_encode_scaling", "n_docs": n_docs,
-           "lo": lo, "hi": hi, "efficiency": eff}
-    print(json.dumps(out), flush=True)
-    section = (
-        "## BPE encode scaling (N vs 4N)\n\n"
-        f"({n_docs} docs, bench/bpe_scale.py --scaling: fresh JVM per "
-        f"level, warmed, median of {trials}; merges retrained per child "
-        "— deterministic and untimed.) The encode pass is "
-        "embarrassingly parallel mapInPandas with a per-batch "
-        "distinct-word cache; no shuffle at all.\n\n"
-        "| parallelism | docs/sec (median) | all trials |\n|---|---|---|\n"
-        f"| local[{n_lo}] | {lo['median_rate']} | {lo['rates']} |\n"
-        f"| local[{n_hi}] | {hi['median_rate']} | {hi['rates']} |\n\n"
-        f"**Scaling efficiency {n_lo}→{n_hi}: {eff}** "
-        "(hypervisor-steal caveats as in the header section).\n"
-    )
-    from bench.scaling import _update_bench_md
-
-    _update_bench_md(ROOT, None, section)
+    spark = get_spark(f"bpe{cores}", cores=cores, shuffle_partitions=32)
+    docs = make_zipf_corpus(spark, n_docs)
+    merges = train_bpe(docs, 128, "text", min_count=2)
+    runs = timed(lambda: encode_bpe(docs, merges).agg(
+        F.count("*"), F.sum("learned_tokens")).collect(), trials)
+    return {"cores": cores, **runs.rates(n_docs)}
 
 
 def main() -> None:
@@ -135,7 +86,19 @@ def main() -> None:
     if "--scaling" in sys.argv:
         idx = sys.argv.index("--scaling")
         n_lo = int(sys.argv[idx + 1]) if len(sys.argv) > idx + 1 else 2
-        _scaling(n_docs, n_lo)
+        trials = 3
+        lo, hi, eff = n_vs_4n(encode_level, n_lo, "median_rate", n_docs, trials)
+        report(
+            {"metric": "bpe_encode_scaling", "n_docs": n_docs,
+             "lo": lo, "hi": hi, "efficiency": eff},
+            "## BPE encode scaling (N vs 4N)\n\n"
+            f"({n_docs} docs, bench/bpe_scale.py --scaling: fresh JVM per "
+            f"level, warmed, median of {trials}; merges retrained per child "
+            "— deterministic and untimed.) The encode pass is "
+            "embarrassingly parallel mapInPandas with a per-batch "
+            "distinct-word cache; no shuffle at all.\n\n"
+            + scaling_table(lo, hi, eff),
+        )
         return
 
     from pyspark.sql import functions as F
@@ -147,8 +110,7 @@ def main() -> None:
     )
     from code_index_spark.session import get_spark
 
-    cores = int(os.environ.get("SPARK_GRAFT_CPUS", 32))
-    spark = get_spark("bpe-scale", cores=cores)
+    spark = get_spark("bpe-scale", cores=cores())
     docs = make_zipf_corpus(spark, n_docs)
 
     t0 = time.perf_counter()
@@ -183,12 +145,10 @@ def main() -> None:
         "planted_ok": agg["bound_violations"] == 0
         and agg["toks"] < agg["chars"],
     }
-    print(json.dumps(out), flush=True)
-
-    section = (
+    report(out, (
         "## BPE tokenizer training at scale\n\n"
         f"({n_docs} docs × {WORDS_PER_DOC} words over a ~{VOCAB}-word "
-        f"Zipf vocabulary, local[{cores}], bench/bpe_scale.py.) The "
+        f"Zipf vocabulary, local[{cores()}], bench/bpe_scale.py.) The "
         "three stages scale differently by design: the word-freq "
         "aggregation and the encode pass are corpus-scale and "
         "core-parallel; merge learning runs on the driver over the "
@@ -206,10 +166,7 @@ def main() -> None:
         f"Compression {out['compression_chars_per_token']} chars/token; "
         "per-doc bounds n_pretokens ≤ learned_tokens ≤ base_chars hold "
         f"corpus-wide ({agg['bound_violations']} violations).\n"
-    )
-    from bench.scaling import _update_bench_md
-
-    _update_bench_md(ROOT, None, section)
+    ))
 
 
 if __name__ == "__main__":

@@ -25,19 +25,14 @@ BENCH.md and prints one JSON line.
 
 from __future__ import annotations
 
-import json
 import os
 import shutil
 import sys
 import tempfile
 import time
 
-ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
-sys.path.insert(0, ROOT)
-
-
-def _median(xs: list[float]) -> float:
-    return sorted(xs)[len(xs) // 2]
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
+from bench.harness import report, timed  # noqa: E402
 
 
 def main() -> None:
@@ -100,14 +95,8 @@ def main() -> None:
     r_plain = run_plain()      # warm
     r_bucketed = run_bucketed()
     parity = r_plain == r_bucketed and r_plain[0] == n_rows
-    plain_walls, bucketed_walls = [], []
-    for _ in range(trials):
-        t0 = time.perf_counter(); run_plain()
-        plain_walls.append(time.perf_counter() - t0)
-        t0 = time.perf_counter(); run_bucketed()
-        bucketed_walls.append(time.perf_counter() - t0)
-
-    pj, bj = _median(plain_walls), _median(bucketed_walls)
+    pj = timed(run_plain, trials, warm=False).median
+    bj = timed(run_bucketed, trials, warm=False).median
     premium = bucketed_write - plain_write
     saving = pj - bj
     break_even = round(premium / saving, 1) if saving > 0 else None
@@ -120,7 +109,6 @@ def main() -> None:
         "plain_join_sec": round(pj, 2), "bucketed_join_sec": round(bj, 2),
         "break_even_joins": break_even,
     }
-    print(json.dumps(out), flush=True)
     spark.sql("DROP TABLE IF EXISTS bb_docs")
     spark.sql("DROP TABLE IF EXISTS bb_labels")
     shutil.rmtree(work, ignore_errors=True)
@@ -143,9 +131,7 @@ def main() -> None:
         "measured version of the module's decision rule (bucket the "
         "many-consumer tables; one-shot consumers don't qualify).\n"
     )
-    from bench.scaling import _update_bench_md
-
-    _update_bench_md(ROOT, None, section)
+    report(out, section)
 
 
 if __name__ == "__main__":

@@ -28,79 +28,33 @@ north rule's two-parallelism evidence.
 
 from __future__ import annotations
 
-import json
 import os
-import subprocess
 import sys
 import time
 
-ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
-sys.path.insert(0, ROOT)
-
-_CHILD = r"""
-import json, sys, time
-sys.path.insert(0, sys.argv[4])
-from pyspark.sql import functions as F
-from code_index_spark.session import get_spark
-from code_index_spark.operators.textstats import seed_classifier
-from bench.prepare_scale import make_corpus
-
-cores = int(sys.argv[1]); n_docs = int(sys.argv[2]); trials = int(sys.argv[3])
-spark = get_spark(f"clf{cores}", cores=cores, shuffle_partitions=32)
-docs, _ = make_corpus(spark, n_docs)
-bucket = F.col("doc_id") % 10
-seed = F.col("doc_id") % 3 == 0
-pos = docs.filter(seed & ~bucket.isin(3, 4))
-neg = docs.filter(seed & (bucket == 4))
-run = lambda: seed_classifier(docs, pos, neg, "doc_id", "text") \
-    .agg(F.count("*"), F.sum(F.col("pred_pos").cast("long"))).collect()
-run()  # warm
-rates = []
-for _ in range(trials):
-    t0 = time.perf_counter()
-    run()
-    rates.append(n_docs / (time.perf_counter() - t0))
-rates.sort()
-print(json.dumps({"cores": cores,
-                  "median_rate": round(rates[len(rates) // 2]),
-                  "rates": [round(r) for r in rates]}))
-"""
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
+from bench.harness import cores, n_vs_4n, report, scaling_table, timed  # noqa: E402
 
 
-def _run_level(cores: int, n_docs: int, trials: int) -> dict:
-    out = subprocess.run(
-        [sys.executable, "-c", _CHILD, str(cores), str(n_docs), str(trials),
-         ROOT],
-        capture_output=True, text=True, cwd=ROOT, check=True,
-    )
-    return json.loads(out.stdout.strip().splitlines()[-1])
+def classify_level(cores: int, n_docs: int, trials: int) -> dict:
+    """One parallelism level (run in a fresh JVM): seed-classifier
+    scoring rate over the prepare_scale fixture."""
+    from pyspark.sql import functions as F
 
+    from bench.prepare_scale import make_corpus
+    from code_index_spark.operators.textstats import seed_classifier
+    from code_index_spark.session import get_spark
 
-def _scaling(n_docs: int, n_lo: int, trials: int = 3) -> None:
-    n_hi = n_lo * 4
-    lo = _run_level(n_lo, n_docs, trials)
-    hi = _run_level(n_hi, n_docs, trials)
-    eff = round(hi["median_rate"] / lo["median_rate"] / 4, 3)
-    out = {"metric": "classifier_scaling", "n_docs": n_docs,
-           "lo": lo, "hi": hi, "efficiency": eff}
-    print(json.dumps(out), flush=True)
-    section = (
-        "## Seed-classifier scaling (N vs 4N)\n\n"
-        f"({n_docs} docs, bench/classifier_scale.py --scaling: fresh "
-        f"JVM per level, warmed, median of {trials}, shuffle width "
-        "data-sized and equal across levels.) The stage mix is one "
-        "corpus feature scan + map-side-partial per-doc agg against a "
-        "broadcast K-row weight table — embarrassingly parallel except "
-        "the K-row weight build.\n\n"
-        "| parallelism | docs/sec (median) | all trials |\n|---|---|---|\n"
-        f"| local[{n_lo}] | {lo['median_rate']} | {lo['rates']} |\n"
-        f"| local[{n_hi}] | {hi['median_rate']} | {hi['rates']} |\n\n"
-        f"**Scaling efficiency {n_lo}→{n_hi}: {eff}** "
-        "(hypervisor-steal caveats as in the header section).\n"
-    )
-    from bench.scaling import _update_bench_md
-
-    _update_bench_md(ROOT, None, section)
+    spark = get_spark(f"clf{cores}", cores=cores, shuffle_partitions=32)
+    docs, _ = make_corpus(spark, n_docs)
+    bucket = F.col("doc_id") % 10
+    seed = F.col("doc_id") % 3 == 0
+    pos = docs.filter(seed & ~bucket.isin(3, 4))
+    neg = docs.filter(seed & (bucket == 4))
+    runs = timed(lambda: seed_classifier(docs, pos, neg, "doc_id", "text")
+                 .agg(F.count("*"), F.sum(F.col("pred_pos").cast("long")))
+                 .collect(), trials)
+    return {"cores": cores, **runs.rates(n_docs)}
 
 
 def main() -> None:
@@ -111,7 +65,20 @@ def main() -> None:
         n_lo = (int(sys.argv[idx + 1])
                 if idx + 1 < len(sys.argv) and sys.argv[idx + 1].isdigit()
                 else 2)
-        _scaling(n_docs, n_lo)
+        trials = 3
+        lo, hi, eff = n_vs_4n(classify_level, n_lo, "median_rate", n_docs, trials)
+        report(
+            {"metric": "classifier_scaling", "n_docs": n_docs,
+             "lo": lo, "hi": hi, "efficiency": eff},
+            "## Seed-classifier scaling (N vs 4N)\n\n"
+            f"({n_docs} docs, bench/classifier_scale.py --scaling: fresh "
+            f"JVM per level, warmed, median of {trials}, shuffle width "
+            "data-sized and equal across levels.) The stage mix is one "
+            "corpus feature scan + map-side-partial per-doc agg against a "
+            "broadcast K-row weight table — embarrassingly parallel except "
+            "the K-row weight build.\n\n"
+            + scaling_table(lo, hi, eff),
+        )
         return
 
     from pyspark.sql import functions as F
@@ -120,10 +87,7 @@ def main() -> None:
     from code_index_spark.operators.textstats import seed_classifier
     from code_index_spark.session import get_spark
 
-    spark = get_spark(
-        "classifier-scale",
-        cores=int(os.environ.get("SPARK_GRAFT_CPUS", 32)),
-    )
+    spark = get_spark("classifier-scale", cores=cores())
     docs, _ = make_corpus(spark, n_docs)
     bucket = F.col("doc_id") % 10
     seed = F.col("doc_id") % 3 == 0
@@ -178,14 +142,11 @@ def main() -> None:
         "planted_ok": n_copy_mismatch == 0
         and errs["fr_as_pos"] == 0 and errs["en_as_neg"] == 0,
     }
-    print(json.dumps(out), flush=True)
-
-    cores = os.environ.get("SPARK_GRAFT_CPUS", 32)
-    section = (
+    report(out, (
         "## Seed-classifier filtering at scale\n\n"
         f"({n_docs} docs, 4096 hashed unigram+bigram buckets, "
-        f"local[{cores}], bench/classifier_scale.py over the "
-        "prepare_scale planted fixture; seeds = the doc_id %% 3 == 0 "
+        f"local[{cores()}], bench/classifier_scale.py over the "
+        "prepare_scale planted fixture; seeds = the doc_id % 3 == 0 "
         "slice split English-markers vs bucket-4 French-markers, so "
         "2/3 of scored docs are held out.) Seeds + corpus each scanned "
         "once into bucket longs, K-row NB weight table broadcast, "
@@ -198,10 +159,7 @@ def main() -> None:
         f"{n_copy_mismatch} mismatches; held-out class errors "
         f"{errs['fr_as_pos']}/{errs['n_fr']} fr, "
         f"{errs['en_as_neg']}/{errs['n_en']} en |\n"
-    )
-    from bench.scaling import _update_bench_md
-
-    _update_bench_md(ROOT, None, section)
+    ))
 
 
 if __name__ == "__main__":

@@ -15,15 +15,12 @@ BENCH.md and prints one JSON line.
 
 from __future__ import annotations
 
-import json
 import os
 import sys
 import time
 
-ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
-sys.path.insert(0, ROOT)
-
-SECTION = "## Text normalization at scale"
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
+from bench.harness import cores, report  # noqa: E402
 
 
 def _run(cores: int, n_docs: int):
@@ -59,8 +56,7 @@ def main() -> None:
     if "--scaling" in sys.argv:
         scaling_n = int(sys.argv[sys.argv.index("--scaling") + 1])
 
-    cores = int(os.environ.get("SPARK_GRAFT_CPUS", 32))
-    wall, agg = _run(cores, n_docs)
+    wall, agg = _run(cores(), n_docs)
 
     eff = None
     walls = {}
@@ -76,15 +72,13 @@ def main() -> None:
         "wall_sec": wall,
         "docs_per_sec": round(n_docs / wall, 1),
         "scaling_eff": eff,
-        "cores": cores,
+        "cores": cores(),
     }
-    print(json.dumps(out))
-
     lines = [
-        SECTION,
+        "## Text normalization at scale",
         "",
         f"({n_docs} docs, {int(agg['n_changed'])} actually modified, "
-        f"local[{cores}], bench/clean_scale.py; messy fixture from the "
+        f"local[{cores()}], bench/clean_scale.py; messy fixture from the "
         "normalized_docs oracle applied first so the rule chain does "
         "real replacement work)",
         "",
@@ -98,20 +92,7 @@ def main() -> None:
             f"{walls[scaling_n]}s → {walls[4 * scaling_n]}s, "
             f"efficiency {eff} |"
         )
-    lines.append("")
-
-    p = os.path.join(ROOT, "BENCH.md")
-    with open(p) as f:
-        txt = f.read()
-    block = "\n".join(lines)
-    if SECTION in txt:
-        start = txt.index(SECTION)
-        nxt = txt.find("\n## ", start + 1)
-        txt = txt[:start] + block + (txt[nxt + 1:] if nxt != -1 else "")
-    else:
-        txt = txt.rstrip() + "\n\n" + block
-    with open(p, "w") as f:
-        f.write(txt)
+    report(out, "\n".join(lines))
 
 
 if __name__ == "__main__":

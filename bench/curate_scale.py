@@ -51,8 +51,8 @@ import os
 import sys
 import time
 
-ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
-sys.path.insert(0, ROOT)
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
+from bench.harness import cores, report  # noqa: E402
 
 
 def main() -> None:
@@ -70,9 +70,7 @@ def main() -> None:
     from code_index_spark.operators.textstats import lang_id, quality_features
     from code_index_spark.session import get_spark
 
-    spark = get_spark(
-        "curate-scale", cores=int(os.environ.get("SPARK_GRAFT_CPUS", 32)),
-    )
+    spark = get_spark("curate-scale", cores=cores())
 
     def tok(tag, id_expr):
         return F.lower(F.conv(
@@ -115,7 +113,8 @@ def main() -> None:
         .localCheckpoint(eager=True)  # fixture cost excluded from walls
     )
     cap = 1000 if clique else None
-    out = {"metric": "curate_scale", "n_docs": n_docs, "clique_mode": clique,
+    out = {"metric": "curate_scale_clique" if clique else "curate_scale",
+           "n_docs": n_docs, "clique_mode": clique,
            "near_dup_max_bucket": cap}
 
     t0 = time.perf_counter()
@@ -167,19 +166,14 @@ def main() -> None:
     out["label_mix_ok"] = all(
         abs(summary.get(k, 0) / n_docs - v) < 0.005 for k, v in expect.items()
     )
-    print(json.dumps(out), flush=True)
 
-    cores = os.environ.get("SPARK_GRAFT_CPUS", 32)
-    # NB: _update_bench_md matches sections by title PREFIX, so the
-    # clique title must not extend the base title (or the base run
-    # would delete this section)
     title = (
         "## Boilerplate-clique curation (stop-bucket cap end-to-end)"
         if clique else "## Composed curation at scale"
     )
     if clique:
         intro = (
-            f"({n_docs} docs, local[{cores}], bench/curate_scale.py "
+            f"({n_docs} docs, local[{cores()}], bench/curate_scale.py "
             "--clique.) Same planted corpus, but the 10% low-quality "
             "population is replanted as a BOILERPLATE CLIQUE — every doc "
             'shares the constant gram "!!! ??? ,,." — the real-corpus '
@@ -201,7 +195,7 @@ def main() -> None:
         )
     else:
         intro = (
-            f"({n_docs} docs, local[{cores}], bench/curate_scale.py.) "
+            f"({n_docs} docs, local[{cores()}], bench/curate_scale.py.) "
             "The full training-data filter (exact dedupe → minhash-verified "
             "near-dup → quality → language) on a synthesized corpus with "
             "PLANTED populations — 10% exact dups, 10% one-word-appended "
@@ -235,9 +229,7 @@ def main() -> None:
         "in the two dedup stages — quality/lang are per-row codegen "
         "riding the same scan.\n"
     )
-    from bench.scaling import _update_bench_md
-
-    _update_bench_md(ROOT, None, section)
+    report(out, section)
 
 
 if __name__ == "__main__":

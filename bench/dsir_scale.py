@@ -17,13 +17,12 @@ of BENCH.md and prints one JSON line.
 
 from __future__ import annotations
 
-import json
 import os
 import sys
 import time
 
-ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
-sys.path.insert(0, ROOT)
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
+from bench.harness import cores, report  # noqa: E402
 
 
 def main() -> None:
@@ -35,9 +34,7 @@ def main() -> None:
     from code_index_spark.operators.textstats import dsir_weights
     from code_index_spark.session import get_spark
 
-    spark = get_spark(
-        "dsir-scale", cores=int(os.environ.get("SPARK_GRAFT_CPUS", 32)),
-    )
+    spark = get_spark("dsir-scale", cores=cores())
     docs, _ = make_corpus(spark, n_docs)
     target = docs.filter(F.col("doc_id") % 5 == 0)
 
@@ -70,14 +67,11 @@ def main() -> None:
         "copy_weight_mismatches": n_mismatch,
         "planted_ok": n_mismatch == 0,
     }
-    print(json.dumps(out), flush=True)
-
-    cores = os.environ.get("SPARK_GRAFT_CPUS", 32)
     section = (
         "## DSIR importance weighting at scale\n\n"
-        f"({n_docs} docs, 4096 hashed-bigram buckets, local[{cores}], "
+        f"({n_docs} docs, 4096 hashed-bigram buckets, local[{cores()}], "
         "bench/dsir_scale.py over the prepare_scale planted fixture; "
-        "target = the doc_id %% 5 == 0 slice.) Corpus scanned twice "
+        "target = the doc_id % 5 == 0 slice.) Corpus scanned twice "
         "into bucket longs, K-row lambda table broadcast, per-doc sums "
         "map-side partial — integer millinat weights end to end.\n\n"
         "| n_docs | features hashed | wall (s) | rate | planted check |\n"
@@ -87,9 +81,7 @@ def main() -> None:
         f"their base's integer weight: {out['copy_weight_mismatches']} "
         f"mismatches |\n"
     )
-    from bench.scaling import _update_bench_md
-
-    _update_bench_md(ROOT, None, section)
+    report(out, section)
 
 
 if __name__ == "__main__":

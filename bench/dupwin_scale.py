@@ -16,13 +16,12 @@ BENCH.md and prints one JSON line.
 
 from __future__ import annotations
 
-import json
 import os
 import sys
 import time
 
-ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
-sys.path.insert(0, ROOT)
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
+from bench.harness import cores, report  # noqa: E402
 
 
 def main() -> None:
@@ -36,9 +35,7 @@ def main() -> None:
     from code_index_spark.operators.dedupe import duplicated_window_stats
     from code_index_spark.session import get_spark
 
-    spark = get_spark(
-        "dupwin-scale", cores=int(os.environ.get("SPARK_GRAFT_CPUS", 32)),
-    )
+    spark = get_spark("dupwin-scale", cores=cores())
     docs, _ = make_corpus(spark, n_docs)
 
     t0 = time.perf_counter()
@@ -65,12 +62,9 @@ def main() -> None:
         "full_dup_expected": expect_full,
         "planted_ok": agg["n_full_dup"] == expect_full,
     }
-    print(json.dumps(out), flush=True)
-
-    cores = os.environ.get("SPARK_GRAFT_CPUS", 32)
     section = (
         "## Duplicated-window stats at scale\n\n"
-        f"({n_docs} docs, window={window}, local[{cores}], "
+        f"({n_docs} docs, window={window}, local[{cores()}], "
         "bench/dupwin_scale.py over the prepare_scale planted fixture.) "
         "The exact-substring dedup signal (operators/dedupe."
         "duplicated_window_stats): one text scan, positions collapsed "
@@ -84,9 +78,7 @@ def main() -> None:
         f"frac 1.0 == expected {expect_full} (exact-copy population + "
         f"bases): {out['planted_ok']} |\n"
     )
-    from bench.scaling import _update_bench_md
-
-    _update_bench_md(ROOT, None, section)
+    report(out, section)
 
 
 if __name__ == "__main__":

@@ -5,7 +5,9 @@ capped the catalyst extractor at 64k turns/s; the driver's sf0.1
 BENCH_r03 then showed extract_triples 7.8s → 10.1s round over round
 with an unchanged plan. This script isolates the flag at sf0.1: same
 input, same widths, fresh JVM per config, workers warmed, median of
-`trials` timed runs per config, both engine paths.
+`trials` timed runs per config, both engine paths — each config is one
+bench/scaling.py extraction level with the flags as the driver's
+extraJavaOptions.
 
 Usage: python bench/gc_bakeoff.py [sf_dir] [trials] [mult] [configs...]
 (mult replicates the corpus as in bench/scaling.py — 10 × sf0.1 ≈ sf1 —
@@ -18,43 +20,11 @@ from __future__ import annotations
 
 import json
 import os
-import subprocess
 import sys
 
-_CHILD = r"""
-import json, sys, time
-from pyspark.sql import functions as F
-from code_index_spark.session import get_spark
-from code_index_spark.sources.tpch import derived_transcripts
-from code_index_spark.operators.extract import extract_triples, extract_triples_sql
-
-sf_dir = sys.argv[1]; trials = int(sys.argv[2]); gc = sys.argv[3]
-mult = int(sys.argv[4]) if len(sys.argv) > 4 else 1
-extra = {"spark.driver.extraJavaOptions": gc} if gc else {}
-# widths follow the data, as in bench/scaling.py
-spark = get_spark(f"gcbake", extra_conf=extra,
-                  shuffle_partitions=max(16 * mult, 64))
-t = derived_transcripts(spark, sf_dir)
-if mult > 1:
-    t = (spark.range(mult).crossJoin(t)
-         .withColumn("conv_id", F.concat_ws("-", "conv_id", F.col("id")))
-         .drop("id"))
-    t = t.repartition(max(16 * mult, 64), "conv_id")
-t = t.persist()
-n = t.count()
-out = {"gc": gc or "(session default)", "n_turns": n}
-for name, fn in (("catalyst", extract_triples_sql), ("python", extract_triples)):
-    fn(t.limit(1000)).count()
-    secs = []
-    for _ in range(trials):
-        t0 = time.perf_counter()
-        fn(t).count()
-        secs.append(time.perf_counter() - t0)
-    secs.sort()
-    out[name] = {"median_sec": round(secs[len(secs) // 2], 2),
-                 "secs": [round(s, 2) for s in secs]}
-print(json.dumps(out))
-"""
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
+from bench.harness import cores, fresh_jvm  # noqa: E402
+from bench.scaling import extract_level  # noqa: E402
 
 CONFIGS = {
     "parallel_newratio1": "-XX:+UseParallelGC -XX:NewRatio=1",
@@ -71,14 +41,11 @@ def main() -> None:
     results = {}
     for name in names:
         gc = CONFIGS[name]
-        out = subprocess.run(
-            [sys.executable, "-c", _CHILD, sf_dir, str(trials), gc, str(mult)],
-            capture_output=True, text=True,
-            cwd=os.path.dirname(os.path.dirname(os.path.abspath(__file__))),
-            timeout=3600,
-        )
-        line = out.stdout.strip().splitlines()[-1]
-        results[name] = json.loads(line)
+        level = fresh_jvm(extract_level, cores(), sf_dir, trials, mult, False,
+                          {"spark.driver.extraJavaOptions": gc})
+        results[name] = {"gc": gc, "n_turns": level["n_turns"], **{
+            p: {"median_sec": level[p]["median_sec"], "secs": level[p]["secs"]}
+            for p in ("catalyst", "python")}}
         print(json.dumps({"config": name, "mult": mult, **results[name]}),
               flush=True)
     best = min(results, key=lambda k: results[k]["catalyst"]["median_sec"])

@@ -1,13 +1,15 @@
-"""Graph ANALYTICS at sf1 scale: triangles, k-hop BFS, neighbor-set
-Jaccard, PMI edges over the build_edges_agg rollup (the four round-5
-graphalgo additions have only run on the sf0.01 oracle graph; this is
-their scale evidence, the same gap graph_scale.py closed for
-degree/pagerank).
+"""Graph ANALYTICS at sf1 scale: degree stats, PageRank, triangles,
+k-hop BFS, neighbor-set Jaccard and PMI edges over the build_edges_agg
+rollup (the rollup's consumers: the round-4 degree/pagerank pair and
+the four round-5 graphalgo additions, which have otherwise only run on
+the sf0.01 oracle graph).
 
 Input graph: the ~1.4M-edge weighted rollup at mult x sf0.1 (ent->obj
 plus co_mention families — triangle-rich: two co-mentioned entities
-sharing an object node close a triangle). PMI consumes the per-turn
-entity mention stream (the operator's contract unit).
+sharing an object node close a triangle). The rollup's map-side
+combine is what makes these tractable: analytics shuffle the
+distinct-edge set, not the per-turn edge multiset. PMI consumes the
+per-turn entity mention stream (the operator's contract unit).
 
 Usage: python bench/graph_analytics_scale.py [mult]
        python bench/graph_analytics_scale.py --scaling [N]
@@ -28,89 +30,74 @@ from __future__ import annotations
 
 import json
 import os
-import subprocess
 import sys
 import time
 
-ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
-sys.path.insert(0, ROOT)
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
+from bench.harness import (  # noqa: E402
+    cores,
+    n_vs_4n,
+    replicated_transcripts,
+    report,
+    scaling_table,
+    timed,
+)
 
 SNAP = "/tmp/graft_graph_analytics"
+PR_MAX_ITER = 20
 
-_CHILD = r"""
-import json, sys, time
-sys.path.insert(0, sys.argv[4])
-from pyspark.sql import functions as F
-from code_index_spark.session import get_spark
-from code_index_spark.operators.graphalgo import (
-    neighbor_jaccard_pairs, triangle_counts)
 
-cores = int(sys.argv[1]); src = sys.argv[2]; trials = int(sys.argv[3])
-spark = get_spark(f"ga{cores}", cores=cores, shuffle_partitions=64)
-if src.startswith("synth:"):
-    # deterministic hash-random graph, identical at every level:
-    # n_edges edges over n_edges/16 vertices (avg degree ~32) — big
-    # enough that the wedge joins are data-bound, not scheduling-bound
-    n = int(src.split(":")[1])
-    nv = max(n // 16, 1)
-    edges = (
-        spark.range(n)
-        .select(
-            (F.abs(F.xxhash64("id", F.lit(1))) % nv).alias("src_entity"),
-            (F.abs(F.xxhash64("id", F.lit(2))) % nv).alias("dst_entity"),
+def wedge_level(cores: int, src: str, trials: int) -> dict:
+    """One parallelism level (run in a fresh JVM): the combined
+    triangles + capped-Jaccard pass over the snapshot or, for
+    src="synth:<n_edges>", a deterministic hash-random graph."""
+    from pyspark.sql import functions as F
+
+    from code_index_spark.operators.graphalgo import neighbor_jaccard_pairs, triangle_counts
+    from code_index_spark.session import get_spark
+
+    spark = get_spark(f"ga{cores}", cores=cores, shuffle_partitions=64)
+    if src.startswith("synth:"):
+        # deterministic hash-random graph, identical at every level:
+        # n_edges edges over n_edges/16 vertices (avg degree ~32) — big
+        # enough that the wedge joins are data-bound, not scheduling-bound
+        n = int(src.split(":")[1])
+        nv = max(n // 16, 1)
+        edges = (
+            spark.range(n)
+            .select(
+                (F.abs(F.xxhash64("id", F.lit(1))) % nv).alias("src_entity"),
+                (F.abs(F.xxhash64("id", F.lit(2))) % nv).alias("dst_entity"),
+            )
+            .filter(F.col("src_entity") != F.col("dst_entity"))
+            .repartition(64)
+            .localCheckpoint(eager=True)
         )
-        .filter(F.col("src_entity") != F.col("dst_entity"))
-        .repartition(64)
-        .localCheckpoint(eager=True)
-    )
-else:
-    edges = spark.read.parquet(src + "/edges").localCheckpoint(eager=True)
-# count the DISTINCT canonical pair set the operators actually join
-# (r5 ADVICE #3: the raw count includes duplicate (src, dst) hash
-# collisions that the operators' internal .distinct() removes)
-n_edges = (edges.select(F.least("src_entity", "dst_entity"),
-                        F.greatest("src_entity", "dst_entity"))
-           .distinct().count())
+    else:
+        edges = spark.read.parquet(src + "/edges").localCheckpoint(eager=True)
+    # count the DISTINCT canonical pair set the operators actually join
+    # (r5 ADVICE #3: the raw count includes duplicate (src, dst) hash
+    # collisions that the operators' internal .distinct() removes)
+    n_edges = (edges.select(F.least("src_entity", "dst_entity"),
+                            F.greatest("src_entity", "dst_entity"))
+               .distinct().count())
 
-def run():
-    t = triangle_counts(edges).agg(
-        F.count("*"), F.sum("n_triangles")).collect()
-    j = neighbor_jaccard_pairs(edges, min_sim=0.02, hub_cap=64).count()
-    return t, j
+    def run():
+        triangle_counts(edges).agg(F.count("*"), F.sum("n_triangles")).collect()
+        neighbor_jaccard_pairs(edges, min_sim=0.02, hub_cap=64).count()
 
-run()  # warm
-walls = []
-for _ in range(trials):
-    t0 = time.perf_counter()
-    run()
-    walls.append(time.perf_counter() - t0)
-walls.sort()
-print(json.dumps({"cores": cores, "n_edges": n_edges,
-                  "median_wall": round(walls[len(walls) // 2], 1),
-                  "walls": [round(w, 1) for w in walls]}))
-"""
+    runs = timed(run, trials)
+    return {"cores": cores, "n_edges": n_edges,
+            "median_wall": round(runs.median, 1),
+            "walls": sorted(round(w, 1) for w in runs.runs),
+            "median_rate": round(n_edges / runs.median)}
 
 
-def _run_level(cores: int, src: str, trials: int) -> dict:
-    out = subprocess.run(
-        [sys.executable, "-c", _CHILD, str(cores), src, str(trials), ROOT],
-        capture_output=True, text=True, cwd=ROOT, check=True,
-    )
-    return json.loads(out.stdout.strip().splitlines()[-1])
-
-
-def _scaling(n_lo: int, synth_edges: int | None, trials: int = 3) -> None:
+def scaling_main(n_lo: int, synth_edges: int | None, trials: int = 3) -> None:
     if synth_edges is None and not os.path.isdir(SNAP + "/edges"):
         raise SystemExit("run the main mode first to snapshot the graph")
     src = f"synth:{synth_edges}" if synth_edges else SNAP
-    n_hi = n_lo * 4
-    lo = _run_level(n_lo, src, trials)
-    hi = _run_level(n_hi, src, trials)
-    eff = round(lo["median_wall"] / hi["median_wall"] / 4, 3)
-    out = {"metric": "graph_analytics_scaling", "src": src,
-           "n_edges": lo["n_edges"], "lo": lo, "hi": hi,
-           "efficiency": eff}
-    print(json.dumps(out), flush=True)
+    lo, hi, eff = n_vs_4n(wedge_level, n_lo, "median_rate", src, trials)
     if synth_edges:
         intro = (
             f"({lo['n_edges']} edges of a deterministic hash-random graph "
@@ -120,8 +107,8 @@ def _scaling(n_lo: int, synth_edges: int | None, trials: int = 3) -> None:
             "The data-bound case: a graph big enough that the wedge "
             "joins dominate scheduling overhead."
         )
-        title = ("## Graph analytics scaling, data-bound "
-                 "(script run, N vs 4N)\n\n")
+        title = "## Graph analytics scaling, data-bound (N vs 4N)"
+        metric = "graph_analytics_scaling_synth"
     else:
         intro = (
             f"({lo['n_edges']} rollup edges, bench/graph_analytics_scale.py"
@@ -136,20 +123,16 @@ def _scaling(n_lo: int, synth_edges: int | None, trials: int = 3) -> None:
             " twin below shows the same operators scale when the input is"
             " actually large."
         )
-        title = "## Graph analytics scaling, vocab-scale graph (N vs 4N)\n\n"
-    section = (
-        title + intro + "\n\n"
+        title = "## Graph analytics scaling, vocab-scale graph (N vs 4N)"
+        metric = "graph_analytics_scaling"
+    report(
+        {"metric": metric, "src": src, "n_edges": lo["n_edges"],
+         "lo": lo, "hi": hi, "efficiency": eff},
+        f"{title}\n\n{intro}\n\n"
         "Combined triangles + capped neighbor-Jaccard pass — the two "
         "wedge-join-bound analytics, i.e. the shuffle-heavy pair.\n\n"
-        "| parallelism | wall (s, median) | all trials |\n|---|---|---|\n"
-        f"| local[{n_lo}] | {lo['median_wall']} | {lo['walls']} |\n"
-        f"| local[{n_hi}] | {hi['median_wall']} | {hi['walls']} |\n\n"
-        f"**Scaling efficiency {n_lo}→{n_hi}: {eff}** "
-        "(hypervisor-steal caveats as in the header section).\n"
+        + scaling_table(lo, hi, eff, "wall (s, median)", "median_wall", "walls"),
     )
-    from bench.scaling import _update_bench_md
-
-    _update_bench_md(ROOT, None, section)
 
 
 def main() -> None:
@@ -160,14 +143,14 @@ def main() -> None:
         rest = [a for a in sys.argv[idx + 1:] if a.isdigit()]
         n_lo = int(rest[0]) if rest else 8
         n_edges = int(rest[1]) if len(rest) > 1 else 8_000_000
-        _scaling(n_lo, n_edges)
+        scaling_main(n_lo, n_edges)
         return
     if "--scaling" in sys.argv:
         idx = sys.argv.index("--scaling")
         n_lo = (int(sys.argv[idx + 1])
                 if idx + 1 < len(sys.argv) and sys.argv[idx + 1].isdigit()
                 else 8)
-        _scaling(n_lo, None)
+        scaling_main(n_lo, None)
         return
 
     import shutil
@@ -175,35 +158,30 @@ def main() -> None:
     from pyspark.sql import functions as F
 
     from code_index_spark.operators.graphalgo import (
+        degree_stats,
         khop_neighbors,
         neighbor_jaccard_pairs,
+        pagerank,
         pmi_edges,
         triangle_counts,
     )
     from code_index_spark.operators.materialize import build_edges_agg
     from code_index_spark.plans.pipeline import build_graph
     from code_index_spark.session import get_spark
-    from code_index_spark.sources.tpch import derived_transcripts
 
-    cores = int(os.environ.get("SPARK_GRAFT_CPUS", 32))
-    width = max(16 * mult, cores * 2)
-    spark = get_spark("graph-analytics-scale", cores=cores,
+    width = max(16 * mult, cores() * 2)
+    spark = get_spark("graph-analytics-scale", cores=cores(),
                       shuffle_partitions=width)
 
-    t = derived_transcripts(spark, "/root/testdata/sf0.1")
-    if mult > 1:
-        t = (
-            spark.range(mult).crossJoin(t)
-            .withColumn("conv_id", F.concat_ws("-", "conv_id", F.col("id")))
-            .drop("id")
-        )
-    t = t.repartition(width, "conv_id").persist()
+    t = replicated_transcripts(spark, "/root/testdata/sf0.1", mult, width)
     t.count()
     g = build_graph(t)
     triples, em = g["triples"], g["entity_map"]
     n_triples = triples.count()
+    t0 = time.perf_counter()
     edges = build_edges_agg(triples, em).localCheckpoint(eager=True)
     n_edges = edges.count()
+    wall_rollup = round(time.perf_counter() - t0, 1)
     # per-turn ENTITY mention stream (pmi_edges' contract unit)
     mentions = (
         triples.filter(F.col("pred") == "class")
@@ -219,7 +197,26 @@ def main() -> None:
 
     out = {"metric": "graph_analytics_scale", "mult": mult,
            "n_triples": n_triples, "n_edges": n_edges,
-           "n_mentions": n_mentions}
+           "n_mentions": n_mentions, "wall_rollup_sec": wall_rollup}
+
+    t0 = time.perf_counter()
+    deg = degree_stats(edges)
+    out["n_vertices"] = deg.count()
+    out["max_degree"] = deg.agg(F.max("degree")).first()[0]
+    out["wall_degree_sec"] = round(time.perf_counter() - t0, 1)
+
+    t0 = time.perf_counter()
+    pr = pagerank(edges, max_iter=PR_MAX_ITER)
+    out["pr_top_rank"] = round(pr.agg(F.max("rank")).first()[0], 6)
+    out["pr_n_vertices"] = pr.count()
+    out["wall_pagerank_sec"] = round(time.perf_counter() - t0, 1)
+    # convergence check: a second run with half the budget must differ
+    # if the first needed more than half — equal top-rank ⇒ converged
+    pr_half = pagerank(edges, max_iter=PR_MAX_ITER // 2)
+    out["pr_converged_by_half_budget"] = (
+        round(pr_half.agg(F.max("rank")).first()[0], 6) == out["pr_top_rank"]
+    )
+    print(json.dumps(out), flush=True)
 
     t0 = time.perf_counter()
     tri = triangle_counts(edges)
@@ -261,15 +258,14 @@ def main() -> None:
     pm = pmi_edges(mentions)
     out["pmi_edges"] = pm.count()
     out["wall_pmi_sec"] = round(time.perf_counter() - t0, 1)
-    print(json.dumps(out), flush=True)
 
-    section = (
+    report(out, (
         "## Graph analytics (triangles/k-hop/jaccard/PMI) at scale\n\n"
         f"(bench/graph_analytics_scale.py, {n_triples} triples ≈ "
         f"sf{mult / 10:.0f}, {n_edges} rollup edges, {n_mentions} "
-        f"entity mentions, local[{cores}].) The four round-5 graphalgo "
-        "operators over the SAME build_edges_agg rollup as the "
-        "degree/pagerank table above. Triangles and Jaccard are "
+        f"entity mentions, local[{cores()}].) Degree stats, PageRank and "
+        "the four round-5 graphalgo operators over ONE build_edges_agg "
+        "rollup. Triangles and Jaccard are "
         "wedge-join-bound: triangles orient every edge low-degree-first "
         "(fanout bounded by arboricity, not hub degree); Jaccard uses "
         "the hub_cap stop-bucket lever — the cap sweep below shows the "
@@ -278,6 +274,14 @@ def main() -> None:
         "graph tops out at ~0.04 — same join shape, non-trivial "
         "output.\n\n"
         "| analytic | wall (s) | output |\n|---|---|---|\n"
+        f"| build_edges_agg (rollup) | {wall_rollup} | "
+        f"{n_edges} weighted edges |\n"
+        f"| degree_stats | {out['wall_degree_sec']} | "
+        f"{out['n_vertices']} vertices, max degree {out['max_degree']} |\n"
+        f"| pagerank (≤{PR_MAX_ITER} iter, tol 1e-6) | "
+        f"{out['wall_pagerank_sec']} | top rank {out['pr_top_rank']}, "
+        f"converged ≤{PR_MAX_ITER // 2} iterations: "
+        f"{out['pr_converged_by_half_budget']} |\n"
         f"| triangle_counts | {out['wall_triangles_sec']} | "
         f"{out['n_triangles']} triangles over {out['tri_vertices']} "
         "participating vertices |\n"
@@ -290,10 +294,7 @@ def main() -> None:
         f"{out['khop_rows']} (seed, vertex, hop) rows |\n"
         f"| pmi_edges | {out['wall_pmi_sec']} | "
         f"{out['pmi_edges']} weighted pairs |\n"
-    )
-    from bench.scaling import _update_bench_md
-
-    _update_bench_md(ROOT, None, section)
+    ))
 
 
 if __name__ == "__main__":

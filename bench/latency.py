@@ -26,12 +26,11 @@ from __future__ import annotations
 
 import json
 import os
-import statistics
 import sys
 import time
 
-ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
-sys.path.insert(0, ROOT)
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
+from bench.harness import cores, report, timed  # noqa: E402
 
 QUERIES = ["search_rank", "entity_search", "ann_topk",
            "lsh_bucketed_topk", "ivf_topk"]
@@ -44,25 +43,20 @@ def main() -> None:
     import __spark_entry__ as entrymod
     from code_index_spark.session import get_spark
 
-    spark = get_spark("latency", cores=int(
-        os.environ.get("SPARK_GRAFT_CPUS", os.cpu_count() or 8)))
+    spark = get_spark("latency", cores=cores())
     qs = entrymod.queries()
+
+    def latency(runs, n_rows) -> dict:
+        return {"median_ms": round(1000 * runs.median, 1),
+                "min_ms": round(1000 * runs.min, 1),
+                "max_ms": round(1000 * max(runs.runs), 1), "n_rows": n_rows}
+
     results: dict[str, dict] = {}
     for name in QUERIES:
         fn = qs[name]
-        fn(spark, sf_dir).collect()  # warm: scan cache, codegen, Arrow workers
-        secs = []
-        for _ in range(trials):
-            t0 = time.perf_counter()
-            rows = fn(spark, sf_dir).collect()
-            secs.append(time.perf_counter() - t0)
-        secs.sort()
-        results[name] = {
-            "median_ms": round(1000 * statistics.median(secs), 1),
-            "min_ms": round(1000 * secs[0], 1),
-            "max_ms": round(1000 * secs[-1], 1),
-            "n_rows": len(rows),
-        }
+        # warm run first: scan cache, codegen, Arrow workers
+        runs = timed(lambda: fn(spark, sf_dir).collect(), trials)
+        results[name] = latency(runs, len(runs.out))
         print(json.dumps({"query": name, **results[name]}), flush=True)
 
     # --- indexed serving path (round-4 VERDICT #2): the corpus-side
@@ -86,28 +80,20 @@ def main() -> None:
     qstrings = ["acme corp widget", "merge request", "data pipeline",
                 "alpha beta gamma", "spark shuffle"]
     search_index_topk(index, qstrings[0]).collect()  # warm
-    secs, n_rows = [], 0
-    for q in qstrings:
-        for _ in range(trials):
-            t0 = time.perf_counter()
-            rows = search_index_topk(index, q, 10).collect()
-            secs.append(time.perf_counter() - t0)
-        n_rows = max(n_rows, len(rows))
-    secs.sort()
-    results["entity_search_indexed (warm index)"] = {
-        "median_ms": round(1000 * statistics.median(secs), 1),
-        "min_ms": round(1000 * secs[0], 1),
-        "max_ms": round(1000 * secs[-1], 1),
-        "n_rows": n_rows,
-    }
+    requests = iter([q for q in qstrings for _ in range(trials)])
+    n_rows = []
+    runs = timed(lambda: n_rows.append(
+        len(search_index_topk(index, next(requests), 10).collect())),
+        len(qstrings) * trials, warm=False)
+    results["entity_search_indexed (warm index)"] = latency(runs, max(n_rows))
     print(json.dumps({"query": "entity_search_indexed (warm index)",
                       "index_build_s": index_build_s,
                       **results["entity_search_indexed (warm index)"]}),
           flush=True)
 
     section = (
-        "## Search-path latency battery "
-        f"(sf={sf_dir.rstrip('/').split('/')[-1]}, warm, median of {trials})\n\n"
+        "## Search-path latency battery\n\n"
+        f"(sf={sf_dir.rstrip('/').split('/')[-1]}, warm, median of {trials}.) "
         "Analogue of the reference's scripted search battery "
         "(comprehensive_search_test.py; BASELINE.md quotes 55.68 ms avg "
         "in-process). Each number is one full request — plan build + "
@@ -135,11 +121,8 @@ def main() -> None:
             for n, r in results.items()
         )
     )
-    from bench.scaling import _update_bench_md
-
-    _update_bench_md(ROOT, None, section)
-    print(json.dumps({"metric": "search_latency_battery", "sf_dir": sf_dir,
-                      "queries": {n: r["median_ms"] for n, r in results.items()}}))
+    report({"metric": "search_latency_battery", "sf_dir": sf_dir,
+            "queries": {n: r["median_ms"] for n, r in results.items()}}, section)
 
 
 if __name__ == "__main__":

@@ -45,8 +45,8 @@ import os
 import sys
 import time
 
-ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
-sys.path.insert(0, ROOT)
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
+from bench.harness import ROOT, cores, report  # noqa: E402
 
 
 # perfbench/baseline.json "link_scaling": (turns, person families,
@@ -167,10 +167,7 @@ def main() -> None:
     )
     from code_index_spark.session import get_spark
 
-    spark = get_spark(
-        "link-scale", cores=int(os.environ.get("SPARK_GRAFT_CPUS", 32)),
-        shuffle_partitions=64,
-    )
+    spark = get_spark("link-scale", cores=cores(), shuffle_partitions=64)
 
     def tok(tag):
         return F.lower(F.conv(
@@ -258,11 +255,10 @@ def main() -> None:
     out["family_cluster_rate"] = round(ok / max(n_fam, 1), 4)
     out["wall_total_sec"] = round(
         out["wall_blocking_sec"] + out["wall_rescore_sec"] + out["wall_cc_sec"], 1)
-    print(json.dumps(out), flush=True)
 
     section = (
-        "## End-to-end linking past the LSH cutover "
-        f"({n_surf} surfaces, local[{os.environ.get('SPARK_GRAFT_CPUS', 32)}])\n\n"
+        "## End-to-end linking past the LSH cutover\n\n"
+        f"({n_surf} surfaces, local[{cores()}].) "
         "The three at-scale stages COMPOSED on one >10⁶-surface input "
         "(bench/link_scale.py; bench/lsh_recall.py measured blocking in "
         "isolation). Production settings throughout: r=3/b=70 AND-OR "
@@ -284,9 +280,7 @@ def main() -> None:
         "component (blocking recall × rescore acceptance × CC, composed "
         "— not a per-stage proxy).\n"
     )
-    from bench.scaling import _update_bench_md
-
-    _update_bench_md(ROOT, None, section)
+    report(out, section)
 
 
 if __name__ == "__main__":

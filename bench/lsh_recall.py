@@ -32,6 +32,7 @@ import sys
 import time
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
+from bench.harness import cores  # noqa: E402
 
 
 def main() -> None:
@@ -43,8 +44,7 @@ def main() -> None:
     from code_index_spark.operators.link import char_ngrams, normalize_surface
     from code_index_spark.session import get_spark
 
-    spark = get_spark("lsh-recall", cores=int(os.environ.get("SPARK_GRAFT_CPUS", 32)),
-                      shuffle_partitions=64)
+    spark = get_spark("lsh-recall", cores=cores(), shuffle_partitions=64)
 
     def tok(tag):
         # base36 (not hex) tokens: real identifier vocabularies draw

@@ -25,72 +25,27 @@ from __future__ import annotations
 
 import json
 import os
-import subprocess
 import sys
 import time
 
-ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
-sys.path.insert(0, ROOT)
-
-_CHILD = r"""
-import json, sys, time
-sys.path.insert(0, sys.argv[4])
-from pyspark.sql import functions as F
-from code_index_spark.session import get_spark
-from code_index_spark.operators.dedupe import remove_duplicated_passages
-from bench.prepare_scale import make_corpus
-
-cores = int(sys.argv[1]); n_docs = int(sys.argv[2]); trials = int(sys.argv[3])
-spark = get_spark(f"pass{cores}", cores=cores, shuffle_partitions=32)
-docs, _ = make_corpus(spark, n_docs)
-run = lambda: remove_duplicated_passages(docs, "doc_id", "text", window=8) \
-    .agg(F.count("*"), F.sum("n_removed")).collect()
-run()  # warm
-rates = []
-for _ in range(trials):
-    t0 = time.perf_counter()
-    run()
-    rates.append(n_docs / (time.perf_counter() - t0))
-rates.sort()
-print(json.dumps({"cores": cores,
-                  "median_rate": round(rates[len(rates) // 2]),
-                  "rates": [round(r) for r in rates]}))
-"""
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
+from bench.harness import cores, n_vs_4n, report, scaling_table, timed  # noqa: E402
 
 
-def _run_level(cores: int, n_docs: int, trials: int) -> dict:
-    out = subprocess.run(
-        [sys.executable, "-c", _CHILD, str(cores), str(n_docs), str(trials),
-         ROOT],
-        capture_output=True, text=True, cwd=ROOT, check=True,
-    )
-    return json.loads(out.stdout.strip().splitlines()[-1])
+def removal_level(cores: int, n_docs: int, trials: int) -> dict:
+    """One parallelism level (run in a fresh JVM): passage-removal rate
+    over the prepare_scale fixture, window=8."""
+    from pyspark.sql import functions as F
 
+    from bench.prepare_scale import make_corpus
+    from code_index_spark.operators.dedupe import remove_duplicated_passages
+    from code_index_spark.session import get_spark
 
-def _scaling(n_docs: int, n_lo: int, trials: int = 3) -> None:
-    n_hi = n_lo * 4
-    lo = _run_level(n_lo, n_docs, trials)
-    hi = _run_level(n_hi, n_docs, trials)
-    eff = round(hi["median_rate"] / lo["median_rate"] / 4, 3)
-    out = {"metric": "passage_scaling", "n_docs": n_docs,
-           "lo": lo, "hi": hi, "efficiency": eff}
-    print(json.dumps(out), flush=True)
-    section = (
-        "## Duplicated-passage removal scaling (N vs 4N)\n\n"
-        f"({n_docs} docs, window=8, bench/passage_scale.py --scaling: "
-        f"fresh JVM per level, warmed, median of {trials}, shuffle width "
-        "data-sized and equal across levels.) The removal is "
-        "owner-election + owner-join bound (two corpus-sized exchanges "
-        "of long triples), so its scaling rides the shuffle stages.\n\n"
-        "| parallelism | docs/sec (median) | all trials |\n|---|---|---|\n"
-        f"| local[{n_lo}] | {lo['median_rate']} | {lo['rates']} |\n"
-        f"| local[{n_hi}] | {hi['median_rate']} | {hi['rates']} |\n\n"
-        f"**Scaling efficiency {n_lo}→{n_hi}: {eff}** "
-        "(hypervisor-steal caveats as in the header section).\n"
-    )
-    from bench.scaling import _update_bench_md
-
-    _update_bench_md(ROOT, None, section)
+    spark = get_spark(f"pass{cores}", cores=cores, shuffle_partitions=32)
+    docs, _ = make_corpus(spark, n_docs)
+    runs = timed(lambda: remove_duplicated_passages(docs, "doc_id", "text", window=8)
+                 .agg(F.count("*"), F.sum("n_removed")).collect(), trials)
+    return {"cores": cores, **runs.rates(n_docs)}
 
 
 def _pathological() -> None:
@@ -105,9 +60,7 @@ def _pathological() -> None:
     from code_index_spark.operators.dedupe import remove_duplicated_passages
     from code_index_spark.session import get_spark
 
-    spark = get_spark(
-        "passage-path", cores=int(os.environ.get("SPARK_GRAFT_CPUS", 32)),
-    )
+    spark = get_spark("passage-path", cores=cores())
     rows_out = []
     for n_tok in (5_000, 20_000, 80_000):
         base = " ".join(f"w{i}" for i in range(n_tok))
@@ -122,7 +75,9 @@ def _pathological() -> None:
         print(json.dumps({"metric": "passage_pathological",
                           "n_tokens": n_tok, "wall_sec": wall,
                           "removed": agg["rm"]}), flush=True)
-    section = (
+    report({"metric": "passage_pathological",
+            "runs": [{"n_tokens": n, "wall_sec": w, "removed": r}
+                     for n, w, r in rows_out]}, (
         "## Duplicated-passage removal: pathological long-doc fixture\n\n"
         "(bench/passage_scale.py --pathological: one n-token doc plus a "
         "byte-identical copy — every window of the copy is removed, so "
@@ -132,10 +87,7 @@ def _pathological() -> None:
         "shape.)\n\n"
         "| n_tokens | wall (s) | removed tokens |\n|---|---|---|\n"
         + "".join(f"| {n} | {w} | {r} |\n" for n, w, r in rows_out)
-    )
-    from bench.scaling import _update_bench_md
-
-    _update_bench_md(ROOT, None, section)
+    ))
 
 
 def main() -> None:
@@ -150,7 +102,19 @@ def main() -> None:
         n_lo = (int(sys.argv[idx + 1])
                 if idx + 1 < len(sys.argv) and sys.argv[idx + 1].isdigit()
                 else 8)
-        _scaling(n_docs, n_lo)
+        trials = 3
+        lo, hi, eff = n_vs_4n(removal_level, n_lo, "median_rate", n_docs, trials)
+        report(
+            {"metric": "passage_scaling", "n_docs": n_docs,
+             "lo": lo, "hi": hi, "efficiency": eff},
+            "## Duplicated-passage removal scaling (N vs 4N)\n\n"
+            f"({n_docs} docs, window=8, bench/passage_scale.py --scaling: "
+            f"fresh JVM per level, warmed, median of {trials}, shuffle width "
+            "data-sized and equal across levels.) The removal is "
+            "owner-election + owner-join bound (two corpus-sized exchanges "
+            "of long triples), so its scaling rides the shuffle stages.\n\n"
+            + scaling_table(lo, hi, eff),
+        )
         return
 
     from pyspark.sql import functions as F
@@ -159,9 +123,7 @@ def main() -> None:
     from code_index_spark.operators.dedupe import remove_duplicated_passages
     from code_index_spark.session import get_spark
 
-    spark = get_spark(
-        "passage-scale", cores=int(os.environ.get("SPARK_GRAFT_CPUS", 32)),
-    )
+    spark = get_spark("passage-scale", cores=cores())
     docs, _ = make_corpus(spark, n_docs)
 
     t0 = time.perf_counter()
@@ -188,12 +150,9 @@ def main() -> None:
         "planted_ok": (agg["n_emptied"] == expect_emptied
                        and agg["n_tail_only"] == expect_tail),
     }
-    print(json.dumps(out), flush=True)
-
-    cores = os.environ.get("SPARK_GRAFT_CPUS", 32)
-    section = (
+    report(out, (
         "## Duplicated-passage removal at scale\n\n"
-        f"({n_docs} docs, window={window}, local[{cores}], "
+        f"({n_docs} docs, window={window}, local[{cores()}], "
         "bench/passage_scale.py over the prepare_scale planted fixture.) "
         "The exact-substring EDIT step (dedupe.remove_duplicated_"
         "passages): one text scan into (doc, pos, hash60) triples, "
@@ -206,10 +165,7 @@ def main() -> None:
         f"{out['removed_tokens']} | {out['emptied_docs']} emptied == "
         f"{expect_emptied} copies AND {out['tail_only_docs']} tail-only "
         f"== {expect_tail} prefix copies: {out['planted_ok']} |\n"
-    )
-    from bench.scaling import _update_bench_md
-
-    _update_bench_md(ROOT, None, section)
+    ))
 
 
 if __name__ == "__main__":

@@ -16,8 +16,8 @@ import os
 import runpy
 import sys
 
-ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
-sys.path.insert(0, ROOT)
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
+from bench.harness import ROOT  # noqa: E402
 
 
 def main() -> None:

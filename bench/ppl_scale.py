@@ -24,13 +24,12 @@ BENCH.md and prints one JSON line.
 
 from __future__ import annotations
 
-import json
 import os
 import sys
 import time
 
-ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
-sys.path.insert(0, ROOT)
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
+from bench.harness import cores, report  # noqa: E402
 
 
 def make_scored_corpus(spark, n_docs: int):
@@ -81,8 +80,7 @@ def main() -> None:
     )
     from code_index_spark.session import get_spark
 
-    cores = int(os.environ.get("SPARK_GRAFT_CPUS", 32))
-    spark = get_spark("ppl-scale", cores=cores)
+    spark = get_spark("ppl-scale", cores=cores())
     scores, lm_wall = make_scored_corpus(spark, n_docs)
 
     t0 = time.perf_counter()
@@ -106,7 +104,7 @@ def main() -> None:
     )
     out = {
         "metric": "ppl_bucket_scale", "n_docs": n_docs,
-        "sample_frac": sample_frac, "cores": cores,
+        "sample_frac": sample_frac, "cores": cores(),
         "lm_scoring_wall_sec": lm_wall,
         "lm_docs_per_sec": int(n_docs / (lm_wall or 1)),
         "wall_exact_single_group_sec": wall_exact,
@@ -114,11 +112,9 @@ def main() -> None:
         "speedup": round(wall_exact / (wall_cut or 1), 2),
         "bucket_agreement": round(agree, 5),
     }
-    print(json.dumps(out), flush=True)
-
     section = (
         "## Perplexity bucketing at scale\n\n"
-        f"({n_docs} docs, ONE source group, local[{cores}], "
+        f"({n_docs} docs, ONE source group, local[{cores()}], "
         "bench/ppl_scale.py; scores localCheckpoint-ed so both paths "
         "start from the same materialized input.) The exact path's "
         "per-group window serializes the whole group through one task "
@@ -141,9 +137,7 @@ def main() -> None:
         "(score DESC, id) total order; at sample_frac=1.0 agreement "
         "is exact, pinned by tests/test_training_ops.py parity).\n"
     )
-    from bench.scaling import _update_bench_md
-
-    _update_bench_md(ROOT, None, section)
+    report(out, section)
 
 
 if __name__ == "__main__":

@@ -47,14 +47,12 @@ runs).
 
 from __future__ import annotations
 
-import json
 import os
-import subprocess
 import sys
 import time
 
-ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
-sys.path.insert(0, ROOT)
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
+from bench.harness import cores, n_vs_4n, report, scaling_table, timed  # noqa: E402
 
 
 def make_corpus(spark, n_docs: int):
@@ -122,66 +120,20 @@ def make_corpus(spark, n_docs: int):
     return docs, ev
 
 
-_CHILD = r"""
-import json, sys, time
-sys.path.insert(0, sys.argv[4])
-from code_index_spark.session import get_spark
-from code_index_spark.operators.prepare import prepare_summary
-from bench.prepare_scale import make_corpus
+def prepare_level(cores: int, n_docs: int, trials: int) -> dict:
+    """One parallelism level (run in a fresh JVM): composed prepare
+    rate, warmed on a 2000-doc slice."""
+    from code_index_spark.operators.prepare import prepare_summary
+    from code_index_spark.session import get_spark
 
-cores = int(sys.argv[1]); n_docs = int(sys.argv[2]); trials = int(sys.argv[3])
-# width sized to the DATA and held equal across levels (the
-# bench/scaling.py discipline: isolate cores, not partition counts)
-spark = get_spark(f"prep{cores}", cores=cores, shuffle_partitions=32)
-docs, ev = make_corpus(spark, n_docs)
-prepare_summary(docs.limit(2000), ev.limit(200), decontam_gram_n=8).collect()
-rates = []
-for _ in range(trials):
-    t0 = time.perf_counter()
-    prepare_summary(docs, ev, decontam_gram_n=8).collect()
-    rates.append(n_docs / (time.perf_counter() - t0))
-rates.sort()
-print(json.dumps({"cores": cores,
-                  "median_rate": round(rates[len(rates) // 2]),
-                  "rates": [round(r) for r in rates]}))
-"""
-
-
-def _run_level(cores: int, n_docs: int, trials: int) -> dict:
-    out = subprocess.run(
-        [sys.executable, "-c", _CHILD, str(cores), str(n_docs), str(trials),
-         ROOT],
-        capture_output=True, text=True, cwd=ROOT, check=True,
-    )
-    return json.loads(out.stdout.strip().splitlines()[-1])
-
-
-def _scaling(n_docs: int, n_lo: int, trials: int = 3) -> None:
-    n_hi = n_lo * 4
-    lo = _run_level(n_lo, n_docs, trials)
-    hi = _run_level(n_hi, n_docs, trials)
-    eff = round(hi["median_rate"] / lo["median_rate"] / 4, 3)
-    out = {"metric": "prepare_scaling", "n_docs": n_docs,
-           "lo": lo, "hi": hi, "efficiency": eff}
-    print(json.dumps(out), flush=True)
-    section = (
-        "## Composed corpus preparation scaling (N vs 4N)\n\n"
-        f"({n_docs} docs + {n_docs // 10}-doc eval suite, "
-        "bench/prepare_scale.py --scaling: fresh JVM per level, warmed, "
-        f"median of {trials}, shuffle width data-sized and equal across "
-        "levels.) Two-parallelism evidence for the composed "
-        "corpus-preparation deliverable (north rule): the pipeline is "
-        "dedup-join-bound, so its scaling rides the exchange stages, "
-        "not the per-row codegen scan.\n\n"
-        "| parallelism | docs/sec (median) | all trials |\n|---|---|---|\n"
-        f"| local[{n_lo}] | {lo['median_rate']} | {lo['rates']} |\n"
-        f"| local[{n_hi}] | {hi['median_rate']} | {hi['rates']} |\n\n"
-        f"**Scaling efficiency {n_lo}→{n_hi}: {eff}** "
-        "(hypervisor-steal caveats as in the header section).\n"
-    )
-    from bench.scaling import _update_bench_md
-
-    _update_bench_md(ROOT, None, section)
+    # width sized to the DATA and held equal across levels (the
+    # bench/scaling.py discipline: isolate cores, not partition counts)
+    spark = get_spark(f"prep{cores}", cores=cores, shuffle_partitions=32)
+    docs, ev = make_corpus(spark, n_docs)
+    prepare_summary(docs.limit(2000), ev.limit(200), decontam_gram_n=8).collect()
+    runs = timed(lambda: prepare_summary(docs, ev, decontam_gram_n=8).collect(),
+                 trials, warm=False)
+    return {"cores": cores, **runs.rates(n_docs)}
 
 
 def main() -> None:
@@ -193,15 +145,27 @@ def main() -> None:
         n_lo = (int(sys.argv[idx + 1])
                 if idx + 1 < len(sys.argv) and sys.argv[idx + 1].isdigit()
                 else 8)
-        _scaling(n_docs, n_lo)
+        trials = 3
+        lo, hi, eff = n_vs_4n(prepare_level, n_lo, "median_rate", n_docs, trials)
+        report(
+            {"metric": "prepare_scaling", "n_docs": n_docs,
+             "lo": lo, "hi": hi, "efficiency": eff},
+            "## Composed corpus preparation scaling (N vs 4N)\n\n"
+            f"({n_docs} docs + {n_docs // 10}-doc eval suite, "
+            "bench/prepare_scale.py --scaling: fresh JVM per level, warmed, "
+            f"median of {trials}, shuffle width data-sized and equal across "
+            "levels.) Two-parallelism evidence for the composed "
+            "corpus-preparation deliverable (north rule): the pipeline is "
+            "dedup-join-bound, so its scaling rides the exchange stages, "
+            "not the per-row codegen scan.\n\n"
+            + scaling_table(lo, hi, eff),
+        )
         return
 
     from code_index_spark.operators.prepare import prepare_summary
     from code_index_spark.session import get_spark
 
-    spark = get_spark(
-        "prepare-scale", cores=int(os.environ.get("SPARK_GRAFT_CPUS", 32)),
-    )
+    spark = get_spark("prepare-scale", cores=cores())
     docs, ev = make_corpus(spark, n_docs)
 
     t0 = time.perf_counter()
@@ -225,12 +189,9 @@ def main() -> None:
     out["label_mix_ok"] = all(
         abs(by_reason.get(k, 0) / n_docs - v) < 0.005 for k, v in expect.items()
     ) and abs(n_pii / n_docs - 0.1) < 0.005
-    print(json.dumps(out), flush=True)
-
-    cores = os.environ.get("SPARK_GRAFT_CPUS", 32)
-    section = (
+    report(out, (
         "## Composed corpus preparation at scale\n\n"
-        f"({n_docs} docs + {n_eval}-doc eval suite, local[{cores}], "
+        f"({n_docs} docs + {n_eval}-doc eval suite, local[{cores()}], "
         "bench/prepare_scale.py.) The FULL pretraining pass — curation → "
         "8-gram decontamination → PII scrub → hash split — as the single "
         "composed operator (operators/prepare.py, driver rows "
@@ -252,10 +213,7 @@ def main() -> None:
         "split bucket) fuse into one codegen scan — the composed wall "
         "tracks bench/curate_scale.py's plus the decontam join, not a "
         "re-scan per stage.\n"
-    )
-    from bench.scaling import _update_bench_md
-
-    _update_bench_md(ROOT, None, section)
+    ))
 
 
 if __name__ == "__main__":

@@ -37,87 +37,56 @@ the streaming-preparation deliverable.
 
 from __future__ import annotations
 
-import json
 import os
 import shutil
-import subprocess
 import sys
 import tempfile
 import time
 
-ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
-sys.path.insert(0, ROOT)
-
-_CHILD = r"""
-import json, os, shutil, sys, tempfile, time
-sys.path.insert(0, sys.argv[4])
-from pyspark.sql import functions as F
-from code_index_spark.session import get_spark
-from code_index_spark.streaming.prepare_stream import start_incremental_prepare
-from bench.prepare_scale import make_corpus
-
-cores = int(sys.argv[1]); n_docs = int(sys.argv[2]); n_batches = int(sys.argv[3])
-per = n_docs // n_batches
-spark = get_spark(f"prepstream{cores}", cores=cores, shuffle_partitions=32)
-docs, ev = make_corpus(spark, n_docs)
-work = tempfile.mkdtemp(prefix=f"prepstream{cores}_")
-in_dir = os.path.join(work, "in")
-for b in range(n_batches):
-    (docs.filter((F.col("doc_id") >= b * per) & (F.col("doc_id") < (b + 1) * per))
-     .coalesce(1).write.mode("append").parquet(in_dir))
-    time.sleep(1.05)
-rates = []
-for trial in range(2):   # trial 0 warms the JVM; trial 1 is reported
-    state = os.path.join(work, f"state{trial}")
-    ck = os.path.join(work, f"ck{trial}")
-    t0 = time.perf_counter()
-    start_incremental_prepare(
-        spark, in_dir, state, ck, ev, "doc_id long, text string",
-        decontam_gram_n=8,
-    ).awaitTermination()
-    rates.append(round(n_docs / (time.perf_counter() - t0)))
-shutil.rmtree(work, ignore_errors=True)
-print(json.dumps({"cores": cores, "warm_rate": rates[1], "rates": rates}))
-"""
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
+from bench.harness import n_vs_4n, report, scaling_table, timed  # noqa: E402
 
 
-def _run_level(cores: int, n_docs: int, n_batches: int) -> dict:
-    out = subprocess.run(
-        [sys.executable, "-c", _CHILD, str(cores), str(n_docs),
-         str(n_batches), ROOT],
-        capture_output=True, text=True, cwd=ROOT, check=True,
-    )
-    return json.loads(out.stdout.strip().splitlines()[-1])
+def write_batches(docs, n_docs: int, n_batches: int, in_dir: str) -> None:
+    """One parquet file per micro-batch of contiguous doc_ids, written
+    in batch order (the file source picks files oldest-mtime-first);
+    fixture cost stays outside the measured stream."""
+    from pyspark.sql import functions as F
+
+    per = n_docs // n_batches
+    for b in range(n_batches):
+        (docs.filter((F.col("doc_id") >= b * per)
+                     & (F.col("doc_id") < (b + 1) * per))
+         .coalesce(1).write.mode("append").parquet(in_dir))
+        time.sleep(1.05)  # distinct mtimes → deterministic batch order
 
 
-def _scaling(n_docs: int, n_batches: int, n_lo: int) -> None:
-    n_hi = n_lo * 4
-    lo = _run_level(n_lo, n_docs, n_batches)
-    hi = _run_level(n_hi, n_docs, n_batches)
-    eff = round(hi["warm_rate"] / lo["warm_rate"] / 4, 3)
-    out = {"metric": "prepare_stream_scaling", "n_docs": n_docs,
-           "n_batches": n_batches, "lo": lo, "hi": hi, "efficiency": eff}
-    print(json.dumps(out), flush=True)
-    section = (
-        "## Incremental preparation scaling (N vs 4N)\n\n"
-        f"({n_docs} docs in {n_batches} micro-batches, "
-        "bench/prepare_stream_scale.py --scaling: fresh JVM per level, "
-        "first full stream run discarded as warmup, second reported; "
-        "shuffle width data-sized and equal across levels.) The "
-        "measured unit is the WHOLE stream — per-row signal codegen + "
-        "registry join + state writes + streaming commit overhead — "
-        "so the efficiency carries the per-batch fixed costs the batch "
-        "twin amortizes (see the composed-preparation scaling section "
-        "for the F + W/N decomposition of exactly this effect).\n\n"
-        "| parallelism | docs/sec (warm) | trials |\n|---|---|---|\n"
-        f"| local[{n_lo}] | {lo['warm_rate']} | {lo['rates']} |\n"
-        f"| local[{n_hi}] | {hi['warm_rate']} | {hi['rates']} |\n\n"
-        f"**Scaling efficiency {n_lo}→{n_hi}: {eff}** "
-        "(hypervisor-steal caveats as in the header section).\n"
-    )
-    from bench.scaling import _update_bench_md
+def stream_level(cores: int, n_docs: int, n_batches: int) -> dict:
+    """One parallelism level (run in a fresh JVM): two full stream runs
+    over the same batches; the first warms the JVM, the second is
+    reported."""
+    from bench.prepare_scale import make_corpus
+    from code_index_spark.session import get_spark
+    from code_index_spark.streaming.prepare_stream import start_incremental_prepare
 
-    _update_bench_md(ROOT, None, section)
+    spark = get_spark(f"prepstream{cores}", cores=cores, shuffle_partitions=32)
+    docs, ev = make_corpus(spark, n_docs)
+    work = tempfile.mkdtemp(prefix=f"prepstream{cores}_")
+    in_dir = os.path.join(work, "in")
+    write_batches(docs, n_docs, n_batches, in_dir)
+
+    def run():
+        run_dir = tempfile.mkdtemp(dir=work)
+        start_incremental_prepare(
+            spark, in_dir, os.path.join(run_dir, "state"),
+            os.path.join(run_dir, "ck"), ev, "doc_id long, text string",
+            decontam_gram_n=8,
+        ).awaitTermination()
+
+    runs = timed(run, 2, warm=False).runs
+    shutil.rmtree(work, ignore_errors=True)
+    return {"cores": cores, "warm_rate": round(n_docs / runs[1]),
+            "rates": [round(n_docs / s) for s in runs]}
 
 
 def main() -> None:
@@ -129,7 +98,22 @@ def main() -> None:
         n_lo = (int(sys.argv[idx + 1])
                 if idx + 1 < len(sys.argv) and sys.argv[idx + 1].isdigit()
                 else 2)
-        _scaling(n_docs, n_batches, n_lo)
+        lo, hi, eff = n_vs_4n(stream_level, n_lo, "warm_rate", n_docs, n_batches)
+        report(
+            {"metric": "prepare_stream_scaling", "n_docs": n_docs,
+             "n_batches": n_batches, "lo": lo, "hi": hi, "efficiency": eff},
+            "## Incremental preparation scaling (N vs 4N)\n\n"
+            f"({n_docs} docs in {n_batches} micro-batches, "
+            "bench/prepare_stream_scale.py --scaling: fresh JVM per level, "
+            "first full stream run discarded as warmup, second reported; "
+            "shuffle width data-sized and equal across levels.) The "
+            "measured unit is the WHOLE stream — per-row signal codegen + "
+            "registry join + state writes + streaming commit overhead — "
+            "so the efficiency carries the per-batch fixed costs the batch "
+            "twin amortizes (see the composed-preparation scaling section "
+            "for the F + W/N decomposition of exactly this effect).\n\n"
+            + scaling_table(lo, hi, eff, "docs/sec (warm)", "warm_rate"),
+        )
         return
     per = n_docs // n_batches
     assert per % 10 == 0, "batch size must be a decade multiple (fixture)"
@@ -161,14 +145,7 @@ def main() -> None:
     in_dir = os.path.join(work, "in")
     state_dir = os.path.join(work, "state")
     ck_dir = os.path.join(work, "ck")
-    # one parquet file per micro-batch, written in batch order (the
-    # file source picks files oldest-mtime-first); fixture cost stays
-    # outside the measured stream
-    for b in range(n_batches):
-        (docs.filter((F.col("doc_id") >= b * per)
-                     & (F.col("doc_id") < (b + 1) * per))
-         .coalesce(1).write.mode("append").parquet(in_dir))
-        time.sleep(1.05)  # distinct mtimes → deterministic batch order
+    write_batches(docs, n_docs, n_batches, in_dir)
 
     t0 = time.perf_counter()
     q = start_incremental_prepare(
@@ -205,11 +182,10 @@ def main() -> None:
         "compact_wall_sec": round(compact_wall, 1),
         "planted_mix_ok": mix_ok,
     }
-    print(json.dumps(out), flush=True)
     shutil.rmtree(work, ignore_errors=True)
 
     walls_str = ", ".join(f"{w:.1f}" for w in batch_walls)
-    section = (
+    report(out, (
         "## Incremental preparation (streaming) at scale\n\n"
         f"({n_docs} docs in {n_batches} micro-batches of {per}, "
         "local[32], bench/prepare_stream_scale.py over the "
@@ -231,10 +207,7 @@ def main() -> None:
         f"{compact_wall:.1f} s |\n"
         f"| planted mix after compaction | {'exact' if mix_ok else f'MISMATCH {mix} pii={n_pii}'} "
         f"({tenth} per reject family, {n_docs // 2} keep, {tenth} PII) |\n"
-    )
-    from bench.scaling import _update_bench_md
-
-    _update_bench_md(ROOT, None, section)
+    ))
 
 
 if __name__ == "__main__":

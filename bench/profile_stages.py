@@ -24,8 +24,8 @@ import os
 import sys
 import time
 
-ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
-sys.path.insert(0, ROOT)
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
+from bench.harness import cores  # noqa: E402
 
 
 def main() -> None:
@@ -38,8 +38,7 @@ def main() -> None:
 
     from code_index_spark.session import get_spark
 
-    spark = get_spark("profile-stages",
-                      cores=int(os.environ.get("SPARK_GRAFT_CPUS", 32)))
+    spark = get_spark("profile-stages", cores=cores())
     sc = spark.sparkContext
     docs = spark.read.parquet(os.path.join(sf_dir, "documents.parquet"))
     docs.count()

@@ -24,15 +24,13 @@ and prints one JSON line.
 
 from __future__ import annotations
 
-import json
 import os
 import sys
 import time
 
-ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
-sys.path.insert(0, ROOT)
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
+from bench.harness import cores, report  # noqa: E402
 
-SECTION = "## Semantic dedup at scale"
 DIM = 64
 SIGN_COORDS = 18
 THRESHOLD = 0.8
@@ -104,8 +102,7 @@ def main() -> None:
     if "--scaling" in sys.argv:
         scaling_n = int(sys.argv[sys.argv.index("--scaling") + 1])
 
-    cores = int(os.environ.get("SPARK_GRAFT_CPUS", 32))
-    wall, agg = _run(cores, n)
+    wall, agg = _run(cores(), n)
     planted = n // 10
 
     eff = None
@@ -126,15 +123,13 @@ def main() -> None:
         "wall_sec": wall,
         "vecs_per_sec": round(n / wall, 1),
         "scaling_eff": eff,
-        "cores": cores,
+        "cores": cores(),
     }
-    print(json.dumps(out))
-
     lines = [
-        SECTION,
+        "## Semantic dedup at scale",
         "",
         f"({n} vectors dim {DIM}, sign_coords {SIGN_COORDS} "
-        f"(2^{SIGN_COORDS} cells), threshold {THRESHOLD}, local[{cores}], "
+        f"(2^{SIGN_COORDS} cells), threshold {THRESHOLD}, local[{cores()}], "
         "bench/semdedup_scale.py; every 10th vector a planted near-copy "
         "(cell-exact by construction, cosine ≈ 0.999) so the wall comes "
         "with a recall check)",
@@ -153,20 +148,7 @@ def main() -> None:
             f"{walls[scaling_n]}s → {walls[4 * scaling_n]}s, "
             f"efficiency {eff} |"
         )
-    lines.append("")
-
-    p = os.path.join(ROOT, "BENCH.md")
-    with open(p) as f:
-        txt = f.read()
-    block = "\n".join(lines)
-    if SECTION in txt:
-        start = txt.index(SECTION)
-        nxt = txt.find("\n## ", start + 1)
-        txt = txt[:start] + block + (txt[nxt + 1:] if nxt != -1 else "")
-    else:
-        txt = txt.rstrip() + "\n\n" + block + "\n"
-    with open(p, "w") as f:
-        f.write(txt)
+    report(out, "\n".join(lines))
 
 
 if __name__ == "__main__":
