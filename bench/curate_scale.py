@@ -52,7 +52,7 @@ import sys
 import time
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
-from bench.harness import cores, report  # noqa: E402
+from bench.harness import base36_token, cores, report  # noqa: E402
 
 
 def main() -> None:
@@ -72,39 +72,33 @@ def main() -> None:
 
     spark = get_spark("curate-scale", cores=cores())
 
-    def tok(tag, id_expr):
-        return F.lower(F.conv(
-            F.substring(F.md5(F.concat(F.lit(tag), id_expr.cast("string"))), 1, 12),
-            16, 36,
-        ))
-
     def body(id_expr):
         # 13 words: English stopwords interleaved with high-entropy
         # base36 tokens — quality 1.0, lang en, near-zero cross-doc
         # gram overlap (CLAUDE.md: base36, not hex, for gram entropy)
-        parts = [F.lit("the"), tok("a", id_expr), F.lit("and"),
-                 tok("b", id_expr), F.lit("of"), tok("c", id_expr),
-                 tok("d", id_expr), F.lit("to"), tok("e", id_expr),
-                 tok("f", id_expr), F.lit("in"), tok("g", id_expr),
-                 tok("h", id_expr)]
+        parts = [F.lit("the"), base36_token("a", id_expr), F.lit("and"),
+                 base36_token("b", id_expr), F.lit("of"), base36_token("c", id_expr),
+                 base36_token("d", id_expr), F.lit("to"), base36_token("e", id_expr),
+                 base36_token("f", id_expr), F.lit("in"), base36_token("g", id_expr),
+                 base36_token("h", id_expr)]
         return F.concat_ws(" ", *parts)
 
     bucket = F.col("id") % 10
     text = (
         F.when(bucket == 1, body(F.col("id") - 1))
         .when(bucket == 2, F.concat(body(F.col("id") - 2), F.lit(" "),
-                                    tok("x", F.col("id"))))
+                                    base36_token("x")))
         .when(bucket == 3,
-              F.concat(F.lit("!!! ??? ,,. "), tok("j", F.col("id"))) if clique
+              F.concat(F.lit("!!! ??? ,,. "), base36_token("j")) if clique
               else F.concat_ws(
                   " ",
-                  F.concat(F.lit("!!"), tok("i", F.col("id"))),
-                  F.concat(F.lit("??"), tok("j", F.col("id"))),
-                  F.concat(F.lit(",,."), tok("jj", F.col("id")))))
+                  F.concat(F.lit("!!"), base36_token("i")),
+                  F.concat(F.lit("??"), base36_token("j")),
+                  F.concat(F.lit(",,."), base36_token("jj"))))
         .when(bucket == 4, F.concat_ws(
-            " ", F.lit("le"), tok("k", F.col("id")), F.lit("et"),
-            tok("m", F.col("id")), F.lit("la"), tok("n", F.col("id")),
-            tok("p", F.col("id")), tok("q", F.col("id"))))
+            " ", F.lit("le"), base36_token("k"), F.lit("et"),
+            base36_token("m"), F.lit("la"), base36_token("n"),
+            base36_token("p"), base36_token("q")))
         .otherwise(body(F.col("id")))
     )
     docs = (

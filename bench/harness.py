@@ -79,6 +79,22 @@ _BOOTSTRAP = (
 )
 
 
+def base36_token(tag: str, id_col="id"):
+    """A pseudo-random fixture token per row: 12 hex chars of
+    md5(tag || id) rendered in base36. Base36, not hex: real identifier
+    vocabularies draw from the full [a-z0-9] alphabet, whose ~50k
+    char-trigram universe keeps random-pair jaccard realistic; hex
+    tokens cap the universe at ~5k and inflate the collision noise
+    floor ~10x beyond anything a real corpus shows. id_col is a column
+    name or a Column."""
+    from pyspark.sql import functions as F
+
+    ids = F.col(id_col) if isinstance(id_col, str) else id_col
+    return F.lower(F.conv(
+        F.substring(F.md5(F.concat(F.lit(tag), ids.cast("string"))), 1, 12), 16, 36,
+    ))
+
+
 def fresh_jvm(fn: Callable[..., dict], *args) -> dict:
     """fn(*args) in a new Python process, so in a new JVM. fn is a
     module-level function; args and the result travel as JSON. A failed

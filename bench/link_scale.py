@@ -46,7 +46,7 @@ import sys
 import time
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
-from bench.harness import ROOT, cores, report  # noqa: E402
+from bench.harness import ROOT, base36_token, cores, report  # noqa: E402
 
 
 # perfbench/baseline.json "link_scaling": (turns, person families,
@@ -169,20 +169,18 @@ def main() -> None:
 
     spark = get_spark("link-scale", cores=cores(), shuffle_partitions=64)
 
-    def tok(tag):
-        return F.lower(F.conv(
-            F.substring(F.md5(F.concat(F.lit(tag), F.col("id").cast("string"))), 1, 12),
-            16, 36,
-        ))
-
     base = spark.range(n_base).select(
-        "id", F.concat_ws("_", tok("a"), tok("b"), tok("c")).alias("surface")
+        "id",
+        F.concat_ws("_", base36_token("a"), base36_token("b"), base36_token("c"))
+        .alias("surface"),
     )
     fam = base.filter(F.col("id") % 3 == 0)
     v1 = fam.select("id", F.concat(F.col("surface"), F.lit("s")).alias("surface"))
     v2 = fam.select("id", F.concat(F.col("surface"), F.lit("es")).alias("surface"))
     mid = base.filter(F.col("id") % 3 == 1).select(
-        "id", F.concat_ws("_", tok("a"), tok("b"), tok("z")).alias("surface")
+        "id",
+        F.concat_ws("_", base36_token("a"), base36_token("b"), base36_token("z"))
+        .alias("surface"),
     )
     surfaces = (
         base.select("surface")

@@ -32,7 +32,7 @@ import sys
 import time
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
-from bench.harness import cores  # noqa: E402
+from bench.harness import base36_token, cores  # noqa: E402
 
 
 def main() -> None:
@@ -46,20 +46,11 @@ def main() -> None:
 
     spark = get_spark("lsh-recall", cores=cores(), shuffle_partitions=64)
 
-    def tok(tag):
-        # base36 (not hex) tokens: real identifier vocabularies draw
-        # from the full [a-z0-9] alphabet, whose ~50k char-trigram
-        # universe keeps random-pair jaccard realistic; hex tokens cap
-        # the universe at ~5k and inflate the collision noise floor
-        # ~10x beyond anything a real corpus shows
-        return F.lower(F.conv(
-            F.substring(F.md5(F.concat(F.lit(tag), F.col("id").cast("string"))), 1, 12),
-            16, 36,
-        ))
-
     base = (
         spark.range(n_base)
-        .select("id", F.concat_ws("_", tok("a"), tok("b"), tok("c")).alias("surface"))
+        .select("id", F.concat_ws(
+            "_", base36_token("a"), base36_token("b"), base36_token("c")
+        ).alias("surface"))
     )
     # planted variants: id%4==0 -> plural (high sim); id%4==1 -> last
     # token swapped (mid sim, straddles the 0.4 threshold)
@@ -69,7 +60,8 @@ def main() -> None:
     )
     mid = base.filter(F.col("id") % 4 == 1).select(
         "id", F.col("surface").alias("surface_base"),
-        F.concat_ws("_", tok("a"), tok("b"), tok("z")).alias("surface_var"),
+        F.concat_ws("_", base36_token("a"), base36_token("b"), base36_token("z"))
+        .alias("surface_var"),
     )
     planted = hi.unionByName(mid)
     surfaces = (

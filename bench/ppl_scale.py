@@ -29,7 +29,7 @@ import sys
 import time
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
-from bench.harness import cores, report  # noqa: E402
+from bench.harness import base36_token, cores, report  # noqa: E402
 
 
 def make_scored_corpus(spark, n_docs: int):
@@ -40,17 +40,10 @@ def make_scored_corpus(spark, n_docs: int):
 
     from code_index_spark.operators.textstats import unigram_lm_scores
 
-    def tok(tag):
-        return F.lower(F.conv(
-            F.substring(
-                F.md5(F.concat(F.lit(tag), F.col("id").cast("string"))), 1, 12
-            ),
-            16, 36,
-        ))
-
     body = F.concat_ws(
-        " ", F.lit("the"), tok("a"), F.lit("and"), tok("b"), F.lit("of"),
-        tok("c"), tok("d"), F.lit("to"), tok("e"), tok("f"),
+        " ", F.lit("the"), base36_token("a"), F.lit("and"), base36_token("b"),
+        F.lit("of"), base36_token("c"), base36_token("d"), F.lit("to"),
+        base36_token("e"), base36_token("f"),
     )
     docs = (
         spark.range(n_docs)

@@ -52,7 +52,9 @@ import sys
 import time
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
-from bench.harness import cores, n_vs_4n, report, scaling_table, timed  # noqa: E402
+from bench.harness import (  # noqa: E402
+    base36_token, cores, n_vs_4n, report, scaling_table, timed,
+)
 
 
 def make_corpus(spark, n_docs: int):
@@ -62,44 +64,38 @@ def make_corpus(spark, n_docs: int):
 
     n_eval = n_docs // 10
 
-    def tok(tag, id_expr):
-        return F.lower(F.conv(
-            F.substring(F.md5(F.concat(F.lit(tag), id_expr.cast("string"))), 1, 12),
-            16, 36,
-        ))
-
     def eval_window(ev_id):
         # the 8-word eval-doc body, shared verbatim by train doc 10*ev_id+5
         return F.concat_ws(
-            " ", *[tok(f"ev{i}", ev_id) for i in range(8)]
+            " ", *[base36_token(f"ev{i}", ev_id) for i in range(8)]
         )
 
     def body(id_expr):
-        parts = [F.lit("the"), tok("a", id_expr), F.lit("and"),
-                 tok("b", id_expr), F.lit("of"), tok("c", id_expr),
-                 tok("d", id_expr), F.lit("to"), tok("e", id_expr),
-                 tok("f", id_expr), F.lit("in"), tok("g", id_expr),
-                 tok("h", id_expr)]
+        parts = [F.lit("the"), base36_token("a", id_expr), F.lit("and"),
+                 base36_token("b", id_expr), F.lit("of"), base36_token("c", id_expr),
+                 base36_token("d", id_expr), F.lit("to"), base36_token("e", id_expr),
+                 base36_token("f", id_expr), F.lit("in"), base36_token("g", id_expr),
+                 base36_token("h", id_expr)]
         return F.concat_ws(" ", *parts)
 
     bucket = F.col("id") % 10
     text = (
         F.when(bucket == 1, body(F.col("id") - 1))
         .when(bucket == 2, F.concat(body(F.col("id") - 2), F.lit(" "),
-                                    tok("x", F.col("id"))))
+                                    base36_token("x")))
         .when(bucket == 3, F.concat_ws(
             " ",
-            F.concat(F.lit("!!"), tok("i", F.col("id"))),
-            F.concat(F.lit("??"), tok("j", F.col("id"))),
-            F.concat(F.lit(",,."), tok("jj", F.col("id")))))
+            F.concat(F.lit("!!"), base36_token("i")),
+            F.concat(F.lit("??"), base36_token("j")),
+            F.concat(F.lit(",,."), base36_token("jj"))))
         .when(bucket == 4, F.concat_ws(
-            " ", F.lit("le"), tok("k", F.col("id")), F.lit("et"),
-            tok("m", F.col("id")), F.lit("la"), tok("n", F.col("id")),
-            tok("p", F.col("id")), tok("q", F.col("id"))))
+            " ", F.lit("le"), base36_token("k"), F.lit("et"),
+            base36_token("m"), F.lit("la"), base36_token("n"),
+            base36_token("p"), base36_token("q")))
         .when(bucket == 5, F.concat_ws(
-            " ", F.lit("the"), tok("a", F.col("id")), F.lit("and"),
+            " ", F.lit("the"), base36_token("a"), F.lit("and"),
             eval_window(F.floor(F.col("id") / 10).cast("long")), F.lit("of"),
-            tok("b", F.col("id"))))
+            base36_token("b")))
         .when(bucket == 6, F.concat_ws(
             " ", body(F.col("id")),
             F.concat(F.lit("user"), F.col("id").cast("string"),

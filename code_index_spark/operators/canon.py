@@ -96,17 +96,16 @@ def connected_components(
     )
     n_edges = edges.count()
     if n_edges == 0:
-        return _labels_from_edges(edges, pairs)
+        return _surface_labels(pairs, _edge_labels(edges))
     if n_edges <= driver_max_edges:
-        labels = _driver_union_find(spark, edges)
-        return _labels_from_surfaces(labels, pairs)
+        return _surface_labels(pairs, F.broadcast(_driver_union_find(spark, edges)))
     # size the loop's shuffles to the DATA (CLAUDE.md: tiny graphs at
     # session width are scheduling-overhead-bound) — plan-locally via
     # repartition inside _star_round, never by mutating session conf
     session_parts = int(spark.conf.get("spark.sql.shuffle.partitions"))
     loop_parts = max(2, min(session_parts, n_edges // 200_000 + 1))
     edges = _cc_loop(edges, max_iter, loop_parts)
-    return _labels_from_edges(edges, pairs)
+    return _surface_labels(pairs, _edge_labels(edges))
 
 
 def _driver_union_find(spark, edges: DataFrame) -> DataFrame:
@@ -131,14 +130,16 @@ def _driver_union_find(spark, edges: DataFrame) -> DataFrame:
     return spark.createDataFrame(rows, "node long, component long")
 
 
-def _labels_from_surfaces(labels: DataFrame, pairs: DataFrame) -> DataFrame:
+def _surface_labels(pairs: DataFrame, labels: DataFrame) -> DataFrame:
+    """Every surface of pairs with its component label (node = the
+    surface's xxhash64); an unlabelled node is its own component."""
     surf_ids = (
         pairs.select(F.col("surface_a").alias("surface"))
         .union(pairs.select("surface_b"))
         .distinct()
         .withColumn("node", F.xxhash64("surface"))
     )
-    return surf_ids.join(F.broadcast(labels), "node", "left").select(
+    return surf_ids.join(labels, "node", "left").select(
         "surface",
         F.coalesce("component", "node").alias("component"),
     )
@@ -166,20 +167,8 @@ def _cc_loop(
     return edges
 
 
-def _labels_from_edges(edges: DataFrame, pairs: DataFrame) -> DataFrame:
+def _edge_labels(edges: DataFrame) -> DataFrame:
     # after convergence every edge is (node → component-min root)
     labels = edges.select(F.col("u").alias("node"), F.col("v").alias("component"))
     roots = edges.select(F.col("v").alias("node"), F.col("v").alias("component")).distinct()
-    labels = labels.union(roots).groupBy("node").agg(F.min("component").alias("component"))
-
-    # map node ids back to surfaces
-    surf_ids = (
-        pairs.select(F.col("surface_a").alias("surface"))
-        .union(pairs.select("surface_b"))
-        .distinct()
-        .withColumn("node", F.xxhash64("surface"))
-    )
-    return surf_ids.join(labels, "node", "left").select(
-        "surface",
-        F.coalesce("component", "node").alias("component"),
-    )
+    return labels.union(roots).groupBy("node").agg(F.min("component").alias("component"))

@@ -26,7 +26,7 @@ from __future__ import annotations
 from collections.abc import Iterator
 
 import pandas as pd
-from pyspark.sql import functions as F
+from pyspark.sql import Column, functions as F
 
 from ..rules import ALL, RULES, RULES_BY_ROLE, Rule
 from ..schema import TRIPLES_FLAT_DDL
@@ -70,43 +70,24 @@ def extract_triples(transcripts_df):
     def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
             cols: dict[str, list] = {c: [] for c in _COLUMNS}
-            ap = {c: cols[c].append for c in _COLUMNS}
             # group by role so the rule list resolves once per group
             for role, grp in pdf.groupby("role", sort=False):
                 rules = RULES_BY_ROLE.get(role)
                 if not rules:
                     continue
-                convs = grp["conv_id"].values
-                idxs = grp["turn_idx"].values
-                texts = grp["text"].values
-                for j in range(len(texts)):
-                    text = texts[j]
-                    if not text:
+                for conv_id, turn_idx, text in zip(
+                    grp["conv_id"].values, grp["turn_idx"].values, grp["text"].values
+                ):
+                    matches = extract_turn(text, role, rules)
+                    if not matches:
                         continue
-                    conv_id = convs[j]
-                    turn_idx = int(idxs[j])
-                    subj = None
-                    for rule in rules:
-                        anchors = rule.anchors
-                        if anchors is not None and not any(a in text for a in anchors):
-                            continue  # necessary-substring prefilter
-                        g = rule.group
-                        rid = rule.rule_id
-                        cat = rule.category
-                        conf = rule.confidence
-                        for m in rule.compiled.finditer(text):
-                            if subj is None:
-                                subj = f"{conv_id}#{turn_idx}"
-                            s, e = m.span(g)
-                            ap["conv_id"](conv_id)
-                            ap["turn_idx"](turn_idx)
-                            ap["subj"](subj)
-                            ap["pred"](cat)
-                            ap["obj"](text[s:e])
-                            ap["span_start"](s)
-                            ap["span_end"](e)
-                            ap["rule_id"](rid)
-                            ap["confidence"](conf)
+                    turn_idx = int(turn_idx)
+                    n = len(matches)
+                    cols["conv_id"] += [conv_id] * n
+                    cols["turn_idx"] += [turn_idx] * n
+                    cols["subj"] += [f"{conv_id}#{turn_idx}"] * n
+                    for c, vals in zip(_COLUMNS[3:], zip(*matches)):
+                        cols[c] += vals
             yield pd.DataFrame(cols)
 
     return transcripts_df.select("conv_id", "turn_idx", "role", "text").mapInPandas(
@@ -114,20 +95,14 @@ def extract_triples(transcripts_df):
     )
 
 
-def extract_triples_sql(transcripts_df):
-    """Pure-Catalyst extraction from the same rule table — the JVM twin
-    of extract_triples for consumers that don't need span offsets.
+def rule_matches() -> Column:
+    """Every role-gated rule match of a transcripts row as one exploded
+    struct(pred, obj, rule_id, confidence) — the Catalyst generator that
+    extract_triples_sql and the windowed counts both select.
 
-    Single pass over the scan: every rule's regexp_extract_all runs as a
-    codegen'd expression, per-rule matches are tagged with (pred,
-    rule_id, confidence) via transform(), role-gated arrays are
-    flattened and exploded ONCE. No shuffle, no Python worker, no Arrow
-    transfer — the whole stage is WholeStageCodegen over the scan.
-    Yields the identical (conv_id, turn_idx, subj, pred, obj, rule_id,
-    confidence) multiset as the Python path (asserted by
-    tests/test_extract.py); span_start/span_end are the one column pair
-    only the mapInPandas path carries (Java regex does not expose match
-    offsets through regexp_extract_all)."""
+    Every rule's regexp_extract_all runs as a codegen'd expression,
+    per-rule matches are tagged with (pred, rule_id, confidence) via
+    transform(), role-gated arrays are flattened and exploded ONCE."""
     def _tagger(rule: Rule):
         # closure, NOT a 2-arg lambda: transform() treats a second lambda
         # parameter as the element index
@@ -146,17 +121,26 @@ def extract_triples_sql(transcripts_df):
             empty = F.slice(tagged, 1, 0)  # typed empty array
             tagged = F.when(F.col("role").isin(*r.roles), tagged).otherwise(empty)
         arrs.append(tagged)
-    m = F.explode(F.flatten(F.array(*arrs)))
-    return (
-        transcripts_df.select("conv_id", "turn_idx", "role", "text")
-        .select("conv_id", "turn_idx", m.alias("m"))
-        .select(
-            "conv_id",
-            "turn_idx",
-            F.concat_ws("#", "conv_id", "turn_idx").alias("subj"),
-            F.col("m.pred").alias("pred"),
-            F.col("m.obj").alias("obj"),
-            F.col("m.rule_id").alias("rule_id"),
-            F.col("m.confidence").alias("confidence"),
-        )
+    return F.explode(F.flatten(F.array(*arrs)))
+
+
+def extract_triples_sql(transcripts_df):
+    """Pure-Catalyst extraction from the same rule table — the JVM twin
+    of extract_triples for consumers that don't need span offsets.
+
+    Single pass over the scan (`rule_matches`). No shuffle, no Python
+    worker, no Arrow transfer — the whole stage is WholeStageCodegen
+    over the scan. Yields the identical (conv_id, turn_idx, subj, pred,
+    obj, rule_id, confidence) multiset as the Python path (asserted by
+    tests/test_extract.py); span_start/span_end are the one column pair
+    only the mapInPandas path carries (Java regex does not expose match
+    offsets through regexp_extract_all)."""
+    return transcripts_df.select("conv_id", "turn_idx", rule_matches().alias("m")).select(
+        "conv_id",
+        "turn_idx",
+        F.concat_ws("#", "conv_id", "turn_idx").alias("subj"),
+        F.col("m.pred").alias("pred"),
+        F.col("m.obj").alias("obj"),
+        F.col("m.rule_id").alias("rule_id"),
+        F.col("m.confidence").alias("confidence"),
     )

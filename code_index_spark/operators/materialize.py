@@ -14,10 +14,16 @@ pairwise co_mention edges between distinct entities of the turn.
 Object literals get deterministic ids (xxhash64 of category:text),
 exactly the reference's uuid5-of-content discipline.
 
-Scale notes: the only shuffles are (a) the surface→entity broadcast-able
-join (distinct surfaces ≪ mentions) and (b) the per-turn self-join,
-which is bounded — keys are (conv_id, turn_idx), cardinality per key is
-mentions-per-turn (small constant), so no skew blowup at 10^12 turns.
+Scale notes: the surface→entity join is broadcast (distinct surfaces ≪
+mentions), and the edge build is one groupBy(conv_id, turn_idx) that
+collects each turn's endpoints into one array and expands the edges
+inside that array (no self-join; zero exchanges when the input is
+already partitioned by conv_id). Nothing caps mentions per turn: a turn
+with n distinct entities and m distinct objects builds its n·m
+entity→object and n(n−1)/2 co_mention structs as one array in one row,
+so a single pathological turn is quadratic in memory (ROADMAP.md
+item 4, the bounded edge build, measured n = 8,000 — about 32M pairs —
+wedging an 8g driver).
 """
 
 from __future__ import annotations
@@ -84,8 +90,9 @@ def build_edges(triples: DataFrame, entity_map: DataFrame) -> DataFrame:
     JVM is memory bandwidth, not shuffle (BENCH.md sf1 notes). Measured
     2-3× faster than the two-shuffle (dedup-groupBy then collect-
     groupBy) formulation at sf0.1, identical output multiset. Per-turn
-    fanout is bounded (mentions-per-turn is a small constant), so no
-    skew at 10^12 turns."""
+    fanout is NOT bounded: a turn's edges are quadratic in its distinct
+    entities and live in one array of one row (see the module docstring
+    and ROADMAP.md item 4)."""
     keyed = (
         triples.join(
             F.broadcast(entity_map.select(F.col("surface").alias("obj"), "entity_id")),

@@ -12,6 +12,11 @@ Semantics matched to the reference spec:
   parent_block_id "chunk_<start>_<end>" (chunking.py:59-75);
 - segment_hash = text_hash + start_line (+ "_partN") (chunking.py:62,78).
 
+Paragraph and line-window segments follow the same row, split and id
+convention with their own parent prefix and hash suffix (`_IDS`); every
+segment type goes through the one emitter `_emit`, and the turn's md5
+is computed at most once, on its first emitted row.
+
 Execution shape: one `mapInPandas` over the transcripts table — a
 flatMap (1 turn → N segment rows) that stays Arrow-batched end to end.
 No shuffle: segmentation is embarrassingly parallel per turn, so the
@@ -23,7 +28,9 @@ from __future__ import annotations
 
 import hashlib
 import re
-from collections.abc import Iterator
+from collections.abc import Callable, Iterator
+from functools import lru_cache
+from operator import itemgetter
 from typing import Any
 
 import pandas as pd
@@ -54,6 +61,23 @@ FALLBACK_WINDOW_LINES = 5
 _KV_ANY = re.compile(r"^[a-z_][a-z0-9_]*=[^\n]+$", re.M | re.ASCII)
 _EMPTY = re.compile(r"\s*", re.ASCII)
 _URL = re.compile(r"https?://")
+
+# seg_type → (parent_block_id prefix of split parts, segment_hash
+# suffix); kv_section rows are never split: the kv_section_stats oracle
+# counts one row per run
+_IDS = {
+    "chunk": ("chunk_", ""),
+    "paragraph": ("para_", "_para"),
+    "line_window": ("win_", "_win"),
+    "kv_section": (None, "_kv"),
+}
+
+_COLUMNS = [
+    "conv_id", "turn_idx", "seg_type", "start_line", "end_line",
+    "content", "split_index", "split_total", "parent_block_id",
+    "segment_hash",
+]
+_SEG_FIELDS = itemgetter(*_COLUMNS[2:])
 
 
 def content_type_py(text: str | None) -> str:
@@ -102,55 +126,61 @@ def split_to_limit(content: str, max_chars: int = MAX_BLOCK_CHARS) -> list[str]:
     return pieces
 
 
+@lru_cache(maxsize=1)
+def _text_hash(text: str) -> str:
+    # one entry: every segment of a turn is emitted before the next
+    # turn's, so a turn's md5 is computed once however many rows it has
+    return hashlib.md5(text.encode("utf-8", errors="ignore")).hexdigest()
+
+
+def _emit(out: list, seg_type: str, text: str, start: int, end: int, content: str) -> None:
+    """Append the segment row for lines start..end (1-based), or — past
+    MAX_BLOCK_CHARS — its lossless split_to_limit parts, each carrying
+    split_index/split_total, the parent block id and a `_partN` hash."""
+    prefix, suffix = _IDS[seg_type]
+    seg_hash = f"{_text_hash(text)}{start}{suffix}"
+    parts = split_to_limit(content) if prefix else [content]
+    if len(parts) == 1:
+        out.append(dict(seg_type=seg_type, start_line=start, end_line=end,
+                        content=content, split_index=None, split_total=None,
+                        parent_block_id=None, segment_hash=seg_hash))
+        return
+    parent = f"{prefix}{start}_{end}"
+    for i, part in enumerate(parts, 1):
+        out.append(dict(seg_type=seg_type, start_line=start, end_line=end,
+                        content=part, split_index=i, split_total=len(parts),
+                        parent_block_id=parent, segment_hash=f"{seg_hash}_part{i}"))
+
+
+def _runs(lines: list[str], pred: Callable[[str], Any]) -> Iterator[tuple[int, int]]:
+    """(start, end) 1-based line spans of the maximal runs of lines
+    satisfying pred."""
+    start = None
+    for i, line in enumerate(lines):
+        if pred(line):
+            if start is None:
+                start = i
+        elif start is not None:
+            yield start + 1, i
+            start = None
+    if start is not None:
+        yield start + 1, len(lines)
+
+
 def chunk_turn(text: str) -> list[dict[str, Any]]:
     """Greedy line-packing chunker for one turn's text (pure function)."""
-    if text is None:
-        return []
-    text_hash = hashlib.md5(text.encode("utf-8", errors="ignore")).hexdigest()
-    lines = text.split("\n")
     out: list[dict[str, Any]] = []
-    buf: list[str] = []
-    buf_len = 0
-    start_line = 1
-    limit = MAX_BLOCK_CHARS * TOLERANCE
+    if text is None:
+        return out
+    lines = text.split("\n")
+    start, size = 0, 0
     for i, line in enumerate(lines):
-        buf.append(line)
-        buf_len += len(line) + 1
-        if buf_len >= limit or i == len(lines) - 1:
-            content = "\n".join(buf)
-            end_line = start_line + len(buf) - 1
+        size += len(line) + 1
+        if size >= MAX_BLOCK_CHARS * TOLERANCE or i == len(lines) - 1:
+            content = "\n".join(lines[start : i + 1])
             if len(content.strip()) >= MIN_BLOCK_CHARS:
-                if len(content) > MAX_BLOCK_CHARS:
-                    parts = split_to_limit(content)
-                    parent = f"chunk_{start_line}_{end_line}"
-                    for pi, part in enumerate(parts):
-                        out.append(
-                            dict(
-                                seg_type="chunk",
-                                start_line=start_line,
-                                end_line=end_line,
-                                content=part,
-                                split_index=pi + 1,
-                                split_total=len(parts),
-                                parent_block_id=parent,
-                                segment_hash=f"{text_hash}{start_line}_part{pi + 1}",
-                            )
-                        )
-                else:
-                    out.append(
-                        dict(
-                            seg_type="chunk",
-                            start_line=start_line,
-                            end_line=end_line,
-                            content=content,
-                            split_index=None,
-                            split_total=None,
-                            parent_block_id=None,
-                            segment_hash=f"{text_hash}{start_line}",
-                        )
-                    )
-            buf, buf_len = [], 0
-            start_line = i + 2
+                _emit(out, "chunk", text, start + 1, i + 1, content)
+            start, size = i + 1, 0
     return out
 
 
@@ -158,35 +188,13 @@ def kv_sections(text: str) -> list[dict[str, Any]]:
     """X9: typed kv_section segments for runs of consecutive key=value
     lines. Additive to the generic chunks — structured content gets a
     typed segment AND stays inside its chunk (lossless both ways)."""
-    if not text or "=" not in text:
-        return []
-    lines = text.split("\n")
     out: list[dict[str, Any]] = []
-    text_hash = None
-    run_start = None
-    for i in range(len(lines) + 1):
-        is_kv = i < len(lines) and _KV_LINE.match(lines[i]) is not None
-        if is_kv and run_start is None:
-            run_start = i
-        elif not is_kv and run_start is not None:
-            if i - run_start >= MIN_KV_RUN:
-                if text_hash is None:
-                    text_hash = hashlib.md5(
-                        text.encode("utf-8", errors="ignore")
-                    ).hexdigest()
-                out.append(
-                    dict(
-                        seg_type="kv_section",
-                        start_line=run_start + 1,
-                        end_line=i,
-                        content="\n".join(lines[run_start:i]),
-                        split_index=None,
-                        split_total=None,
-                        parent_block_id=None,
-                        segment_hash=f"{text_hash}{run_start + 1}_kv",
-                    )
-                )
-            run_start = None
+    if not text or "=" not in text:
+        return out
+    lines = text.split("\n")
+    for start, end in _runs(lines, _KV_LINE.match):
+        if end - start + 1 >= MIN_KV_RUN:
+            _emit(out, "kv_section", text, start, end, "\n".join(lines[start - 1 : end]))
     return out
 
 
@@ -198,50 +206,14 @@ def paragraphs(text: str) -> list[dict[str, Any]]:
     MIN_BLOCK_CHARS after strip are dropped (reference min-chunk
     discipline); blocks over MAX_BLOCK_CHARS split at line boundaries
     with the same split_index/parent convention as chunk splits."""
-    if text is None or not text.strip():
-        return []
-    text_hash = hashlib.md5(text.encode("utf-8", errors="ignore")).hexdigest()
-    lines = text.split("\n")
     out: list[dict[str, Any]] = []
-    run_start: int | None = None
-    for i in range(len(lines) + 1):
-        nonblank = i < len(lines) and lines[i].strip() != ""
-        if nonblank and run_start is None:
-            run_start = i
-        elif not nonblank and run_start is not None:
-            content = "\n".join(lines[run_start:i])
-            start_line, end_line = run_start + 1, i
-            if len(content.strip()) >= MIN_BLOCK_CHARS:
-                if len(content) > MAX_BLOCK_CHARS:
-                    parts = split_to_limit(content)
-                    parent = f"para_{start_line}_{end_line}"
-                    for pi, part in enumerate(parts):
-                        out.append(
-                            dict(
-                                seg_type="paragraph",
-                                start_line=start_line,
-                                end_line=end_line,
-                                content=part,
-                                split_index=pi + 1,
-                                split_total=len(parts),
-                                parent_block_id=parent,
-                                segment_hash=f"{text_hash}{start_line}_para_part{pi + 1}",
-                            )
-                        )
-                else:
-                    out.append(
-                        dict(
-                            seg_type="paragraph",
-                            start_line=start_line,
-                            end_line=end_line,
-                            content=content,
-                            split_index=None,
-                            split_total=None,
-                            parent_block_id=None,
-                            segment_hash=f"{text_hash}{start_line}_para",
-                        )
-                    )
-            run_start = None
+    if not text:
+        return out
+    lines = text.split("\n")
+    for start, end in _runs(lines, str.strip):
+        content = "\n".join(lines[start - 1 : end])
+        if len(content.strip()) >= MIN_BLOCK_CHARS:
+            _emit(out, "paragraph", text, start, end, content)
     return out
 
 
@@ -252,50 +224,19 @@ def line_windows(text: str, window: int = FALLBACK_WINDOW_LINES) -> list[dict[st
     truncated — so the fallback's no-drop invariant holds and
     (start_line, end_line) always span exactly the lines whose content
     the parts jointly carry (same split convention as chunk splits)."""
-    if text is None or not text.strip():
-        return []
-    text_hash = hashlib.md5(text.encode("utf-8", errors="ignore")).hexdigest()
-    lines = text.split("\n")
     out: list[dict[str, Any]] = []
+    if not text:
+        return out
+    lines = text.split("\n")
     for s in range(0, len(lines), window):
-        chunk_lines = lines[s : s + window]
-        content = "\n".join(chunk_lines)
-        if not content.strip():
-            continue
-        start_line, end_line = s + 1, s + len(chunk_lines)
-        if len(content) > MAX_BLOCK_CHARS:
-            parts = split_to_limit(content)
-            parent = f"win_{start_line}_{end_line}"
-            for pi, part in enumerate(parts):
-                out.append(
-                    dict(
-                        seg_type="line_window",
-                        start_line=start_line,
-                        end_line=end_line,
-                        content=part,
-                        split_index=pi + 1,
-                        split_total=len(parts),
-                        parent_block_id=parent,
-                        segment_hash=f"{text_hash}{start_line}_win_part{pi + 1}",
-                    )
-                )
-        else:
-            out.append(
-                dict(
-                    seg_type="line_window",
-                    start_line=start_line,
-                    end_line=end_line,
-                    content=content,
-                    split_index=None,
-                    split_total=None,
-                    parent_block_id=None,
-                    segment_hash=f"{text_hash}{start_line}_win",
-                )
-            )
+        window_lines = lines[s : s + window]
+        content = "\n".join(window_lines)
+        if content.strip():
+            _emit(out, "line_window", text, s + 1, s + len(window_lines), content)
     return out
 
 
-def segment_turn(text: str, hybrid: bool = True) -> list[dict[str, Any]]:
+def segment_turn(text: str) -> list[dict[str, Any]]:
     """Full cascade for one turn — the reference's route-by-type
     parse-else-chunk-else-window chain (tree_sitter → fallback parser →
     generic chunking → line windows):
@@ -306,49 +247,26 @@ def segment_turn(text: str, hybrid: bool = True) -> list[dict[str, Any]]:
     - kv runs additionally get typed kv_section segments (X9, additive);
     - the fixed line-window fallback (X8) catches turns everything else
       dropped, so no non-empty turn goes unrepresented."""
-    if not hybrid:
-        return chunk_turn(text)
     segs = paragraphs(text) if content_type_py(text) == "prose" else []
     if not segs:
         segs = chunk_turn(text)
-    segs = segs + kv_sections(text)
-    if not segs:
-        segs = line_windows(text)
-    return segs
+    segs += kv_sections(text)
+    return segs or line_windows(text)
 
 
-def segment(transcripts_df, hybrid: bool = True):
+def segment(transcripts_df):
     """transcripts → segments (flatMap via mapInPandas, Arrow-batched)."""
 
     def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
-            rows: list[tuple] = []
-            for conv_id, turn_idx, text in zip(
-                pdf["conv_id"].values, pdf["turn_idx"].values, pdf["text"].values
-            ):
-                for seg in segment_turn(text, hybrid=hybrid):
-                    rows.append(
-                        (
-                            conv_id,
-                            int(turn_idx),
-                            seg["seg_type"],
-                            seg["start_line"],
-                            seg["end_line"],
-                            seg["content"],
-                            seg["split_index"],
-                            seg["split_total"],
-                            seg["parent_block_id"],
-                            seg["segment_hash"],
-                        )
-                    )
-            yield pd.DataFrame(
-                rows,
-                columns=[
-                    "conv_id", "turn_idx", "seg_type", "start_line", "end_line",
-                    "content", "split_index", "split_total", "parent_block_id",
-                    "segment_hash",
-                ],
-            )
+            rows = [
+                (conv_id, int(turn_idx), *_SEG_FIELDS(seg))
+                for conv_id, turn_idx, text in zip(
+                    pdf["conv_id"].values, pdf["turn_idx"].values, pdf["text"].values
+                )
+                for seg in segment_turn(text)
+            ]
+            yield pd.DataFrame(rows, columns=_COLUMNS)
 
     return transcripts_df.select("conv_id", "turn_idx", "text").mapInPandas(
         run, schema=SEGMENTS_FLAT_DDL

@@ -14,7 +14,7 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
-from ..operators.extract import extract_triples
+from ..operators.extract import rule_matches
 from ..schema import TRANSCRIPTS
 
 
@@ -26,10 +26,12 @@ def windowed_triple_counts(
     """streaming transcripts → per-window, per-predicate triple counts.
 
     Works on both batch and streaming DataFrames (same code path —
-    Structured Streaming's unified model)."""
-    triples = extract_triples_with_ts(transcripts_stream)
+    Structured Streaming's unified model). The event time rides beside
+    the Catalyst rule matches, so no join brings it back."""
     return (
-        triples.withWatermark("ts", watermark_delay)
+        transcripts_stream.select("ts", rule_matches().alias("m"))
+        .select("ts", "m.pred")
+        .withWatermark("ts", watermark_delay)
         .groupBy(F.window("ts", window_duration).alias("win"), "pred")
         .agg(F.count("*").alias("n_triples"))
         .select(
@@ -38,42 +40,6 @@ def windowed_triple_counts(
             "pred",
             "n_triples",
         )
-    )
-
-
-def extract_triples_with_ts(transcripts: DataFrame) -> DataFrame:
-    """Extraction that carries the event-time column through the UDF
-    boundary (joining it back by key would force a shuffle; threading
-    it through the Arrow batch is free)."""
-    import pandas as pd
-
-    from ..rules import RULES_BY_ROLE
-
-    def run(batches):
-        for pdf in batches:
-            cols = {"conv_id": [], "turn_idx": [], "pred": [], "obj": [], "ts": []}
-            for role, grp in pdf.groupby("role", sort=False):
-                rules = RULES_BY_ROLE.get(role)
-                if not rules:
-                    continue
-                for conv_id, turn_idx, text, ts in zip(
-                    grp["conv_id"].values, grp["turn_idx"].values,
-                    grp["text"].values, grp["ts"].values,
-                ):
-                    if not text:
-                        continue
-                    for rule in rules:
-                        for m in rule.compiled.finditer(text):
-                            s, e = m.span(rule.group)
-                            cols["conv_id"].append(conv_id)
-                            cols["turn_idx"].append(int(turn_idx))
-                            cols["pred"].append(rule.category)
-                            cols["obj"].append(text[s:e])
-                            cols["ts"].append(ts)
-            yield pd.DataFrame(cols)
-
-    return transcripts.select("conv_id", "turn_idx", "role", "text", "ts").mapInPandas(
-        run, schema="conv_id string, turn_idx int, pred string, obj string, ts timestamp"
     )
 
 

@@ -146,3 +146,40 @@ def test_line_window_fallback_no_drop():
     assert [(w["start_line"], w["end_line"]) for w in ws] == [(1, 5), (6, 10), (11, 12)]
     # whitespace-only text still yields nothing anywhere in the cascade
     assert segment_turn("   \n  ") == []
+
+
+def _golden_corpus() -> list:
+    """Fixed segmentation inputs: a synthetic conversation set plus the
+    edge cases every emitter path must keep (empty input, monster lines,
+    split kv runs, split paragraphs, kv lines inside a code fence)."""
+    pdf, _ = synthesize(60, seed=7, long_conv_turns=300)
+    prose = " ".join(
+        f"Sentence {i} explains how the merge kept the build green." for i in range(30)
+    )
+    return list(pdf["text"]) + [
+        None,
+        "",
+        "  \n\t \n   ",
+        "q" * 9000,
+        " " * 2990 + "abc",
+        "\n".join(f"key_{i}=value_{i:04d}_padding" for i in range(60)),
+        "\n".join("w" * 80 for _ in range(40)),
+        f"{prose}\n\n{prose[:400]}\n\nshort\n\n{prose[:700]}",
+        "```\n" + "\n".join(f"k{i}=v{i}" for i in range(400)) + "\n```",
+    ]
+
+
+def test_segment_rows_golden():
+    """Every row segment_turn emits for the fixed corpus, hashed: any
+    change to a boundary, split, id or hash suffix changes the digest."""
+    import hashlib
+    import json
+
+    from code_index_spark.operators.segment import segment_turn
+
+    h = hashlib.sha256()
+    for text in _golden_corpus():
+        h.update(json.dumps(segment_turn(text), sort_keys=True).encode())
+    assert h.hexdigest() == (
+        "329d78030f7a82a015a6aa940a660abd7ab3dd54474ffa2a520e366e6efa6cf4"
+    )

@@ -42,8 +42,6 @@ def test_windowed_stream_appends_finalized_windows(spark, tmp_path):
     # time's window is still open and must be absent
     src = spark.createDataFrame(pdf, schema=TRANSCRIPTS)
     max_ts = src.agg(F.max("ts")).first()[0]
-    latest_emitted = out.agg(F.max("window_end")).first()[0]
-    assert latest_emitted <= max_ts.replace(tzinfo=None) or True  # sanity
     open_windows = out.filter(F.col("window_end") > max_ts).count()
     assert open_windows == 0
 
