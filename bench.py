@@ -84,7 +84,7 @@ def main() -> None:
 
     tbl = load_tables(spark, sf_dir)
     # The derived view's turn_idx row_number window already hash-
-    # partitions by conv_id at the session shuffle width (the
+    # partitions by conv_id at the core count (the
     # north_rule partitioning discipline) — no extra repartition needed
     # before the Arrow-UDF stages. Materialize ONCE (n=1: re-timing a
     # persist is a cache read); this line is view construction, i.e.

@@ -78,10 +78,12 @@ def content_type(col):
     'url_heavy', 'prose'."""
     t = F.coalesce(col, F.lit(""))
     # trim() strips only spaces (not \n\t) in both Spark and DuckDB —
-    # use a whitespace regex for emptiness
+    # use a whitespace regex for emptiness. (?d) is Java's UNIX_LINES:
+    # without it ^ $ . also treat \r \u0085 \u2028 \u2029 as line
+    # ends, which Python re and RE2 (the oracle's) do not
     return (
-        F.when(t.rlike(r"^\s*$"), "empty")
-        .when(t.rlike(r"(?m)^[a-z_][a-z0-9_]*=[^\n]+$"), "kv")
+        F.when(t.rlike(r"(?d)^\s*$"), "empty")
+        .when(t.rlike(r"(?dm)^[a-z_][a-z0-9_]*=[^\n]+$"), "kv")
         .when(t.contains("```"), "code")
         .when(
             F.size(F.regexp_extract_all(t, F.lit(r"https?://"), F.lit(0))) >= 2,

@@ -20,6 +20,7 @@ identical components (idempotent-resume discipline X11/X12).
 
 from __future__ import annotations
 
+import pyarrow as pa
 from pyspark.sql import DataFrame, functions as F
 
 
@@ -87,18 +88,19 @@ def connected_components(
         )
         .filter(F.col("u") != F.col("v"))
         .distinct()
-        # truncate the (potentially huge) upstream logical plan — e.g.
-        # the LSH blocking join — BEFORE iterating: each star round
-        # copies the input plan ~6x, so without truncation Catalyst
-        # re-analysis cost grows geometrically per round (measured 30s
-        # for round 0 on a 32-row edge set when the LSH plan leaked in)
-        .localCheckpoint(eager=True)
     )
+    # one collect decides the path AND carries the driver path's edges
+    # (an empty graph lands here too: no edges, every node unlabelled)
+    rows = edges.limit(driver_max_edges + 1).collect()
+    if len(rows) <= driver_max_edges:
+        return _surface_labels(pairs, F.broadcast(_driver_union_find(spark, rows)))
+    # truncate the (potentially huge) upstream logical plan — e.g. the
+    # LSH blocking join — BEFORE iterating: each star round copies the
+    # input plan ~6x, so without truncation Catalyst re-analysis cost
+    # grows geometrically per round (measured 30s for round 0 on a
+    # 32-row edge set when the LSH plan leaked in)
+    edges = edges.localCheckpoint(eager=True)
     n_edges = edges.count()
-    if n_edges == 0:
-        return _surface_labels(pairs, _edge_labels(edges))
-    if n_edges <= driver_max_edges:
-        return _surface_labels(pairs, F.broadcast(_driver_union_find(spark, edges)))
     # size the loop's shuffles to the DATA (CLAUDE.md: tiny graphs at
     # session width are scheduling-overhead-bound) — plan-locally via
     # repartition inside _star_round, never by mutating session conf
@@ -108,10 +110,11 @@ def connected_components(
     return _surface_labels(pairs, _edge_labels(edges))
 
 
-def _driver_union_find(spark, edges: DataFrame) -> DataFrame:
+def _driver_union_find(spark, edges: list) -> DataFrame:
     """(node, component) via path-compressed union-find on the driver;
     component = min node id in the component (same labels the star
-    loop converges to)."""
+    loop converges to). The labels go back as an Arrow table — a
+    JVM-side local relation, so no Python RDD and no Python worker."""
     parent: dict[int, int] = {}
 
     def find(x: int) -> int:
@@ -122,12 +125,15 @@ def _driver_union_find(spark, edges: DataFrame) -> DataFrame:
             parent[x], x = root, parent[x]
         return root
 
-    for row in edges.collect():
+    for row in edges:
         ru, rv = find(row["u"]), find(row["v"])
         if ru != rv:
             parent[max(ru, rv)] = min(ru, rv)  # min-id root ⇒ min label
-    rows = [(n, find(n)) for n in list(parent)]
-    return spark.createDataFrame(rows, "node long, component long")
+    nodes = list(parent)
+    return spark.createDataFrame(pa.table({
+        "node": pa.array(nodes, pa.int64()),
+        "component": pa.array([find(n) for n in nodes], pa.int64()),
+    }))
 
 
 def _surface_labels(pairs: DataFrame, labels: DataFrame) -> DataFrame:

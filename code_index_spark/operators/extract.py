@@ -115,7 +115,8 @@ def rule_matches() -> Column:
 
     arrs = []
     for r in RULES:
-        matches = F.regexp_extract_all("text", F.lit(r.pattern), F.lit(r.group))
+        # (?d) = Java's UNIX_LINES, so lines end as in re and RE2 (rules.py)
+        matches = F.regexp_extract_all("text", F.lit("(?d)" + r.pattern), F.lit(r.group))
         tagged = F.transform(matches, _tagger(r))
         if set(r.roles) != set(ALL):
             empty = F.slice(tagged, 1, 0)  # typed empty array

@@ -233,9 +233,10 @@ def search_surfaces(triples: DataFrame, query: str, k: int = 10) -> DataFrame:
     The corpus side is distinct surfaces (small even at 10^12 turns);
     build_search_index + search_index_topk serve the same scores from
     a corpus side built once."""
-    spark = triples.sparkSession
-    qgrams = spark.createDataFrame([(query,)], "q string").select(
-        F.explode(char_ngrams(normalize_surface(F.col("q")))).alias("gram")
+    # a one-row range, not createDataFrame([...]): a Python list runs
+    # as a Python RDD, i.e. Python worker tasks on every request
+    qgrams = triples.sparkSession.range(1).select(
+        F.explode(char_ngrams(normalize_surface(F.lit(query)))).alias("gram")
     )
     return _topk(_search_index(triples).join(F.broadcast(qgrams), "gram"), k)
 

@@ -12,6 +12,9 @@ without touching the engine, same property as the reference.
 Every pattern is deliberately kept in the common subset of Python `re`,
 Java regex (Spark `regexp_extract_all`) and RE2 (DuckDB), so individual
 categories remain SQL-expressible for the DuckDB oracle parity check.
+Java alone also ends lines at \\r, \\u0085, \\u2028 and \\u2029 for ^ $ .;
+the Spark side (`extract.rule_matches`) runs each pattern under `(?d)`
+(UNIX_LINES) so only \\n does, as in the other two.
 
 The six predicate categories are the reference's six
 (queries_minimal.jsonl: class/function/import/call/data/logic), mapped

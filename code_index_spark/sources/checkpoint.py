@@ -28,6 +28,7 @@ import os
 import shutil
 import tempfile
 
+import pyarrow as pa
 from pyspark.sql import DataFrame, SparkSession, Window, functions as F
 
 DEFAULT_BUCKETS = 64
@@ -72,11 +73,7 @@ class CheckpointStore:
     def read(self) -> DataFrame:
         if os.path.exists(self.path):
             return self.spark.read.parquet(self.path)
-        return self.spark.createDataFrame(
-            [],
-            "partition_id int, content_hash long, triple_count long, "
-            "status string, updated_at timestamp",
-        )
+        return _ckpt_rows(self.spark, [], [], [])
 
     def upsert(self, rows: DataFrame) -> None:
         """Keep the newest row per partition_id (MERGE INTO emulation)."""
@@ -200,19 +197,26 @@ def run_with_resume(
         .agg(F.count("*").alias("cnt"))
         .collect()
     }
-    ckpt_rows = spark.createDataFrame(
-        [
-            (pid, hash_by_pid[pid], counts.get(pid, 0), "done")
-            for pid in pend_ids
-        ],
-        "partition_id int, content_hash long, triple_count long, status string",
-    ).withColumn("updated_at", F.current_timestamp())
-    ckpt.upsert(ckpt_rows)
+    ckpt.upsert(_ckpt_rows(
+        spark, pend_ids, [hash_by_pid[p] for p in pend_ids],
+        [counts.get(p, 0) for p in pend_ids],
+    ))
     return {
         "processed_buckets": len(pend_ids),
         "triples_written": sum(counts.values()),
         "reconciled_buckets": len(gone_ids),
     }
+
+
+def _ckpt_rows(spark: SparkSession, pids, hashes, triple_counts) -> DataFrame:
+    """Checkpoint rows marked done now. Built from an Arrow table — a
+    JVM-side local relation; a Python list would run as a Python RDD."""
+    return spark.createDataFrame(pa.table({
+        "partition_id": pa.array(pids, pa.int32()),
+        "content_hash": pa.array(hashes, pa.int64()),
+        "triple_count": pa.array(triple_counts, pa.int64()),
+        "status": pa.array(["done"] * len(pids), pa.string()),
+    })).withColumn("updated_at", F.current_timestamp())
 
 
 def _drop_partition_dir(triples_path: str, pid: int) -> None:

@@ -119,8 +119,11 @@ def load_tables(spark: SparkSession, sf_dir: str = DEFAULT_SF_DIR) -> dict[str, 
 # below computes the identical rows with the guide-§8 shape: shuffle
 # the narrow proxy first, attach the heavy payload after.
 #   1. project lineitem to the 8 needed columns and repartition by
-#      l_orderkey at session shuffle width (the one data exchange —
-#      same key and width as the window exchange it replaces);
+#      l_orderkey at the core count (the one data exchange — same key
+#      as the window exchange it replaces; the width is
+#      spread_narrow_scan's rule: AQE never coalesces a user-numbered
+#      exchange, and every partition past the cores is one more
+#      fixed-cost task in each stage that reads the cached view);
 #   2. run the SAME row_number window (its ClusteredDistribution is
 #      satisfied by the repartition ⇒ no second exchange);
 #   3. broadcast-join documents/part and build the text AFTER the
@@ -200,7 +203,7 @@ def derived_transcripts(spark: SparkSession, sf_dir: str = DEFAULT_SF_DIR) -> Da
     narrow lineitem columns and builds the wide text post-exchange —
     see the restructuring note above."""
     tables = load_tables(spark, sf_dir)
-    width = int(spark.conf.get("spark.sql.shuffle.partitions"))
+    width = spark.sparkContext.defaultParallelism
     from pyspark.sql import functions as F
 
     tables["lineitem"].select(*_LI_COLS).withColumn(

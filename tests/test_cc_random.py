@@ -72,3 +72,32 @@ def test_cc_matches_union_find_on_random_graph(spark, driver_max_edges):
         by_comp.setdefault(c, []).append(s)
     for c, members in by_comp.items():
         assert c == min(ids[m] for m in members)
+
+
+@pytest.mark.parametrize("driver_max_edges", [1_000_000, 0])
+def test_cc_empty_graph(spark, driver_max_edges):
+    """No pairs (and only self-pairs, which hash to no edge) give no
+    labels on both paths."""
+    empty = spark.createDataFrame([], "surface_a string, surface_b string")
+    assert connected_components(empty, driver_max_edges=driver_max_edges).count() == 0
+    selfloop = spark.createDataFrame([("x", "x")], "surface_a string, surface_b string")
+    got = connected_components(selfloop, driver_max_edges=driver_max_edges).collect()
+    from pyspark.sql import functions as F
+
+    xid = spark.range(1).select(F.xxhash64(F.lit("x"))).first()[0]
+    assert [(r["surface"], r["component"]) for r in got] == [("x", xid)]
+
+
+def test_driver_union_find_runs_no_python_rdd(spark):
+    """The driver path's labels come back as a JVM-side local relation:
+    building them starts no Python worker (a DataFrame made from a
+    Python list runs as a PythonRDD)."""
+    from code_index_spark.operators.canon import _driver_union_find
+
+    edges = [{"u": 5, "v": 3}, {"u": 3, "v": 9}, {"u": 7, "v": 8}]
+    labels = _driver_union_find(spark, edges)
+    assert "PythonRDD" not in labels._jdf.queryExecution().toRdd().toDebugString()
+    assert dict((r["node"], r["component"]) for r in labels.collect()) == {
+        3: 3, 5: 3, 9: 3, 7: 7, 8: 7,
+    }
+    assert [f.dataType.simpleString() for f in labels.schema.fields] == ["bigint", "bigint"]

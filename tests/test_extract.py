@@ -85,3 +85,32 @@ def test_tool_kv_rule_only_for_tool_role():
     user_preds = [r[4] for r in extract_turn(text, "user")]
     assert "data.kv" in tool_preds
     assert "data.kv" not in user_preds
+
+
+def test_sql_extraction_matches_python_on_java_line_terminators(spark):
+    """Java regex treats \\r, \\u0085, \\u2028 and \\u2029 as line ends
+    for ^ $ . unless UNIX_LINES is on; Python re (and the oracle's RE2)
+    end lines only at \\n. The two extractors must agree on such turns."""
+    import datetime
+    import itertools
+    from collections import Counter
+
+    from code_index_spark.operators.extract import extract_triples_sql
+
+    texts = [
+        "x\rqty=5", "x\u2028qty=5", "x\u2029qty=5", "x\u0085qty=5",
+        "status=ok\r\nqty=5", "status=ok\nqty=5\u2028rows=2",
+        "see \"a\rb\" and `c\u2028d` here",
+    ]
+    ts = datetime.datetime(2026, 1, 1)
+    rows = [("c", i, role, t, "exec", ts) for i, (t, role) in
+            enumerate(itertools.product(texts, ("tool", "assistant")))]
+    tdf = spark.createDataFrame(rows, schema=TRANSCRIPTS)
+    key = lambda pdf: Counter(
+        zip(pdf.conv_id, pdf.turn_idx, pdf.subj, pdf.pred, pdf.obj,
+            pdf.rule_id, pdf.confidence)
+    )
+    py = key(extract_triples(tdf).toPandas())
+    assert py == key(extract_triples_sql(tdf).toPandas())
+    # non-vacuous: the \n-separated kv lines do match
+    assert any(k[3] == "data" for k in py)

@@ -39,13 +39,19 @@ def test_content_type_classes(spark):
         # must agree (re.ASCII; it silently diverged before round 4)
         (7, " "),
         (8, "    "),
+        # Java line terminators: ^ $ treat \r \u2028 … as line ends in
+        # Java (without UNIX_LINES) but not in Python re or RE2
+        (9, "\u2028"),
+        (10, " \u2028"),
+        (11, "x\ra=b"),
     ]
     df = spark.createDataFrame(rows, "id long, text string")
     got = {r["id"]: r["ct"] for r in
            df.select("id", content_type(F.col("text")).alias("ct")).collect()}
     assert got == {0: "empty", 1: "empty", 2: "kv", 3: "code",
                    4: "url_heavy", 5: "prose", 6: "empty",
-                   7: "prose", 8: "prose"}
+                   7: "prose", 8: "prose", 9: "prose", 10: "prose",
+                   11: "prose"}
     # the Python twin used inside Arrow segmentation batches must agree
     # with the Column version on every class
     from code_index_spark.operators.segment import content_type_py

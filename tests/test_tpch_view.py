@@ -3,6 +3,7 @@ oracle's TRANSCRIPTS_SQL (which stays the semantic single source for
 every DuckDB oracle body). Any drift between the restructured builder
 and the SQL text is a correctness bug, not a perf trade."""
 
+import pytest
 from pyspark.sql import functions as F
 
 from code_index_spark.sources.tpch import (
@@ -39,9 +40,21 @@ def test_restructured_view_identical_to_sql(spark):
     assert diff == 0 and rdiff == 0, (diff, rdiff)
 
 
-def test_restructured_view_single_narrow_exchange(spark):
+@pytest.fixture
+def shuffle_partitions_32(spark):
+    prev = spark.conf.get("spark.sql.shuffle.partitions")
+    spark.conf.set("spark.sql.shuffle.partitions", "32")
+    try:
+        yield
+    finally:
+        spark.conf.set("spark.sql.shuffle.partitions", prev)
+
+
+def test_restructured_view_single_narrow_exchange(spark, shuffle_partitions_32):
     """The one data exchange hash-partitions the NARROW lineitem rows
-    by l_orderkey; the wide text column never appears below it."""
+    by l_orderkey; the wide text column never appears below it. The
+    exchange is user-numbered, so AQE never coalesces it: it is sized
+    to the cores, not to spark.sql.shuffle.partitions (32 here)."""
     t = derived_transcripts(spark, "/root/testdata/sf0.001")
     plan = t._jdf.queryExecution().executedPlan().toString()
     main = plan.split("===== Subqueries")[0]
@@ -54,3 +67,4 @@ def test_restructured_view_single_narrow_exchange(spark):
     # the partitioning survives into the output columns and downstream
     # conv-keyed consumers reuse it
     assert "conv_id" in exchanges[0]
+    assert t.rdd.getNumPartitions() == spark.sparkContext.defaultParallelism

@@ -3,11 +3,15 @@ query at a given sf and compare against its DuckDB oracle —
 row count, column names, and order-insensitive values.
 
 Usage: python tools/check_oracles.py [sf_dir] [only_query ...]
+
+Runs on local[$SPARK_GRAFT_CPUS] (default 16) with 16 shuffle
+partitions; the derived transcripts view is as wide as the cores.
 """
 
 from __future__ import annotations
 
 import functools
+import os
 import sys
 import time
 
@@ -39,7 +43,8 @@ def normalize(pdf: pd.DataFrame) -> pd.DataFrame:
 def main() -> int:
     sf_dir = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.01"
     only = set(sys.argv[2:])
-    spark = get_spark("oracle-check", cores=16, shuffle_partitions=16)
+    cores = int(os.environ.get("SPARK_GRAFT_CPUS", "16"))
+    spark = get_spark("oracle-check", cores=cores, shuffle_partitions=16)
     con = duckdb.connect()
     for t in TABLES:
         con.execute(f"CREATE VIEW {t} AS SELECT * FROM '{sf_dir}/{t}.parquet'")
