@@ -1556,7 +1556,7 @@ def _q_corpus_prepare_summary(spark, sf_dir):
 
 def _q_prepare_compacted_labels(spark, sf_dir):
     """The stream+compaction contract, driver-oracled: label the corpus
-    through the REAL streaming code path (streaming/prepare_stream.
+    through the per-batch step the stream runs (operators/prepare.
     batch_labels — per-row signals + exact-dup against an empty
     registry, near-dup deferred), then run the nightly compaction
     (operators/prepare.compact_prepared_labels). The oracle is the
@@ -1564,14 +1564,16 @@ def _q_prepare_compacted_labels(spark, sf_dir):
     match is the cross-engine proof that incremental labeling plus
     compaction reproduces the batch pipeline exactly (the pytest twin
     additionally pins it across real micro-batches and replays)."""
-    from code_index_spark.operators.prepare import compact_prepared_labels
-    from code_index_spark.streaming.prepare_stream import batch_labels
+    from code_index_spark.operators.prepare import (
+        REGISTRY_DDL,
+        batch_labels,
+        compact_prepared_labels,
+    )
+    from code_index_spark.session import empty_frame
 
     tr, ev = _prepare_inputs(spark, sf_dir)
-    empty_registry = spark.createDataFrame(
-        [], "text_hash string, keep_id bigint")
-    stream_labels, _ = batch_labels(tr, empty_registry, ev,
-                                    decontam_gram_n=3)
+    stream_labels, _ = batch_labels(tr, empty_frame(spark, REGISTRY_DDL),
+                                    ev, decontam_gram_n=3)
     return compact_prepared_labels(tr, stream_labels).orderBy("doc_id")
 
 

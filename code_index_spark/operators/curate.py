@@ -39,8 +39,9 @@ def near_reject_set(
     """(doc_id, r_near=1) — the near-dup non-survivors of a (doc_id,
     text) corpus: id_b of every minhash-verified pair (id_a < id_b, so
     the min id survives). Single source of the near-dup survivor
-    policy, shared by reject_sets (the batch path) and
-    prepare.compact_prepared_labels (the streaming compaction)."""
+    policy, shared by reject_sets (curation_labels) and
+    prepare.compact_prepared_labels (prepare_corpus and the streaming
+    compaction)."""
     return (
         minhash_verified_pairs(docs, "doc_id", "text",
                                threshold=near_dup_threshold,
@@ -59,9 +60,8 @@ def reject_sets(
     """The two duplicate reject sets over a (doc_id, text) corpus:
     (exact_removed, near_removed), each a (doc_id, marker) table whose
     rows are the non-survivor documents (min-id survivor policy; for
-    verified near-dup pairs id_a < id_b, id_b is removed). Shared by
-    curation_labels and prepare.prepare_corpus so the survivor policy
-    has one source."""
+    verified near-dup pairs id_a < id_b, id_b is removed), for
+    curation_labels."""
     ex = exact_duplicates(docs, "doc_id", "text")
     exact_removed = (
         docs.select(F.md5("text").alias("text_hash"), "doc_id")

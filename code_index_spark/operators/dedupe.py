@@ -81,6 +81,30 @@ def ngram_jaccard_pairs(
 
 
 # ------------------------------------------- cross-doc duplicated windows
+def _hashed_windows(text_col: str, window: int):
+    """(words, n_words, hashes) column expressions over a text column:
+    whitespace words, their count (0 for blank text), and the hash60 of
+    each sliding `window`-word position in position order (empty when
+    there is no full window)."""
+    from ..functions.textfns import hash60
+
+    words = F.split(F.trim(F.col(text_col)), r"\s+")
+    n_words = F.when(F.length(F.trim(F.col(text_col))) == 0, 0).otherwise(
+        F.size(words)
+    )
+    n_win = F.greatest(n_words - (window - 1), F.lit(0))
+    # sequence(1, 0) DESCENDS in Spark ([1, 0]) — guard the no-window
+    # case or short docs emit bogus partial windows
+    hashes = F.when(
+        n_win > 0,
+        F.transform(
+            F.sequence(F.lit(1), n_win),
+            lambda i: hash60(F.concat_ws(" ", F.slice(words, i, window))),
+        ),
+    ).otherwise(F.array().cast("array<long>"))
+    return words, n_words, hashes
+
+
 def duplicated_window_stats(
     df: DataFrame, id_col: str, text_col: str, window: int = 8
 ) -> DataFrame:
@@ -113,22 +137,7 @@ def duplicated_window_stats(
     Reference parity: code-index dedupes at whole-chunk granularity
     via point-id hashing (vector_store.py:203-210); passage-level
     duplication is the corpus-scale refinement."""
-    from ..functions.textfns import hash60
-
-    words = F.split(F.trim(F.col(text_col)), r"\s+")
-    n_words = F.when(F.length(F.trim(F.col(text_col))) == 0, 0).otherwise(
-        F.size(words)
-    )
-    n_win = F.greatest(n_words - (window - 1), F.lit(0))
-    # sequence(1, 0) DESCENDS in Spark ([1, 0]) — guard the no-window
-    # case or short docs emit bogus partial windows
-    wins = F.when(
-        n_win > 0,
-        F.transform(
-            F.sequence(F.lit(1), n_win),
-            lambda i: hash60(F.concat_ws(" ", F.slice(words, i, window))),
-        ),
-    ).otherwise(F.array().cast("array<long>"))
+    _, _, wins = _hashed_windows(text_col, window)
     pos = (
         df.select(F.col(id_col).alias("doc_id"), F.explode(wins).alias("gh"))
         .groupBy("doc_id", "gh")
@@ -191,20 +200,7 @@ def cross_source_overlap(
     Reference parity: code-index reports per-collection stats only
     (collections list, vector_store.py catalog); cross-slice overlap
     is the corpus-scale generalization."""
-    from ..functions.textfns import hash60
-
-    words = F.split(F.trim(F.col(text_col)), r"\s+")
-    n_words = F.when(F.length(F.trim(F.col(text_col))) == 0, 0).otherwise(
-        F.size(words)
-    )
-    n_win = F.greatest(n_words - (window - 1), F.lit(0))
-    wins = F.when(
-        n_win > 0,
-        F.transform(
-            F.sequence(F.lit(1), n_win),
-            lambda i: hash60(F.concat_ws(" ", F.slice(words, i, window))),
-        ),
-    ).otherwise(F.array().cast("array<long>"))
+    _, _, wins = _hashed_windows(text_col, window)
     gw = (
         df.select(F.col(group_col).alias("src"), F.explode(wins).alias("gh"))
         .distinct()
@@ -278,33 +274,16 @@ def remove_duplicated_passages(
     Reference parity: code-index dedupes whole chunks by point-id
     hash (vector_store.py:203-210); passage-level cutting is the
     corpus-scale refinement RefinedWeb/Dolma apply."""
-    from ..functions.textfns import hash60
-
-    words = F.split(F.trim(F.col(text_col)), r"\s+")
-    n_words = F.when(F.length(F.trim(F.col(text_col))) == 0, 0).otherwise(
-        F.size(words)
-    )
-    n_win = F.greatest(n_words - (window - 1), F.lit(0))
+    words, n_words, wins = _hashed_windows(text_col, window)
     base = df.select(
         F.col(id_col).alias("doc_id"),
         words.alias("words"),
         n_words.alias("n_tokens"),
-        n_win.alias("n_win"),
+        wins.alias("wins"),
     )
     # (doc, 1-based position, window hash): posexplode is 0-based
     pos = (
-        base.filter(F.col("n_win") > 0)
-        .select(
-            "doc_id",
-            F.posexplode(
-                F.transform(
-                    F.sequence(F.lit(1), F.col("n_win")),
-                    lambda i: hash60(
-                        F.concat_ws(" ", F.slice(F.col("words"), i, window))
-                    ),
-                )
-            ).alias("p0", "gh"),
-        )
+        base.select("doc_id", F.posexplode("wins").alias("p0", "gh"))
         .select("doc_id", (F.col("p0") + 1).alias("p"), "gh")
     )
     own = pos.groupBy("gh").agg(

@@ -10,6 +10,8 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, functions as F
 
+from ..session import empty_frame
+
 
 def degree_stats(edges: DataFrame) -> DataFrame:
     """Per-vertex total degree over the edges table."""
@@ -47,7 +49,7 @@ def pagerank(
     vertices = und.select(F.col("src").alias("v")).distinct().localCheckpoint(eager=True)
     n = vertices.count()
     if n == 0:
-        return spark.createDataFrame([], "v long, rank double")
+        return empty_frame(spark, "v long, rank double")
     ranks = vertices.withColumn("rank", F.lit(1.0 / n))
     links = und.join(out_deg, "src").localCheckpoint(eager=True)
     base = (1.0 - damping) / n

@@ -338,7 +338,8 @@ def link_mentions(
 ) -> DataFrame:
     """triples → linked surface pairs (surface_a, surface_b, jaccard, cosine),
     as a LAZY DataFrame: callers materialize it (plans.pipeline.STAGES
-    checkpoints it in the KG build).
+    checkpoints it in the KG build). Given `surfaces`, triples is not
+    read (streaming/link_stream passes None).
 
     surfaces are localCheckpoint-ed, not just persisted: the pair joins
     copy the input logical plan several times, and without truncation
@@ -359,7 +360,7 @@ def link_mentions(
     # table is orders of magnitude smaller than the corpus, and running
     # its self-join at corpus-scale shuffle widths is pure scheduling
     # overhead (same lever as connected_components)
-    spark = triples.sparkSession
+    spark = surfaces.sparkSession
     n_surf = surfaces.count()
     if n_surf <= LSH_ABOVE_SURFACES:
         # the exact join sizes its own candidate stage (prefix postings

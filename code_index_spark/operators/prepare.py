@@ -4,10 +4,10 @@ near-dup removal → quality filter → language filter) → benchmark
 decontamination against an eval suite → PII scrub → deterministic
 train/val/test assignment. This is the pipeline a 100 TB run actually
 executes end-to-end; the stages are the individually-oracled operators
-(curate.reject_sets, decontam.decontaminate, pii.pii_features,
-split.hash_split, textstats.quality_features/lang_id) composed under
-one reason-priority policy, and the whole composition carries a full
-DuckDB value-hash oracle (driver rows `corpus_prepare_labels` /
+(decontam.decontaminate, pii.pii_features, split.hash_split,
+textstats.quality_features/lang_id, curate.near_reject_set) composed
+under one reason-priority policy, and the whole composition carries a
+full DuckDB value-hash oracle (driver rows `corpus_prepare_labels` /
 `corpus_prepare_summary`).
 
 Reason priority (first rejecting stage wins):
@@ -28,9 +28,10 @@ Scale shape (the part that matters at 100 TB):
     hash-groupBy; minhash banding linear in bucket sizes) — the same
     invariant as curate.py.
   - The eval-suite gram set is broadcast inside decontaminate (eval
-    suites are bounded by construction); the three reject-set joins
-    carry NO broadcast hint — their size is duplication-/leak-rate-
-    dependent, so AQE picks the strategy (round-4 ADVICE discipline).
+    suites are bounded by construction); the exact-dup, contamination
+    and near-dup joins carry NO broadcast hint — their size is
+    duplication-/leak-rate-dependent, so AQE picks the strategy
+    (round-4 ADVICE discipline).
   - Split assignment is a pure function of (doc_id, salt): zero
     shuffle, reproducible across runs/engines/partitionings, and the
     `split` column partition-prunes the downstream corpus write.
@@ -45,7 +46,8 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, functions as F
 
-from .curate import reject_sets
+from ..session import empty_frame
+from .curate import near_reject_set
 from .decontam import decontaminate
 from .pii import pii_features
 from .split import hash_split
@@ -53,6 +55,10 @@ from .textstats import lang_id, quality_features
 
 REASONS = ("exact_dup", "near_dup", "contaminated", "low_quality",
            "non_en", "keep")
+
+# the exact-dup registry: one (md5(text), surviving doc id) row per
+# distinct text
+REGISTRY_DDL = "text_hash string, keep_id bigint"
 
 
 def prepare_corpus(
@@ -68,7 +74,6 @@ def prepare_corpus(
     fractions: dict[str, float] | None = None,
     split_salt: str = "split-v1",
     near_dup_max_bucket: int | None = None,
-    checkpoint: bool = False,
 ) -> DataFrame:
     """(doc_id, reason, split, has_pii, doc_chars) per training doc.
 
@@ -80,60 +85,108 @@ def prepare_corpus(
     publishable corpus is the keep-set joined back to
     pii.redact_pii's output).
 
+    The corpus is labeled as ONE batch against an empty exact-dup
+    registry (batch_labels), then its near-dups are upgraded
+    (compact_prepared_labels) — the same two steps the streaming twin
+    runs per micro-batch and per compaction window, so both paths share
+    one reason priority.
+
     near_dup_max_bucket → dedupe.minhash_verified_pairs stop-bucket
     cap; crawl corpora with boilerplate cliques should set it (~1000),
-    see curate.curation_labels.
-
-    checkpoint=True eagerly localCheckpoints the three (small) reject
-    sets, truncating the minhash-banding subtree out of the final
-    plan: every AQE stage re-plan then walks a 3-leaf join instead of
-    the full banding tree. Worth it on large corpora (measured in
-    bench/prepare_scale.py); leave False for small/oracle runs, where
-    the 3 extra eager jobs cost more than the analysis they save
-    (~1-2s fixed per job in this sandbox), and where executor loss
-    would fail the job instead of recomputing (the
-    functions/minhash.py truncation caveat)."""
-    docs = df.select(F.col(id_col).alias("doc_id"),
-                     F.col(text_col).alias("text"))
-    ev = eval_df.select(F.col(text_col).alias("text"))
-    exact_removed, near_removed = reject_sets(
-        docs, near_dup_threshold, near_dup_max_bucket
+    see curate.curation_labels."""
+    labels, _ = batch_labels(
+        df, empty_frame(df.sparkSession, REGISTRY_DDL), eval_df, id_col,
+        text_col, min_quality, keep_lang, decontam_gram_n,
+        decontam_min_matches, fractions, split_salt,
     )
+    return compact_prepared_labels(
+        df, labels, id_col, text_col, near_dup_threshold, near_dup_max_bucket
+    )
+
+
+def batch_labels(
+    batch_df: DataFrame,
+    old_registry: DataFrame,
+    eval_df: DataFrame,
+    id_col: str = "doc_id",
+    text_col: str = "text",
+    min_quality: float = 0.7,
+    keep_lang: str = "en",
+    decontam_gram_n: int = 8,
+    decontam_min_matches: int = 1,
+    fractions: dict[str, float] | None = None,
+    split_salt: str = "split-v1",
+    eval_grams: DataFrame | None = None,
+) -> tuple[DataFrame, DataFrame]:
+    """(labels, batch_winners) for one batch of docs against the
+    accumulated REGISTRY_DDL registry `old_registry` (empty for a whole
+    corpus labeled as one batch, as prepare_corpus does; the
+    accumulated deltas in streaming/prepare_stream). `batch_winners`
+    is (text_hash, batch_keep): the min doc id per text in the batch.
+
+    Reasons here never say 'near_dup' — that stage is
+    compact_prepared_labels'. A doc whose text hash is in the registry
+    is an exact_dup; within the batch the min-id doc survives.
+
+    NULL-text docs: md5(NULL) is NULL, which equi-joins with nothing,
+    so they are never duplicates of anything but MUST still get a
+    label row — hence the left join on winners and the coalesce to
+    r_exact=0."""
+    docs = batch_df.select(
+        F.col(id_col).alias("doc_id"), F.col(text_col).alias("text")
+    ).withColumn("text_hash", F.md5("text"))
+
+    winners = docs.groupBy("text_hash").agg(
+        F.min("doc_id").alias("batch_keep"))
+    # a hash seen in ANY earlier batch makes every copy here a dup;
+    # otherwise the within-batch min id survives
+    flagged = (
+        docs
+        .join(old_registry.select("text_hash",
+                                  F.col("keep_id").alias("old_keep")),
+              "text_hash", "left")
+        .join(winners, "text_hash", "left")
+        .withColumn(
+            "r_exact",
+            F.coalesce(
+                (F.col("old_keep").isNotNull()
+                 | (F.col("doc_id") != F.col("batch_keep"))).cast("int"),
+                F.lit(0),
+            ),
+        )
+        .drop("old_keep", "batch_keep")
+    )
+
     contam = (
-        decontaminate(docs, ev, "doc_id", "text", gram_n=decontam_gram_n)
+        decontaminate(docs, eval_df.select(F.col(text_col).alias("text")),
+                      "doc_id", "text", gram_n=decontam_gram_n,
+                      eval_grams=eval_grams)
         .filter(F.col("n_shared_grams") >= decontam_min_matches)
         .select("doc_id")
         .withColumn("r_contam", F.lit(1))
     )
-    if checkpoint:
-        exact_removed = exact_removed.localCheckpoint(eager=True)
-        near_removed = near_removed.localCheckpoint(eager=True)
-        contam = contam.localCheckpoint(eager=True)
     # every per-row signal in one fused projection chain over one scan
     perrow = hash_split(
-        lang_id(quality_features(pii_features(docs, "text"), "text"), "text"),
+        lang_id(quality_features(pii_features(flagged, "text"), "text"),
+                "text"),
         "doc_id", fractions, split_salt,
     ).select(
-        "doc_id", F.length("text").alias("doc_chars"),
+        "doc_id", "r_exact", F.length("text").alias("doc_chars"),
         "quality_score", "pred_lang", "has_pii", "split",
-    )
-    base = (
-        perrow
-        .join(exact_removed, "doc_id", "left")
-        .join(near_removed, "doc_id", "left")
-        .join(contam, "doc_id", "left")
     )
     reason = (
         F.when(F.col("r_exact") == 1, "exact_dup")
-        .when(F.col("r_near") == 1, "near_dup")
         .when(F.col("r_contam") == 1, "contaminated")
         .when(F.col("quality_score") < min_quality, "low_quality")
         .when(F.col("pred_lang") != keep_lang, "non_en")
         .otherwise("keep")
     )
-    return base.select(
-        "doc_id", reason.alias("reason"), "split", "has_pii", "doc_chars"
+    labels = (
+        perrow.join(contam, "doc_id", "left")
+        .select("doc_id", reason.alias("reason"), "split", "has_pii",
+                "doc_chars")
     )
+    return labels, winners
 
 
 def compact_prepared_labels(
@@ -144,30 +197,25 @@ def compact_prepared_labels(
     near_dup_threshold: float = 0.8,
     near_dup_max_bucket: int | None = None,
 ) -> DataFrame:
-    """The nightly COMPACTION that closes the streaming twin's one
-    deferred stage (streaming/prepare_stream.py defers near-dup by
-    design: minhash banding against the accumulated corpus is not
-    proportional to a micro-batch sliver). Run the same
-    minhash-verified near-dup detection prepare_corpus runs — over the
-    FULL accumulated corpus — and upgrade the stream's labels:
+    """The near-dup stage over labels that lack it: run the
+    minhash-verified near-dup detection over the FULL corpus `docs`
+    and upgrade the batch_labels reasons —
 
-      exact_dup stays exact_dup (it outranks near_dup in the batch
-      reason priority); any other stream reason whose doc is in the
-      near reject set becomes near_dup; everything else is unchanged.
+      exact_dup stays exact_dup (it outranks near_dup in the reason
+      priority); any other reason whose doc is in the near reject set
+      becomes near_dup; everything else is unchanged.
 
-    The result is row-identical to prepare_corpus over the same corpus
-    whenever the stream-parity precondition holds (ids arrive in batch
-    order, so the stream's first-seen-batch-then-min-id exact survivor
-    equals the batch global min-id survivor) — pinned by pytest.
+    prepare_corpus is batch_labels plus this step. The streaming twin
+    (streaming/prepare_stream.py) defers near-dup to this step by
+    design — minhash banding against the accumulated corpus is not
+    proportional to a micro-batch sliver — and its compacted labels
+    equal prepare_corpus over the same corpus whenever ids arrive in
+    batch order (the stream's first-seen-batch-then-min-id exact
+    survivor is then the global min-id survivor) — pinned by pytest.
 
-    Scale shape: the compaction pays one full-corpus near-dup pass —
-    the same cost the batch pipeline pays on EVERY run — once per
-    compaction window; per-batch streaming cost stays proportional to
-    the sliver plus a hash-registry join. The upgrade itself is one
+    Scale shape: one full-corpus near-dup pass plus one
     labels×reject-set join (no broadcast hint — reject size is
     dup-rate-dependent, the round-4 ADVICE discipline)."""
-    from .curate import near_reject_set
-
     d = docs.select(F.col(id_col).alias("doc_id"),
                     F.col(text_col).alias("text"))
     near_removed = near_reject_set(

@@ -9,7 +9,8 @@ from __future__ import annotations
 
 import os
 
-from pyspark.sql import SparkSession
+from pyspark.sql import DataFrame, SparkSession, functions as F
+from pyspark.sql.types import DataType
 
 
 def get_spark(
@@ -72,3 +73,13 @@ def get_spark(
     for k, v in (extra_conf or {}).items():
         builder = builder.config(k, v)
     return builder.getOrCreate()
+
+
+def empty_frame(spark: SparkSession, ddl: str) -> DataFrame:
+    """An empty DataFrame of the DDL schema `ddl`, planned as a zero-row
+    Range under typed NULL columns: `createDataFrame([], ddl)` plans as
+    a PythonRDD, so reading it would start Python worker tasks."""
+    return spark.range(0).select(*[
+        F.lit(None).cast(f.dataType).alias(f.name)
+        for f in DataType.fromDDL(ddl).fields
+    ])

@@ -1,49 +1,32 @@
-"""Incremental entity linking via Structured Streaming (round-4
-VERDICT #7) — the streaming twin of operators/link.py's batch path,
-completing the streaming story for the pipeline's middle stage
-(extraction, windows, first-mentions and exact dedupe already have
-streaming forms).
+"""Incremental entity linking via Structured Streaming — the streaming
+twin of operators/link.link_mentions. The stream keeps state and
+calls the batch operator; it carries no linking algorithm of its own.
 
-Decomposition that makes linking incremental-safe:
-
-- The SURFACES table (distinct mention surfaces + counts) merges per
-  micro-batch: counts add, previously-unseen surfaces are NEW.
-- CANDIDATE PAIRS are append-only: gram Jaccard between two surfaces
-  depends only on the two strings, never on the rest of the
-  vocabulary, so each batch links ONLY its new surfaces against the
-  merged vocab (new×old + new×new, one gram equi-join whose left side
-  is the new-surface sliver) and appends the qualifying pairs. Old×old
-  pairs are already in state and are never recomputed — that is the
-  incremental win: per-batch cost is proportional to the NEW
-  vocabulary, not the total.
-- TF-IDF COSINE is NOT incremental-safe (idf moves with every vocab
-  change), so it is not stored: `linked_pairs_view` rescores the
-  stored candidates against the CURRENT vocab on read (vocab-scale
-  work, exactly operators/link.tfidf_cosine), which makes the final
-  pairs EQUAL to the batch link_mentions over the same corpus — the
-  parity pytest pins it.
-
-State layout under `state_dir/`: `surfaces/v=<batch_id>/` (one
-immutable snapshot per applied batch, vocab-scale) and `pairs/`
-(append-only; the view dedupes, so a replayed batch cannot
-double-link — restart-no-dup is pytest-gated).
+The state is the merged surface vocabulary (distinct mention surfaces
++ counts + grams), one immutable snapshot per applied micro-batch
+under `state_dir/surfaces/v=<batch_id>/`. A batch adds its surfaces'
+mention counts onto the previous snapshot and writes its own version.
+Pairs are not state: `linked_pairs_view` runs link_mentions over the
+current snapshot, so the streamed pairs equal the batch pairs over the
+same corpus by construction, at every vocabulary size (the exact
+prefix join up to LSH_ABOVE_SURFACES, minhash banding beyond it).
 
 Replay safety (round-4 ADVICE): foreachBatch is at-least-once, so a
-batch can re-run after its state writes succeeded but before the
-checkpoint commit. Pair appends are read-time deduped, but the count
-merge is NOT naturally idempotent — so the surfaces snapshot for batch
-N is always derived from the latest snapshot with version < N and
-written to its own `v=N` directory. A replay of batch N re-reads the
-same pre-batch snapshot and rewrites `v=N` with identical content
-instead of double-adding mention_counts onto its own output. Snapshots
+batch can re-run after its state write succeeded but before the
+checkpoint commit. The count merge is not naturally idempotent, so the
+snapshot for batch N is always derived from the latest snapshot with
+version < N and written to its own `v=N` directory: a replay of batch
+N re-reads the same pre-batch snapshot and rewrites `v=N` with
+identical content instead of double-adding mention counts. Snapshots
 older than the current batch's base are pruned after the write (only
-the last uncommitted batch can ever replay).
+the last uncommitted batch can ever replay). Shared machinery:
+streaming/state.py.
 
-At 100 TB: the per-batch join is new-sliver × vocab on the gram key —
-broadcastable sliver, AQE skew-split for stop-grams; state tables stay
-orders of magnitude smaller than the corpus (reference analogue: the
-incremental file-hash skip cache + Qdrant upsert, cache.py /
-vector_store.py:337-376, re-expressed as streaming state)."""
+At 100 TB: the per-batch work is the batch's own extraction plus a
+vocab-sized merge; the state stays orders of magnitude smaller than
+the corpus (reference analogue: the incremental file-hash skip cache
++ Qdrant upsert, cache.py / vector_store.py:337-376, re-expressed as
+streaming state)."""
 
 from __future__ import annotations
 
@@ -52,22 +35,13 @@ import os
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
 from ..operators.extract import extract_triples_sql
-from ..operators.link import mention_surfaces, tfidf_cosine
+from ..operators.link import link_mentions, mention_surfaces
 from ..schema import TRANSCRIPTS
 from .state import guard_batch_id, prune_below_base, read_latest_snapshot
 
 _SURFACES_DDL = (
     "surface string, mention_count bigint, norm string, grams array<string>"
 )
-_PAIRS_DDL = "surface_a string, surface_b string, jaccard double"
-
-
-def _read_state(spark: SparkSession, path: str, ddl: str) -> DataFrame:
-    if os.path.isdir(path) and any(
-        f.endswith(".parquet") for f in os.listdir(path)
-    ):
-        return spark.read.schema(ddl).parquet(path)
-    return spark.createDataFrame([], ddl)
 
 
 def _read_surfaces(
@@ -75,69 +49,23 @@ def _read_surfaces(
 ) -> DataFrame:
     """Latest surfaces snapshot — optionally the latest with version
     strictly below `below` (the replay-safe base for applying batch
-    `below`). Shared machinery: streaming/state.py; flat_fallback
-    covers the pre-versioning layout (parquet files directly under
-    surfaces/) as the base for the first versioned batch — the write
-    path deletes the flat files once a versioned base exists."""
+    `below`). flat_fallback covers the pre-versioning layout (parquet
+    files directly under surfaces/) as the base for the first versioned
+    batch — the write path deletes the flat files once a versioned base
+    exists."""
     return read_latest_snapshot(
         spark, surf_root, _SURFACES_DDL, below=below, flat_fallback=True
     )
 
 
-def _new_pairs(
-    new: DataFrame, vocab: DataFrame, min_jaccard: float
-) -> DataFrame:
-    """Gram-Jaccard pairs touching ≥1 NEW surface: one equi-join on the
-    gram key, left side restricted to the new-surface sliver. New×new
-    pairs are found from both ends — canonical ordering + distinct
-    collapses them."""
-    ta = new.select(
-        F.col("surface").alias("sa"),
-        F.size("grams").alias("za"),
-        F.explode("grams").alias("gram"),
-    )
-    tb = vocab.select(
-        F.col("surface").alias("sb"),
-        F.size("grams").alias("zb"),
-        F.explode("grams").alias("gram"),
-    )
-    inter = (
-        ta.join(tb, "gram")
-        .filter(F.col("sa") != F.col("sb"))
-        .groupBy("sa", "sb", "za", "zb")
-        .agg(F.count("*").alias("inter"))
-    )
-    return (
-        inter.withColumn(
-            "jaccard",
-            F.col("inter") / (F.col("za") + F.col("zb") - F.col("inter")),
-        )
-        .filter(F.col("jaccard") >= min_jaccard)
-        .select(
-            F.least("sa", "sb").alias("surface_a"),
-            F.greatest("sa", "sb").alias("surface_b"),
-            "jaccard",
-        )
-        .dropDuplicates(["surface_a", "surface_b"])
-    )
-
-
 def _apply_batch(
-    spark: SparkSession,
-    state_dir: str,
-    batch_df: DataFrame,
-    batch_id: int,
-    min_jaccard: float,
+    spark: SparkSession, state_dir: str, batch_df: DataFrame, batch_id: int
 ) -> None:
-    """Apply one micro-batch to the linking state, idempotently: the
-    merge base is the latest surfaces snapshot with version < batch_id,
-    so re-applying the same batch (at-least-once replay after a crash
-    between the state writes and the checkpoint commit) recomputes and
-    rewrites the identical `v=batch_id` snapshot instead of
-    double-adding its mention counts; the pair append may duplicate
-    rows, which the read path dedupes."""
+    """Apply one micro-batch to the surfaces state, idempotently: the
+    merge base is the latest snapshot with version < batch_id, so
+    re-applying the same batch rewrites the identical `v=batch_id`
+    snapshot instead of double-adding its mention counts."""
     surf_root = os.path.join(state_dir, "surfaces")
-    pairs_path = os.path.join(state_dir, "pairs")
     guard_batch_id(surf_root, batch_id)
     batch_surf = mention_surfaces(extract_triples_sql(batch_df))
     old = _read_surfaces(spark, surf_root, below=batch_id)
@@ -160,24 +88,11 @@ def _apply_batch(
             F.coalesce("grams", "grams_b").alias("grams"),
         )
     )
-    # materialize before any state write (the new-surface anti-join and
-    # the pair join both read `old`, which pruning may remove below)
-    merged = merged.localCheckpoint(eager=True)
-    new = batch_surf.join(
-        old.select("surface"), "surface", "left_anti"
-    ).localCheckpoint(eager=True)
-    pairs = _new_pairs(
-        new.select("surface", "grams"),
-        merged.select("surface", "grams"),
-        min_jaccard,
-    )
-    pairs.write.mode("append").parquet(pairs_path)
     merged.write.mode("overwrite").parquet(
         os.path.join(surf_root, f"v={batch_id}")
     )
-    # prune snapshots older than this batch's merge base (only the last
-    # uncommitted batch can replay) and any superseded pre-versioning
-    # flat-layout files — shared machinery: streaming/state.py
+    # the base this batch read survives the prune (a replay re-reads
+    # it); older versions and superseded flat-layout files go
     prune_below_base(surf_root, batch_id, drop_flat=True)
 
 
@@ -186,12 +101,11 @@ def start_incremental_linking(
     input_dir: str,
     state_dir: str,
     checkpoint_dir: str,
-    min_jaccard: float = 0.4,
     trigger_once: bool = True,
 ):
     """Stream transcript parquet appends → incrementally maintained
-    (surfaces, candidate pairs) linking state. Returns the
-    StreamingQuery; read the result with `linked_pairs_view`."""
+    surfaces state. Returns the StreamingQuery; read the result with
+    `linked_pairs_view`."""
     stream = (
         spark.readStream.schema(TRANSCRIPTS)
         .option("maxFilesPerTrigger", 8)
@@ -199,7 +113,7 @@ def start_incremental_linking(
     )
 
     def process_batch(batch_df, batch_id: int) -> None:
-        _apply_batch(spark, state_dir, batch_df, batch_id, min_jaccard)
+        _apply_batch(spark, state_dir, batch_df, batch_id)
 
     writer = stream.writeStream.foreachBatch(process_batch).option(
         "checkpointLocation", checkpoint_dir
@@ -218,19 +132,7 @@ def surfaces_state_view(spark: SparkSession, state_dir: str) -> DataFrame:
 def linked_pairs_view(
     spark: SparkSession, state_dir: str, min_cosine: float = 0.5
 ) -> DataFrame:
-    """Current linked pairs from streaming state: stored gram-Jaccard
-    candidates rescored with TF-IDF cosine over the CURRENT vocab —
-    identical formula (and, the parity test pins, identical result) to
-    the batch link_mentions over the same accumulated corpus."""
-    surfaces = _read_surfaces(
-        spark, os.path.join(state_dir, "surfaces")
-    ).localCheckpoint(eager=True)
-    pairs = _read_state(
-        spark, os.path.join(state_dir, "pairs"), _PAIRS_DDL
-    ).dropDuplicates(["surface_a", "surface_b"])
-    if surfaces.rdd.isEmpty():
-        return spark.createDataFrame(
-            [], "surface_a string, surface_b string, jaccard double, cosine double"
-        )
-    scored = tfidf_cosine(pairs, surfaces, n_docs=surfaces.count())
-    return scored.filter(F.col("cosine") >= min_cosine)
+    """Current linked pairs: the batch link_mentions over the current
+    surfaces snapshot (checkpointed, as link_mentions expects)."""
+    surfaces = surfaces_state_view(spark, state_dir).localCheckpoint(eager=True)
+    return link_mentions(None, min_cosine=min_cosine, surfaces=surfaces)

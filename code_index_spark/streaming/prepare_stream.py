@@ -1,42 +1,27 @@
 """Incremental corpus preparation via Structured Streaming — the
-streaming twin of operators/prepare.prepare_corpus, for the ingest
-shape a 100 TB pipeline actually has: crawl snapshots arrive
-continuously, and each new batch must be labeled against EVERYTHING
-already ingested, not just against itself.
+streaming twin of operators/prepare.prepare_corpus, for crawl
+snapshots that arrive continuously, where each new batch must be
+labeled against EVERYTHING already ingested. The stream keeps state
+and calls the batch operator: each micro-batch is labeled by
+operators/prepare.batch_labels against the accumulated exact-dup
+registry, and near-dup detection is deferred to compact_labels
+(operators/prepare.compact_prepared_labels over the accumulated
+corpus) — minhash banding against the full corpus is not proportional
+to a micro-batch sliver. The stream's labels therefore never say
+'near_dup'. The exact-dup survivor is first-seen-batch, then min-id:
+the batch operator's global min-id whenever ids arrive in batch order,
+which the parity test pins.
 
-Per micro-batch:
-- the stateless per-row signals (quality score, language vote, PII
-  flag, deterministic split bucket, decontamination overlap against
-  the static eval suite) are the SAME fused codegen projections as the
-  batch operator — they depend only on the row, so streaming changes
-  nothing;
-- exact duplication is checked against the ACCUMULATED hash registry:
-  a doc whose md5(text) was seen in any earlier batch is an exact_dup,
-  and within a batch the min-id doc wins (so the survivor policy is
-  first-seen-batch, then min-id — identical to the batch operator's
-  global min-id whenever ids arrive in batch order, which the parity
-  test pins);
-- near-dup detection is DEFERRED to the nightly batch compaction
-  (compact_labels below / operators/prepare.compact_prepared_labels):
-  minhash banding against the full accumulated corpus is not
-  proportional to the new sliver, and the dedupe_stream watermark
-  argument applies — a residual near-dup admitted by the stream is
-  caught in compaction. The stream's labels therefore never say
-  'near_dup'; the reason priority is otherwise the batch operator's
-  (exact_dup > contaminated > low_quality > non_en > keep).
-
-State layout under `state_dir/` (the shared replay discipline in
-streaming/state.py — foreachBatch is at-least-once, so every write is
-keyed by batch_id; a replayed batch recomputes byte-identical output
-instead of double-applying; a batch-id REGRESSION — wiped checkpoint
-over a kept state dir — raises instead of corrupting):
+The state is per-batch deltas under `state_dir/`, keyed by batch id
+(the shared replay discipline in streaming/state.py — foreachBatch is
+at-least-once, so a replayed batch rewrites its own version with
+identical content; a batch-id REGRESSION — wiped checkpoint over a
+kept state dir — raises instead of corrupting):
 - `hashes/v=<batch_id>/` — this batch's NEW (text_hash, keep_id)
-  rows, i.e. the registry is kept as per-batch DELTAS and read as
-  their union: per-batch write cost is proportional to the sliver,
-  never to the accumulated registry (a full-snapshot rewrite per
-  batch would grow linearly with corpus uniques — the anti-scale
-  shape). `fold_registry` compacts old deltas once the dir count
-  grows (run it from the post-drain compaction job).
+  registry rows; the registry is the union of the deltas, so per-batch
+  write cost is proportional to the sliver, never to the accumulated
+  registry. `fold_state` compacts old deltas (run it from the
+  post-drain compaction job).
 - `labels/v=<batch_id>/` — this batch's (doc_id, reason, split,
   has_pii, doc_chars); overwritten in place on replay.
 Read caveat: the state dirs are written BEFORE the streaming
@@ -59,101 +44,18 @@ import os
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
-from ..operators.decontam import decontaminate, eval_gram_set
-from ..operators.pii import pii_features
-from ..operators.split import hash_split
-from ..operators.textstats import lang_id, quality_features
-from .state import fold_deltas, guard_batch_id, read_deltas, snapshot_versions
+from ..operators.decontam import eval_gram_set
+from ..operators.prepare import (
+    REGISTRY_DDL,
+    batch_labels,
+    compact_prepared_labels,
+)
+from .state import fold_deltas, guard_batch_id, read_deltas
 
-_HASHES_DDL = "text_hash string, keep_id bigint"
 _LABELS_DDL = (
     "doc_id bigint, reason string, split string, has_pii boolean,"
     " doc_chars int"
 )
-
-
-def batch_labels(
-    batch_df: DataFrame,
-    old_registry: DataFrame,
-    eval_df: DataFrame,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    min_quality: float = 0.7,
-    keep_lang: str = "en",
-    decontam_gram_n: int = 8,
-    decontam_min_matches: int = 1,
-    fractions: dict[str, float] | None = None,
-    split_salt: str = "split-v1",
-    eval_grams: DataFrame | None = None,
-) -> tuple[DataFrame, DataFrame]:
-    """The stream's per-batch labeling as a PURE function:
-    (labels, batch_winners) for one micro-batch against the
-    accumulated (text_hash, keep_id) registry `old_registry` (empty
-    DataFrame for the first batch — or for labeling a whole corpus as
-    one batch, which is how the driver row `prepare_compacted_labels`
-    proves the stream+compaction contract against the batch oracle).
-    Reasons here never say 'near_dup' — that stage is compaction's
-    (operators/prepare.compact_prepared_labels).
-
-    NULL-text docs: md5(NULL) is NULL, which equi-joins with nothing,
-    so they are never duplicates of anything (matching the batch
-    operator, whose reject-set joins are equally null-rejecting) but
-    MUST still get a label row — hence the left join on winners and
-    the coalesce to r_exact=0."""
-    docs = batch_df.select(
-        F.col(id_col).alias("doc_id"), F.col(text_col).alias("text")
-    ).withColumn("text_hash", F.md5("text"))
-
-    winners = docs.groupBy("text_hash").agg(
-        F.min("doc_id").alias("batch_keep"))
-    # a hash seen in ANY earlier batch makes every copy here a dup;
-    # otherwise the within-batch min id survives
-    flagged = (
-        docs
-        .join(old_registry.select("text_hash",
-                                  F.col("keep_id").alias("old_keep")),
-              "text_hash", "left")
-        .join(winners, "text_hash", "left")
-        .withColumn(
-            "r_exact",
-            F.coalesce(
-                (F.col("old_keep").isNotNull()
-                 | (F.col("doc_id") != F.col("batch_keep"))).cast("int"),
-                F.lit(0),
-            ),
-        )
-        .drop("old_keep", "batch_keep")
-    )
-
-    contam = (
-        decontaminate(docs, eval_df.select(F.col(text_col).alias("text")),
-                      "doc_id", "text", gram_n=decontam_gram_n,
-                      eval_grams=eval_grams)
-        .filter(F.col("n_shared_grams") >= decontam_min_matches)
-        .select("doc_id")
-        .withColumn("r_contam", F.lit(1))
-    )
-    perrow = hash_split(
-        lang_id(quality_features(pii_features(flagged, "text"), "text"),
-                "text"),
-        "doc_id", fractions, split_salt,
-    ).select(
-        "doc_id", "r_exact", F.length("text").alias("doc_chars"),
-        "quality_score", "pred_lang", "has_pii", "split",
-    )
-    reason = (
-        F.when(F.col("r_exact") == 1, "exact_dup")
-        .when(F.col("r_contam") == 1, "contaminated")
-        .when(F.col("quality_score") < min_quality, "low_quality")
-        .when(F.col("pred_lang") != keep_lang, "non_en")
-        .otherwise("keep")
-    )
-    labels = (
-        perrow.join(contam, "doc_id", "left")
-        .select("doc_id", reason.alias("reason"), "split", "has_pii",
-                "doc_chars")
-    )
-    return labels, winners
 
 
 def _apply_batch(
@@ -175,7 +77,7 @@ def _apply_batch(
     hash_root = os.path.join(state_dir, "hashes")
     label_root = os.path.join(state_dir, "labels")
     guard_batch_id(hash_root, batch_id)
-    old = read_deltas(spark, hash_root, _HASHES_DDL, below=batch_id)
+    old = read_deltas(spark, hash_root, REGISTRY_DDL, below=batch_id)
     labels, winners = batch_labels(
         batch_df, old, eval_df, id_col, text_col, min_quality,
         keep_lang, decontam_gram_n, decontam_min_matches, fractions,
@@ -310,29 +212,15 @@ def prepared_labels_view(spark: SparkSession, state_dir: str) -> DataFrame:
     exactly one batch's labels dir (a replay overwrites the same dir).
     Drain-then-read: while a stream is mid-batch this can include one
     uncommitted version (module docstring caveat)."""
-    label_root = os.path.join(state_dir, "labels")
-    versions = snapshot_versions(label_root)
-    if not versions:
-        return spark.createDataFrame([], _LABELS_DDL)
-    return spark.read.schema(_LABELS_DDL).parquet(
-        *[os.path.join(label_root, f"v={v}") for v in versions]
-    )
+    return read_deltas(spark, os.path.join(state_dir, "labels"), _LABELS_DDL)
 
 
 def hash_state_view(spark: SparkSession, state_dir: str) -> DataFrame:
     """Current accumulated exact-dup registry (union of the per-batch
     deltas)."""
     return read_deltas(
-        spark, os.path.join(state_dir, "hashes"), _HASHES_DDL
+        spark, os.path.join(state_dir, "hashes"), REGISTRY_DDL
     )
-
-
-def fold_registry(spark: SparkSession, state_dir: str) -> None:
-    """Compact the registry deltas (all but the replay-sensitive
-    latest — streaming/state.fold_deltas) so dir count stays bounded
-    on long streams. Run while the stream is stopped, e.g. from the
-    post-drain compaction job."""
-    fold_deltas(spark, os.path.join(state_dir, "hashes"), _HASHES_DDL)
 
 
 def fold_state(spark: SparkSession, state_dir: str) -> None:
@@ -345,7 +233,7 @@ def fold_state(spark: SparkSession, state_dir: str) -> None:
     stay O(1) dirs regardless of stream age. Run while the stream is
     stopped — jobs/prepare_stream_job.py calls it from the compact
     branch."""
-    fold_deltas(spark, os.path.join(state_dir, "hashes"), _HASHES_DDL)
+    fold_deltas(spark, os.path.join(state_dir, "hashes"), REGISTRY_DDL)
     fold_deltas(spark, os.path.join(state_dir, "labels"), _LABELS_DDL)
 
 
@@ -365,8 +253,6 @@ def compact_labels(
     result is row-identical to prepare_corpus over the same corpus
     under the stream-parity precondition (ids in batch order); see
     operators/prepare.compact_prepared_labels for the rule."""
-    from ..operators.prepare import compact_prepared_labels
-
     return compact_prepared_labels(
         docs_df, prepared_labels_view(spark, state_dir),
         id_col, text_col, near_dup_threshold, near_dup_max_bucket,

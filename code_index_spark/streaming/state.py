@@ -20,6 +20,8 @@ import shutil
 
 from pyspark.sql import DataFrame, SparkSession
 
+from ..session import empty_frame
+
 
 def snapshot_versions(root: str) -> list[int]:
     """Applied-batch versions (`v=<id>` dirs) under a state root,
@@ -76,7 +78,7 @@ def read_latest_snapshot(
         n.endswith(".parquet") for n in os.listdir(root)
     ):
         return spark.read.schema(ddl).parquet(root)
-    return spark.createDataFrame([], ddl)
+    return empty_frame(spark, ddl)
 
 
 def read_deltas(
@@ -93,7 +95,7 @@ def read_deltas(
     if below is not None:
         versions = [v for v in versions if v < below]
     if not versions:
-        return spark.createDataFrame([], ddl)
+        return empty_frame(spark, ddl)
     return spark.read.schema(ddl).parquet(
         *[os.path.join(root, f"v={v}") for v in versions]
     )

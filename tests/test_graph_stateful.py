@@ -36,6 +36,29 @@ def test_pagerank_star_center_dominates(spark):
         assert x == pytest.approx(leaves[0], abs=1e-9)  # leaf symmetry
 
 
+def _plans_python_rdd(df):
+    return "PythonRDD" in df._jdf.queryExecution().toRdd().toDebugString()
+
+
+def test_empty_frames_plan_no_python_rdd(spark, tmp_path):
+    """An empty state table and PageRank over an empty edge table are
+    JVM-side relations (no Python worker tasks) with the DDL schema a
+    createDataFrame([], ddl) frame has."""
+    from code_index_spark.streaming.state import read_deltas
+
+    ddl = "text_hash string, keep_id bigint"
+    assert _plans_python_rdd(spark.createDataFrame([], ddl))  # the trap
+    empty_state = read_deltas(spark, str(tmp_path / "missing"), ddl)
+    assert not _plans_python_rdd(empty_state)
+    assert empty_state.schema == spark.createDataFrame([], ddl).schema
+    assert empty_state.count() == 0
+
+    ranks = pagerank(_edges(spark, []))
+    assert not _plans_python_rdd(ranks)
+    assert ranks.schema == spark.createDataFrame([], "v long, rank double").schema
+    assert ranks.count() == 0
+
+
 def test_degree_stats(spark):
     e = _edges(spark, [(1, 2), (1, 3), (2, 3), (1, 4)])
     deg = {r["v"]: r["degree"] for r in degree_stats(e).collect()}

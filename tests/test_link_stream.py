@@ -1,9 +1,10 @@
 """Streaming entity-linking twin (streaming/link_stream.py): the
-incrementally maintained state must (a) survive restart without
-duplicating pairs and (b) produce EXACTLY the batch link_mentions
-result over the same accumulated corpus — candidate generation is
-incremental (gram Jaccard is vocab-independent), the idf-dependent
-cosine rescore happens at read time over the final vocab."""
+incrementally maintained surfaces snapshot must (a) survive restart
+without re-applying a batch and (b) give EXACTLY the batch
+link_mentions result over the same accumulated corpus — the pairs view
+runs link_mentions over the snapshot."""
+
+import os
 
 import pytest
 from pyspark.sql import functions as F
@@ -45,16 +46,18 @@ def test_incremental_linking_matches_batch_and_survives_restart(
     ).parquet(in_dir)
 
     start_incremental_linking(spark, in_dir, state_dir, ck_dir).awaitTermination(180)
+    # the state is the surfaces snapshot alone
+    assert os.listdir(state_dir) == ["surfaces"]
     after_first = _pairs_set(linked_pairs_view(spark, state_dir))
-    n_pairs_state_1 = spark.read.parquet(state_dir + "/pairs").count()
+    versions_1 = sorted(os.listdir(os.path.join(state_dir, "surfaces")))
 
-    # restart with NO new input: checkpoint skips everything — state
-    # and result unchanged (no re-linking, no duplicate pairs)
+    # restart with NO new input: checkpoint skips everything — no new
+    # surfaces version is written and the result is unchanged
     start_incremental_linking(spark, in_dir, state_dir, ck_dir).awaitTermination(180)
-    assert spark.read.parquet(state_dir + "/pairs").count() == n_pairs_state_1
+    assert sorted(os.listdir(os.path.join(state_dir, "surfaces"))) == versions_1
     assert _pairs_set(linked_pairs_view(spark, state_dir)) == after_first
 
-    # append the second half; only the new surfaces get linked
+    # append the second half; its batch merges onto the snapshot
     spark.createDataFrame(second, schema=TRANSCRIPTS).write.mode(
         "append"
     ).parquet(in_dir)
@@ -93,7 +96,7 @@ def test_batch_replay_is_idempotent(spark, tmp_path, synth_corpus):
     state_dir = str(tmp_path / "state")
     full = spark.createDataFrame(pdf, schema=TRANSCRIPTS)
 
-    _apply_batch(spark, state_dir, full, 0, min_jaccard=0.4)
+    _apply_batch(spark, state_dir, full, 0)
     first = {
         (r["surface"], r["mention_count"])
         for r in surfaces_state_view(spark, state_dir).collect()
@@ -101,7 +104,7 @@ def test_batch_replay_is_idempotent(spark, tmp_path, synth_corpus):
     view_first = _pairs_set(linked_pairs_view(spark, state_dir))
 
     # crash-between-write-and-commit: the identical batch replays
-    _apply_batch(spark, state_dir, full, 0, min_jaccard=0.4)
+    _apply_batch(spark, state_dir, full, 0)
     replayed = {
         (r["surface"], r["mention_count"])
         for r in surfaces_state_view(spark, state_dir).collect()
@@ -115,7 +118,6 @@ def test_flat_surfaces_layout_migrates(spark, tmp_path, synth_corpus):
     surfaces/, no v=<batch> dirs) must be read as the base snapshot —
     not silently treated as empty, which would reset accumulated
     mention counts — and be cleaned up once a versioned base exists."""
-    import os
     import shutil
 
     pdf, _ = synth_corpus
@@ -128,8 +130,8 @@ def test_flat_surfaces_layout_migrates(spark, tmp_path, synth_corpus):
 
     # reference: both batches through the current versioned layout
     ref_dir = str(tmp_path / "ref")
-    _apply_batch(spark, ref_dir, first, 0, min_jaccard=0.4)
-    _apply_batch(spark, ref_dir, second, 1, min_jaccard=0.4)
+    _apply_batch(spark, ref_dir, first, 0)
+    _apply_batch(spark, ref_dir, second, 1)
     want = {
         (r["surface"], r["mention_count"])
         for r in surfaces_state_view(spark, ref_dir).collect()
@@ -137,7 +139,7 @@ def test_flat_surfaces_layout_migrates(spark, tmp_path, synth_corpus):
 
     # simulate the old layout: demote batch 0's snapshot to flat files
     mig_dir = str(tmp_path / "mig")
-    _apply_batch(spark, mig_dir, first, 0, min_jaccard=0.4)
+    _apply_batch(spark, mig_dir, first, 0)
     surf = os.path.join(mig_dir, "surfaces")
     v0 = os.path.join(surf, "v=0")
     for name in os.listdir(v0):
@@ -150,7 +152,7 @@ def test_flat_surfaces_layout_migrates(spark, tmp_path, synth_corpus):
     }
     assert base  # flat layout readable, not empty
 
-    _apply_batch(spark, mig_dir, second, 1, min_jaccard=0.4)
+    _apply_batch(spark, mig_dir, second, 1)
     got = {
         (r["surface"], r["mention_count"])
         for r in surfaces_state_view(spark, mig_dir).collect()
@@ -158,7 +160,7 @@ def test_flat_surfaces_layout_migrates(spark, tmp_path, synth_corpus):
     assert got == want  # counts accumulated on the flat base
 
     # next batch sees a versioned base -> flat files cleaned up
-    _apply_batch(spark, mig_dir, second.limit(0), 2, min_jaccard=0.4)
+    _apply_batch(spark, mig_dir, second.limit(0), 2)
     assert not [n for n in os.listdir(surf)
                 if os.path.isfile(os.path.join(surf, n))]
     assert got == {

@@ -207,12 +207,12 @@ def test_batch_id_regression_raises(spark, tmp_path):
 
 
 def test_fold_registry_preserves_content_and_replay(spark, tmp_path):
-    """fold_deltas compacts all but the replay-sensitive latest delta;
-    registry content is unchanged and a replay of the latest batch
-    after folding still rewrites identical state."""
+    """fold_state compacts all but the replay-sensitive latest registry
+    delta; registry content is unchanged and a replay of the latest
+    batch after folding still rewrites identical state."""
     import os as _os
 
-    from code_index_spark.streaming.prepare_stream import fold_registry
+    from code_index_spark.streaming.prepare_stream import fold_state
 
     state_dir = str(tmp_path / "state")
     ev = spark.createDataFrame([(100, "alpha beta gamma delta")], _SCHEMA)
@@ -227,7 +227,7 @@ def test_fold_registry_preserves_content_and_replay(spark, tmp_path):
     apply(b2, 2)
     before = sorted(map(tuple, hash_state_view(spark, state_dir).collect()))
 
-    fold_registry(spark, state_dir)
+    fold_state(spark, state_dir)
     hash_root = _os.path.join(state_dir, "hashes")
     assert sorted(_os.listdir(hash_root)) == ["v=1", "v=2"]
     assert sorted(map(tuple,

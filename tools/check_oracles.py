@@ -6,6 +6,10 @@ Usage: python tools/check_oracles.py [sf_dir] [only_query ...]
 
 Runs on local[$SPARK_GRAFT_CPUS] (default 16) with 16 shuffle
 partitions; the derived transcripts view is as wide as the cores.
+DuckDB runs beside the driver JVM's 8 GB heap, so it gets an explicit
+3 GB memory limit and spills under the system temp dir (its defaults,
+80% of RAM and `.tmp` in the working directory, overcommit the box
+together with the JVM).
 """
 
 from __future__ import annotations
@@ -13,6 +17,7 @@ from __future__ import annotations
 import functools
 import os
 import sys
+import tempfile
 import time
 
 import duckdb
@@ -45,7 +50,10 @@ def main() -> int:
     only = set(sys.argv[2:])
     cores = int(os.environ.get("SPARK_GRAFT_CPUS", "16"))
     spark = get_spark("oracle-check", cores=cores, shuffle_partitions=16)
-    con = duckdb.connect()
+    con = duckdb.connect(config={
+        "memory_limit": "3GB",
+        "temp_directory": os.path.join(tempfile.gettempdir(), "check_oracles_duckdb"),
+    })
     for t in TABLES:
         con.execute(f"CREATE VIEW {t} AS SELECT * FROM '{sf_dir}/{t}.parquet'")
 
