@@ -32,7 +32,9 @@ def headline_queries(tbl) -> dict:
     bench/plan_capture.py dumps the builders' plans."""
     from pyspark.sql import functions as F
 
-    from code_index_spark.operators.dedupe import minhash_lsh_pairs, simhash, simhash_near_pairs
+    from code_index_spark.operators.dedupe import (
+        minhash_verified_pairs, simhash, simhash_near_pairs,
+    )
     from code_index_spark.operators.simsearch import brute_force_topk
 
     emb = tbl["embeddings"].withColumn("v", F.col("embedding").cast("array<double>"))
@@ -53,8 +55,8 @@ def headline_queries(tbl) -> dict:
                            .orderBy(F.desc("rev")).limit(10),
                            "collect"),
         "ann_topk": (lambda: brute_force_topk(emb, "vec_id", "v", qvec, 10), "collect"),
-        "minhash_dedup": (lambda: minhash_lsh_pairs(tbl["documents"], "doc_id", "text"),
-                          "count"),
+        "minhash_dedup": (lambda: minhash_verified_pairs(
+            tbl["documents"], "doc_id", "text", threshold=0.7), "count"),
         "simhash_dedup": (lambda: simhash_near_pairs(
             simhash(tbl["documents"], "doc_id", "text")), "count"),
     }

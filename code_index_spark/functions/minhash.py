@@ -181,7 +181,7 @@ def band_collision_pairs(
     self-joining-consumer trap, flagged by the round-3 review), so by
     default the compact (id, band, h) table is localCheckpoint-ed
     first. Cost is linear in n·bands rows. The default stays True for
-    EVERY in-repo caller — including minhash_lsh_pairs, whose shingle
+    EVERY in-repo caller — including minhash_verified_pairs, whose shingle
     table is itself checkpointed: the bands checkpoint additionally
     stops the 105-digest signature stage recomputing per scan, and the
     round-4 A/B measured it neutral-to-better even there (BENCH.md).

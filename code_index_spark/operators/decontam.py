@@ -12,8 +12,7 @@ stage: the only exchange is the per-doc match count over the
 Compare `operators/curate.py`, where the reject lists are
 duplication-rate-dependent and deliberately NOT broadcast (round-4
 ADVICE): an eval suite's size is bounded by design, a reject list's
-is not; `broadcast_eval=False` degrades to a shuffle join for the
-corpus-vs-corpus overlap case.
+is not.
 
 Reference parity: code-index gates indexed content against configured
 exclusion lists (file_processing_helpers.py:55-57, ignore/exclude
@@ -66,7 +65,6 @@ def eval_gram_set(eval_df: DataFrame, text_col: str,
 
 def decontaminate(train_df: DataFrame, eval_df: DataFrame, id_col: str,
                   text_col: str, gram_n: int = 8,
-                  broadcast_eval: bool = True,
                   eval_grams: DataFrame | None = None) -> DataFrame:
     """(doc_id, n_shared_grams) for every training doc sharing at
     least one word `gram_n`-gram with the eval set; n_shared_grams
@@ -82,11 +80,9 @@ def decontaminate(train_df: DataFrame, eval_df: DataFrame, id_col: str,
     path."""
     ev = (eval_grams if eval_grams is not None
           else _distinct_doc_grams(eval_df, None, text_col, gram_n))
-    if broadcast_eval:
-        ev = F.broadcast(ev)
     tr = _distinct_doc_grams(train_df, id_col, text_col, gram_n)
     return (
-        tr.join(ev, "gh")
+        tr.join(F.broadcast(ev), "gh")
         .groupBy("doc_id")
         .agg(F.count("*").alias("n_shared_grams"))
         .orderBy("doc_id")

@@ -6,13 +6,14 @@ Five strategies, each a DataFrame-in/DataFrame-out operator over a
   exact            — hash-groupBy on md5(text); zero false positives
   ngram_jaccard    — exact n-gram Jaccard pairs via the prefix-filtered
                      set-similarity join (functions.simjoin)
-  minhash_lsh      — md5-60bit minhash banding, pure Catalyst (the
-                     100 TB path: candidate pairs only, never O(n²))
+  minhash_verified — md5-60bit minhash banding + exact rescore, pure
+                     Catalyst (the 100 TB path: candidate pairs only,
+                     never O(n²))
   simhash          — 60-bit simhash, pure Catalyst (md5 token hashes) +
                      Hamming-band self-join with radius-derived bands
   embedding_cosine — near-dup pairs by embedding cosine: exact via a
                      triangle-distributed self-join, or blocked by
-                     hyperplane / coordinate-sign buckets
+                     coordinate-sign buckets
 
 Scale notes: every strategy dedupes/aggregates *before* any pairwise
 work; the only cross joins are within LSH/band buckets, whose size is
@@ -21,42 +22,47 @@ bounded by construction. AQE skew-join handles hot buckets.
 
 from __future__ import annotations
 
-import numpy as np
 from pyspark.sql import DataFrame, Window, functions as F
 
 from ..functions.simjoin import minhash_join, prefix_join
 from ..functions.spread import spread_narrow_scan
+from ..functions.textfns import hash60, word_grams
+from .simsearch import dot, norm
 
 
 # ---------------------------------------------------------------- exact
-def exact_duplicates(df: DataFrame, id_col: str, text_col: str) -> DataFrame:
-    """Groups of byte-identical texts: (text_hash, n_dups, keep_id).
+def text_survivors(df: DataFrame, id_col: str, text_col: str) -> DataFrame:
+    """(text_hash, n_dups, keep_id) per distinct text: the min-id
+    survivor policy for byte-identical texts, written once.
+    exact_duplicates keeps its duplicate groups and prepare.batch_labels
+    reads it as its winners.
 
-    keep_id = min id (deterministic survivor). One shuffle, map-side
-    partial agg; the hash is computed before the shuffle so the wide
-    text column never moves."""
+    One shuffle, map-side partial agg; the hash is computed before the
+    shuffle so the wide text column never moves. NULL texts form one
+    NULL-hash group, which equi-joins with nothing."""
     return (
         df.select(F.col(id_col).alias("id"), F.md5(F.col(text_col)).alias("text_hash"))
         .groupBy("text_hash")
         .agg(F.count("*").alias("n_dups"), F.min("id").alias("keep_id"))
-        .filter(F.col("n_dups") > 1)
     )
 
 
-def dedupe_exact(df: DataFrame, id_col: str, text_col: str) -> DataFrame:
-    """Keep one row (min id) per distinct text."""
-    w = Window.partitionBy(F.md5(F.col(text_col))).orderBy(F.col(id_col))
-    return df.withColumn("_rn", F.row_number().over(w)).filter(F.col("_rn") == 1).drop("_rn")
+def exact_duplicates(df: DataFrame, id_col: str, text_col: str) -> DataFrame:
+    """Groups of byte-identical texts: (text_hash, n_dups, keep_id),
+    the text_survivors rows with n_dups > 1."""
+    return text_survivors(df, id_col, text_col).filter(F.col("n_dups") > 1)
 
 
 # ------------------------------------------------------- n-gram jaccard
 def word_ngrams(col, n: int = 3):
-    """Distinct word n-grams (shingles) of a text column, pure SQL."""
-    words = F.split(F.trim(col), "\\s+")
-    k = F.size(words) - (n - 1)
-    idx = F.sequence(F.lit(1), F.greatest(k, F.lit(1)))
-    shingles = F.transform(idx, lambda i: F.concat_ws(" ", F.slice(words, i, n)))
-    return F.array_distinct(shingles)
+    """Distinct word n-grams (shingles) of a text column, pure SQL. A
+    text of fewer than n words is one whole-text shingle (its words
+    joined by single spaces), so every non-NULL text has at least one."""
+    words = F.split(F.trim(col), r"\s+")
+    return F.array_distinct(
+        F.when(F.size(words) < n, F.array(F.array_join(words, " ")))
+        .otherwise(word_grams(words, n))
+    )
 
 
 def ngram_jaccard_pairs(
@@ -86,21 +92,16 @@ def _hashed_windows(text_col: str, window: int):
     whitespace words, their count (0 for blank text), and the hash60 of
     each sliding `window`-word position in position order (empty when
     there is no full window)."""
-    from ..functions.textfns import hash60
-
     words = F.split(F.trim(F.col(text_col)), r"\s+")
     n_words = F.when(F.length(F.trim(F.col(text_col))) == 0, 0).otherwise(
         F.size(words)
     )
-    n_win = F.greatest(n_words - (window - 1), F.lit(0))
-    # sequence(1, 0) DESCENDS in Spark ([1, 0]) — guard the no-window
-    # case or short docs emit bogus partial windows
+    # word_grams gives a text of fewer than `window` words no window; a
+    # blank text (one '' word) and a NULL one get none either. The
+    # condition reads no `words`, so the split runs once per row
     hashes = F.when(
-        n_win > 0,
-        F.transform(
-            F.sequence(F.lit(1), n_win),
-            lambda i: hash60(F.concat_ws(" ", F.slice(words, i, window))),
-        ),
+        F.length(F.trim(F.col(text_col))) > 0,
+        F.transform(word_grams(words, window), hash60),
     ).otherwise(F.array().cast("array<long>"))
     return words, n_words, hashes
 
@@ -346,7 +347,7 @@ def _shingled(df: DataFrame, id_col: str, text_col: str, n: int) -> DataFrame:
     transform: a single small parquet file arrives as one partition,
     and any per-row work downstream of it (gram building, signature
     hashing) would serialize on one core — repartition the cheap
-    (id, text) projection first so the O(words²) gram build and the md5
+    (id, text) projection first so the gram build and the md5
     signatures run at session width. Inputs already wider than the core
     count (any real corpus) skip the shuffle.
 
@@ -359,14 +360,13 @@ def _shingled(df: DataFrame, id_col: str, text_col: str, n: int) -> DataFrame:
     cap is the lever, and the quality stage rejects such docs upstream
     in the composed pipelines."""
     # drop null texts HERE, below the spread: word_ngrams yields >= 1
-    # gram for every NON-null text (sequence(1, greatest(k, 1)) floors
-    # the index range), so the old `size(grams) > 0` filter was exactly
-    # a null-text guard — but written on the computed column it was
-    # pushed below the spread exchange and RE-RAN the whole O(words)
-    # gram build on the narrow (often single-task) scan side, doubling
-    # the gram work and serializing it (measured: 4.4s -> 0.6s for the
-    # sf0.1 shingle stage). The isnotnull form pushes into the parquet
-    # scan for free.
+    # gram for every NON-null text (the whole-text rule), so the old
+    # `size(grams) > 0` filter was exactly a null-text guard — but
+    # written on the computed column it was pushed below the spread
+    # exchange and RE-RAN the whole gram build on the narrow (often
+    # single-task) scan side, doubling the gram work and serializing it
+    # (measured: 4.4s -> 0.6s for the sf0.1 shingle stage). The
+    # isnotnull form pushes into the parquet scan for free.
     base = spread_narrow_scan(
         df.filter(F.col(text_col).isNotNull())
         .select(F.col(id_col).alias("id"), F.col(text_col).alias("text"))
@@ -410,48 +410,6 @@ def minhash_band_candidates(
     )
 
 
-def minhash_lsh_pairs(
-    df: DataFrame,
-    id_col: str,
-    text_col: str,
-    n: int = 3,
-    jaccard_max_dist: float = 0.3,
-    num_hash_tables: int | None = None,
-    target_miss: float = 1e-6,
-    max_bucket: int | None = None,
-) -> DataFrame:
-    """MinHash candidate near-dup pairs (shingle → k min-hashes → band
-    collision join → exact-Jaccard rescore of candidates only).
-
-    Rewritten pure-Catalyst in round 3 (was Spark ML HashingTF +
-    MinHashLSH.approxSimilarityJoin): signatures are md5-60bit min-hashes
-    computed as per-row array transforms, banding is one equi-join on
-    (band, h), and the distance filter is EXACT Jaccard over the raw
-    shingle sets (array_intersect on the candidate pairs only) instead
-    of Jaccard over hashed feature vectors. Faster (no ML fit, no
-    vector UDF join, whole plan stays in codegen), deterministic with
-    no feature-hash collision layer, and the whole candidate stage now
-    replicates bit-for-bit in the DuckDB oracle.
-
-    `num_hash_tables` defaults to tables_for_recall(1-jaccard_max_dist,
-    target_miss): the miss probability for a pair at the threshold
-    similarity is (1-s)^k, so k is sized to the recall target instead
-    of guessed. Pair generation stays linear in bucket sizes — the
-    100 TB contract is unchanged."""
-    from ..functions.minhash import tables_for_recall
-
-    if num_hash_tables is None:
-        num_hash_tables = tables_for_recall(1.0 - jaccard_max_dist, target_miss)
-    # one shingling pass shared by the banding and both rescore sides
-    # (localCheckpoint: the rescore self-joins the gram table, and the
-    # checkpoint truncates the re-analysis + recompute of the upstream
-    # scan three times over — the CLAUDE.md persist-vs-plan lesson)
-    grams = _shingled(df, id_col, text_col, n).localCheckpoint(eager=True)
-    return minhash_join(
-        grams, 1.0 - jaccard_max_dist, num_hash_tables, max_bucket=max_bucket
-    )
-
-
 def minhash_verified_pairs(
     df: DataFrame,
     id_col: str,
@@ -462,8 +420,12 @@ def minhash_verified_pairs(
     target_miss: float = 1e-6,
     max_bucket: int | None = None,
 ) -> DataFrame:
-    """The production near-dup shape: minhash *blocking* + exact n-gram
-    Jaccard *rescoring* of candidates only.
+    """The production near-dup shape: md5-60bit minhash *blocking* +
+    exact n-gram Jaccard *rescoring* of candidates only (shingle → k
+    min-hashes → band collision join → array_intersect rescore,
+    functions.simjoin.minhash_join). Pure Catalyst: no ML fit, no
+    vector UDF join, no feature-hash collision layer, and the whole
+    candidate stage replicates bit-for-bit in the DuckDB oracle.
 
     max_bucket caps band-bucket size (stop-bucket removal) — REQUIRED
     at crawl scale where boilerplate cliques exist; see
@@ -472,19 +434,22 @@ def minhash_verified_pairs(
 
     Output is (id_a, id_b, jaccard) with jaccard computed over the raw
     shingle sets — i.e. exactly what ngram_jaccard_pairs returns, but
-    reached via candidate generation that is linear in bucket sizes
-    instead of an all-shingle explode-join. With the default recall
-    sizing (target_miss=1e-6 at s=0.8 ⇒ 9 tables) a true pair at the
-    threshold is missed with probability ≤ 1e-6, so the result
-    hash-matches the exact DuckDB oracle — the driver's CORRECTNESS row
-    *is* the recall proof."""
-    return minhash_lsh_pairs(
-        df, id_col, text_col, n,
-        jaccard_max_dist=1.0 - threshold,
-        num_hash_tables=num_hash_tables,
-        target_miss=target_miss,
-        max_bucket=max_bucket,
-    )
+    reached via candidate generation that is linear in bucket sizes.
+    `num_hash_tables` defaults to tables_for_recall(threshold,
+    target_miss): a pair at the threshold similarity s is missed with
+    probability (1-s)^k, so k is sized to the recall target (1e-6 at
+    s=0.8 ⇒ 9 tables) and the result hash-matches the exact DuckDB
+    oracle — the driver's CORRECTNESS row *is* the recall proof."""
+    from ..functions.minhash import tables_for_recall
+
+    if num_hash_tables is None:
+        num_hash_tables = tables_for_recall(threshold, target_miss)
+    # one shingling pass shared by the banding and both rescore sides
+    # (localCheckpoint: the rescore self-joins the gram table, and the
+    # checkpoint truncates the re-analysis + recompute of the upstream
+    # scan three times over — the CLAUDE.md persist-vs-plan lesson)
+    grams = _shingled(df, id_col, text_col, n).localCheckpoint(eager=True)
+    return minhash_join(grams, threshold, num_hash_tables, max_bucket=max_bucket)
 
 
 def near_dup_clusters(
@@ -568,13 +533,6 @@ def simhash_bands(max_hamming: int) -> tuple[int, int]:
     raise ValueError(f"max_hamming {max_hamming} ≥ {SIMHASH_BITS} bits")
 
 
-def _tok_hash60(col):
-    """Deterministic 60-bit token hash, shared with the oracle SQL."""
-    from ..functions.textfns import hash60
-
-    return hash60(col)
-
-
 def simhash(df: DataFrame, id_col: str, text_col: str) -> DataFrame:
     """(id, simhash) — pure Catalyst (no Python UDF at all).
 
@@ -596,7 +554,7 @@ def simhash(df: DataFrame, id_col: str, text_col: str) -> DataFrame:
             F.explode(F.split(F.trim(F.col("text")), r"\s+")).alias("tok"),
         )
         .filter(F.col("tok") != "")
-        .select("id", _tok_hash60(F.col("tok")).alias("h"))
+        .select("id", hash60(F.col("tok")).alias("h"))
     )
     sums = toks.groupBy("id").agg(
         *[
@@ -696,64 +654,38 @@ def simhash_pairs_sql(max_hamming: int, table: str = "documents") -> str:
 
 
 # ------------------------------------------------------ embedding cosine
-def _pair_cosine(a_v, b_v, a_nrm, b_nrm):
-    return F.aggregate(
-        F.zip_with(a_v, b_v, lambda x, y: x * y), F.lit(0.0),
-        lambda acc, x: acc + x,
-    ) / (a_nrm * b_nrm)
-
-
 def _vec_base(df: DataFrame, id_col: str, vec_col: str) -> DataFrame:
-    norm = F.sqrt(F.aggregate(vec_col, F.lit(0.0), lambda acc, x: acc + x * x))
     return df.select(
-        F.col(id_col).alias("id"), F.col(vec_col).alias("v"), norm.alias("nrm")
+        F.col(id_col).alias("id"), F.col(vec_col).alias("v"),
+        norm(F.col(vec_col)).alias("nrm"),
+    )
+
+
+def _cosine_at_least(pairs: DataFrame, threshold: float) -> DataFrame:
+    """(a.id, b.id, cosine) rows of an a/b-aliased candidate join whose
+    cosine (simsearch.dot over the precomputed norms) is ≥ threshold."""
+    cosine = dot(F.col("a.v"), F.col("b.v")) / (F.col("a.nrm") * F.col("b.nrm"))
+    return (
+        pairs.withColumn("cosine", cosine)
+        .filter(F.col("cosine") >= threshold)
+        .select(F.col("a.id").alias("id_a"), F.col("b.id").alias("id_b"), "cosine")
     )
 
 
 def embedding_cosine_pairs(
     df: DataFrame, id_col: str, vec_col: str, threshold: float = 0.95,
-    n_planes: int = 0, n_blocks: int = 8,
+    n_blocks: int = 8,
 ) -> DataFrame:
-    """EXACT near-dup pairs by embedding cosine ≥ threshold.
-
-    n_planes=0 → exact all-pairs via a *triangle-distributed* self join:
-    vectors hash into n_blocks blocks; every unordered block pair (i ≤ j)
-    is one join group, so the O(n²) comparison work spreads over
-    n_blocks·(n_blocks+1)/2 parallel tasks instead of a single
-    constant-key reducer. Exactness is unchanged — every vector pair
-    lands in exactly one (i, j) group. Replication factor is n_blocks+1,
-    the standard trade for distributing an all-pairs join.
-
-    n_planes>0 → block by random-hyperplane sign bits first (approximate:
-    only intra-bucket pairs are compared — the classic SimHash LSH
-    family). For a deterministic, oracle-expressible blocked variant see
-    embedding_cosine_pairs_blocked.
-    """
+    """EXACT near-dup pairs by embedding cosine ≥ threshold, via a
+    *triangle-distributed* self join: vectors hash into n_blocks blocks;
+    every unordered block pair (i ≤ j) is one join group, so the O(n²)
+    comparison work spreads over n_blocks·(n_blocks+1)/2 parallel tasks
+    instead of a single constant-key reducer. Exactness is unchanged —
+    every vector pair lands in exactly one (i, j) group. Replication
+    factor is n_blocks+1, the standard trade for distributing an
+    all-pairs join. For the blocked, linear-in-bucket-sizes variant see
+    embedding_cosine_pairs_blocked."""
     base = _vec_base(df, id_col, vec_col)
-    if n_planes > 0:
-        dim = len(df.select(vec_col).first()[0])
-        rng = np.random.RandomState(42)
-        planes = rng.randn(n_planes, dim)
-        sig = None
-        for p in range(n_planes):
-            plane = F.array(*[F.lit(float(x)) for x in planes[p]])
-            dot = F.aggregate(
-                F.zip_with("v", plane, lambda a, b: a * b), F.lit(0.0),
-                lambda acc, x: acc + x,
-            )
-            bit = (dot > 0).cast("int")
-            sig = bit if sig is None else sig * 2 + bit
-        a = base.withColumn("bucket", sig).alias("a")
-        b = base.withColumn("bucket", sig).alias("b")
-        return (
-            a.join(b, "bucket")
-            .filter(F.col("a.id") < F.col("b.id"))
-            .withColumn("cosine", _pair_cosine(
-                F.col("a.v"), F.col("b.v"), F.col("a.nrm"), F.col("b.nrm")))
-            .filter(F.col("cosine") >= threshold)
-            .select(F.col("a.id").alias("id_a"), F.col("b.id").alias("id_b"), "cosine")
-        )
-    # triangle-distributed exact all-pairs
     blk = F.pmod(F.xxhash64("id"), F.lit(n_blocks)).cast("int")
     left = base.withColumn("i", blk).withColumn(
         "j", F.explode(F.sequence(F.col("i"), F.lit(n_blocks - 1)))
@@ -761,17 +693,14 @@ def embedding_cosine_pairs(
     right = base.withColumn("j", blk).withColumn(
         "i", F.explode(F.sequence(F.lit(0), F.col("j")))
     ).alias("b")
-    return (
+    return _cosine_at_least(
         left.join(right, ["i", "j"])
-        .filter((F.col("i") < F.col("j")) | (F.col("a.id") < F.col("b.id")))
-        .withColumn("cosine", _pair_cosine(
-            F.col("a.v"), F.col("b.v"), F.col("a.nrm"), F.col("b.nrm")))
-        .filter(F.col("cosine") >= threshold)
-        .select(
-            F.least(F.col("a.id"), F.col("b.id")).alias("id_a"),
-            F.greatest(F.col("a.id"), F.col("b.id")).alias("id_b"),
-            "cosine",
-        )
+        .filter((F.col("i") < F.col("j")) | (F.col("a.id") < F.col("b.id"))),
+        threshold,
+    ).select(
+        F.least("id_a", "id_b").alias("id_a"),
+        F.greatest("id_a", "id_b").alias("id_b"),
+        "cosine",
     )
 
 
@@ -809,13 +738,8 @@ def embedding_cosine_pairs_blocked(
         )
     a = bucketed.alias("a")
     b = bucketed.alias("b")
-    return (
-        a.join(b, "bucket")
-        .filter(F.col("a.id") < F.col("b.id"))
-        .withColumn("cosine", _pair_cosine(
-            F.col("a.v"), F.col("b.v"), F.col("a.nrm"), F.col("b.nrm")))
-        .filter(F.col("cosine") >= threshold)
-        .select(F.col("a.id").alias("id_a"), F.col("b.id").alias("id_b"), "cosine")
+    return _cosine_at_least(
+        a.join(b, "bucket").filter(F.col("a.id") < F.col("b.id")), threshold
     )
 
 

@@ -61,7 +61,7 @@ def extract_turn(text: str, role: str, rules: list[Rule] | None = None) -> list[
 
 
 def extract_triples(transcripts_df):
-    """transcripts → triples DataFrame (TRIPLES schema, flat).
+    """transcripts → triples DataFrame (schema.TRIPLES_FLAT_DDL).
 
     Batch-internal layout is columnar (per-column python lists →
     pandas dict), not row tuples: tuple construction dominated the

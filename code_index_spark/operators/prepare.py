@@ -49,6 +49,7 @@ from pyspark.sql import DataFrame, functions as F
 from ..session import empty_frame
 from .curate import near_reject_set
 from .decontam import decontaminate
+from .dedupe import text_survivors
 from .pii import pii_features
 from .split import hash_split
 from .textstats import lang_id, quality_features
@@ -122,7 +123,8 @@ def batch_labels(
     accumulated REGISTRY_DDL registry `old_registry` (empty for a whole
     corpus labeled as one batch, as prepare_corpus does; the
     accumulated deltas in streaming/prepare_stream). `batch_winners`
-    is (text_hash, batch_keep): the min doc id per text in the batch.
+    is (text_hash, batch_keep): the min doc id per text in the batch
+    (dedupe.text_survivors).
 
     Reasons here never say 'near_dup' — that stage is
     compact_prepared_labels'. A doc whose text hash is in the registry
@@ -136,8 +138,8 @@ def batch_labels(
         F.col(id_col).alias("doc_id"), F.col(text_col).alias("text")
     ).withColumn("text_hash", F.md5("text"))
 
-    winners = docs.groupBy("text_hash").agg(
-        F.min("doc_id").alias("batch_keep"))
+    winners = text_survivors(docs, "doc_id", "text").select(
+        "text_hash", F.col("keep_id").alias("batch_keep"))
     # a hash seen in ANY earlier batch makes every copy here a dup;
     # otherwise the within-batch min id survives
     flagged = (

@@ -20,12 +20,15 @@ import numpy as np
 from pyspark.sql import DataFrame, functions as F
 
 
-def _dot(u, v):
+def dot(u, v):
+    """Dot product of two array<double> columns, JVM-side: the one
+    vector dot of the package (simsearch and dedupe's cosine pairs)."""
     return F.aggregate(F.zip_with(u, v, lambda a, b: a * b), F.lit(0.0),
                        lambda acc, x: acc + x)
 
 
-def _norm(v):
+def norm(v):
+    """Euclidean norm of an array<double> column."""
     return F.sqrt(F.aggregate(v, F.lit(0.0), lambda acc, x: acc + x * x))
 
 
@@ -52,7 +55,7 @@ def with_cosine(df: DataFrame, vec_col: str, query: list[float]) -> DataFrame:
     qn = float(np.sqrt((q * q).sum()))
     qcol = F.array(*[F.lit(float(x)) for x in q])
     return df.withColumn(
-        "cosine", _dot(F.col(vec_col), qcol) / (_norm(F.col(vec_col)) * F.lit(qn))
+        "cosine", dot(F.col(vec_col), qcol) / (norm(F.col(vec_col)) * F.lit(qn))
     )
 
 
@@ -75,7 +78,7 @@ def hyperplane_signature(vec_col, planes: np.ndarray):
     sig = None
     for p in range(planes.shape[0]):
         plane = F.array(*[F.lit(float(x)) for x in planes[p]])
-        bit = (_dot(F.col(vec_col), plane) > 0).cast("long")
+        bit = (dot(F.col(vec_col), plane) > 0).cast("long")
         sig = bit if sig is None else sig * 2 + bit
     return sig
 

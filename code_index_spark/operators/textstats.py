@@ -163,7 +163,6 @@ def unigram_lm_scores(
     ref_df: DataFrame,
     id_col: str,
     text_col: str,
-    broadcast_lm: bool = True,
 ) -> DataFrame:
     """CCNet-style language-model quality scoring with a unigram LM:
     fit word counts on a REFERENCE corpus (CCNet fits KenLM on
@@ -182,12 +181,10 @@ def unigram_lm_scores(
 
     Scale shape: the reference LM is a vocab-scale (word, count)
     table; like decontaminate's eval grams it is bounded by
-    construction (a curated reference corpus), so it broadcasts by
-    default — the scored corpus then never shuffles ON WORDS; the only
-    corpus-sized exchange is the per-doc aggregation (map-side
-    partial). broadcast_lm=False degrades to a shuffle join for
-    reference corpora that aren't small. The (T, V) totals ride a
-    1-row broadcast cross join — never a driver collect.
+    construction (a curated reference corpus), so it broadcasts — the
+    scored corpus then never shuffles ON WORDS; the only corpus-sized
+    exchange is the per-doc aggregation (map-side partial). The (T, V)
+    totals ride a 1-row broadcast cross join — never a driver collect.
 
     Float note: each token's log-prob is the same IEEE double in Spark
     and DuckDB (identical rational inputs); only the per-doc summation
@@ -213,8 +210,7 @@ def unigram_lm_scores(
         df.filter(nonempty)
         .select(F.col(id_col).alias("doc_id"), F.explode(words).alias("w"))
     )
-    lm_side = F.broadcast(lm) if broadcast_lm else lm
-    j = tok.join(lm_side, "w", "left").crossJoin(F.broadcast(tot))
+    j = tok.join(F.broadcast(lm), "w", "left").crossJoin(F.broadcast(tot))
     lp = F.log(
         (F.coalesce(F.col("c"), F.lit(0)) + F.lit(1.0))
         / (F.col("t") + F.col("v") + F.lit(1.0))
@@ -252,6 +248,42 @@ def token_counts(df: DataFrame, text_col: str) -> DataFrame:
     return df.withColumn("ws_tokens", ws).withColumn("bpe_tokens", bpe)
 
 
+def _hashed_features(side: DataFrame, text_col: str, gram_ns: tuple[int, ...],
+                     n_buckets: int, id_col: str | None = None) -> DataFrame:
+    """(doc_id, b) rows (just (b) when id_col is None), one per feature
+    of each non-blank text: every lowercased word n-gram, n in gram_ns,
+    hashed into bucket b = hash60(gram) % n_buckets. The feature scan
+    shared by dsir_weights and seed_classifier."""
+    from ..functions.textfns import hash60, word_grams
+
+    words = F.split(F.lower(F.trim(F.col(text_col))), r"\s+")
+    grams = [word_grams(words, n) for n in gram_ns]
+    feats = grams[0] if len(grams) == 1 else F.concat(*grams)
+    ids = [] if id_col is None else [F.col(id_col).alias("doc_id")]
+    return (
+        side.filter(F.length(F.trim(F.col(text_col))) > 0)
+        .select(*ids, F.explode(feats).alias("g"))
+        .withColumn("b", hash60(F.col("g")) % n_buckets)
+        .drop("g")
+    )
+
+
+def llr_milli(a, b, total_a, total_b, n_buckets: int):
+    """Add-1-smoothed log-likelihood ratio of bucket count `a` (of a
+    distribution totalling `total_a`) vs `b` (of `total_b`), in integer
+    millinats: round(1000·ln((a+1)(total_b+K) / ((b+1)(total_a+K)))).
+    The ln reads a double built from exact integer products, so the
+    value is identical in Spark and DuckDB. DSIR's λ and the seed
+    classifier's weights are this one expression."""
+    return F.round(
+        1000
+        * F.log(
+            ((a + 1) * (total_b + n_buckets)).cast("double")
+            / ((b + 1) * (total_a + n_buckets)).cast("double")
+        )
+    ).cast("long")
+
+
 def dsir_weights(
     df: DataFrame,
     target_df: DataFrame,
@@ -260,7 +292,6 @@ def dsir_weights(
     n_buckets: int = 4096,
     gram_n: int = 2,
     salt: str = "dsir",
-    broadcast_features: bool = True,
 ) -> DataFrame:
     """DSIR-style importance weights (Xie et al. 2023, "Data Selection
     for Language Models via Importance Resampling"): score every doc
@@ -291,33 +322,19 @@ def dsir_weights(
 
     Scale shape: features are hashed into `n_buckets` buckets, so both
     distribution tables are K rows regardless of corpus size — they
-    broadcast (broadcast_features=False degrades to a shuffle join for
-    pathological K). The corpus is scanned once per side into
-    (doc, bucket) longs; the per-doc weight aggregation is map-side
-    partial. Totals ride 1-row broadcast cross joins, never a collect.
+    broadcast. The corpus is scanned once per side into (doc, bucket)
+    longs; the per-doc weight aggregation is map-side partial. Totals
+    ride 1-row broadcast cross joins, never a collect.
 
     Reference parity: code-index has no data-selection stage (its
     corpus is a workspace); DSIR is the standard pretraining-pipeline
     member of this operator family."""
-    from ..functions.textfns import hash52, hash60, word_grams
+    from ..functions.textfns import hash52
 
     K = n_buckets
-    words = F.split(F.lower(F.trim(F.col(text_col))), r"\s+")
-    nonempty = F.length(F.trim(F.col(text_col))) > 0
-
-    def buckets(side: DataFrame, with_id: bool) -> DataFrame:
-        cols = [F.col(id_col).alias("doc_id")] if with_id else []
-        g = side.filter(nonempty).select(
-            *cols, F.explode(word_grams(words, gram_n)).alias("g")
-        )
-        return g.select(
-            *(["doc_id"] if with_id else []),
-            (hash60(F.col("g")) % K).alias("b"),
-        )
-
-    tb = buckets(target_df, with_id=False)
-    db = buckets(df, with_id=True)
-    tc = tb.groupBy("b").agg(F.count("*").alias("ct"))
+    db = _hashed_features(df, text_col, (gram_n,), K, id_col)
+    tc = _hashed_features(target_df, text_col, (gram_n,), K).groupBy("b").agg(
+        F.count("*").alias("ct"))
     rc = db.groupBy("b").agg(F.count("*").alias("cr"))
     # totals: two 1-row aggs joined — never a driver collect
     tt = tc.agg(F.sum("ct").cast("long").alias("tt"))
@@ -328,18 +345,11 @@ def dsir_weights(
         .crossJoin(F.broadcast(tr))
         .select(
             "b",
-            F.round(
-                1000
-                * F.log(
-                    ((F.coalesce(F.col("ct"), F.lit(0)) + 1)
-                     * (F.col("tr") + K)).cast("double")
-                    / ((F.col("cr") + 1) * (F.col("tt") + K)).cast("double")
-                )
-            ).cast("long").alias("lam_milli"),
+            llr_milli(F.coalesce(F.col("ct"), F.lit(0)), F.col("cr"),
+                      F.col("tt"), F.col("tr"), K).alias("lam_milli"),
         )
     )
-    lam_side = F.broadcast(lam) if broadcast_features else lam
-    per = db.join(lam_side, "b").groupBy("doc_id").agg(
+    per = db.join(F.broadcast(lam), "b").groupBy("doc_id").agg(
         F.count("*").cast("int").alias("n_grams"),
         F.sum("lam_milli").cast("long").alias("weight_milli"),
     )
@@ -370,8 +380,6 @@ def seed_classifier(
     id_col: str,
     text_col: str,
     n_buckets: int = 4096,
-    broadcast_weights: bool = True,
-    truncate_lineage: bool = True,
 ) -> DataFrame:
     """fastText-style model-based quality filter (the FineWeb-Edu /
     DCLM 'classifier filtering' stage): train a linear classifier over
@@ -402,46 +410,25 @@ def seed_classifier(
     (an empty class has no prior — ln(0) nulls every logit).
 
     Scale shape: features hash into `n_buckets` buckets, so the weight
-    table is K rows regardless of seed size and broadcasts
-    (broadcast_weights=False degrades to a shuffle join for
-    pathological K). Each corpus is scanned once into (doc, bucket)
-    longs; the per-doc logit aggregation is map-side partial; totals
-    and the prior ride 1-row broadcast cross joins, never a collect.
+    table is K rows regardless of seed size and broadcasts. Each
+    corpus is scanned once into (doc, bucket) longs; the per-doc logit
+    aggregation is map-side partial; totals and the prior ride 1-row
+    broadcast cross joins, never a collect.
 
     Reference parity: code-index has no model-based filter (its corpus
     is a trusted workspace); this is the standard classifier-filtering
     member of the training-data operator family, next to dsir_weights
     (unsupervised importance weights) and quality_features (rule
     scores)."""
-    from ..functions.textfns import hash60, word_grams
-
     K = n_buckets
-    words = F.split(F.lower(F.trim(F.col(text_col))), r"\s+")
     nonempty = F.length(F.trim(F.col(text_col))) > 0
-
-    def buckets(side: DataFrame, with_id: bool) -> DataFrame:
-        cols = [F.col(id_col).alias("doc_id")] if with_id else []
-        feats = F.concat(word_grams(words, 1), word_grams(words, 2))
-        g = side.filter(nonempty).select(
-            *cols, F.explode(feats).alias("g")
-        )
-        return g.select(
-            *(["doc_id"] if with_id else []),
-            (hash60(F.col("g")) % K).alias("b"),
-        )
-
-    pc = buckets(pos_df, with_id=False).groupBy("b").agg(
-        F.count("*").alias("cp"))
-    nc = buckets(neg_df, with_id=False).groupBy("b").agg(
-        F.count("*").alias("cn"))
-    if truncate_lineage:
-        # each count table is ≤K rows but feeds TWO consumers (the
-        # weight table and its total); materializing it runs the seed
-        # feature-hash scan once instead of twice. Opt-out for callers
-        # that need executor-loss recompute semantics (the
-        # band_collision_pairs discipline, round-4 ADVICE).
-        pc = pc.localCheckpoint(eager=True)
-        nc = nc.localCheckpoint(eager=True)
+    # each count table is ≤K rows but feeds TWO consumers (the weight
+    # table and its total); materializing it runs the seed feature-hash
+    # scan once instead of twice
+    pc = _hashed_features(pos_df, text_col, (1, 2), K).groupBy("b").agg(
+        F.count("*").alias("cp")).localCheckpoint(eager=True)
+    nc = _hashed_features(neg_df, text_col, (1, 2), K).groupBy("b").agg(
+        F.count("*").alias("cn")).localCheckpoint(eager=True)
     tp = pc.agg(F.sum("cp").cast("long").alias("tp"))
     tn = nc.agg(F.sum("cn").cast("long").alias("tn"))
     np_ = pos_df.filter(nonempty).agg(
@@ -449,25 +436,15 @@ def seed_classifier(
     nn_ = neg_df.filter(nonempty).agg(
         F.count("*").cast("long").alias("nn"))
 
-    def llr_milli(cp_col, cn_col):
-        return F.round(
-            1000
-            * F.log(
-                ((cp_col + 1) * (F.col("tn") + K)).cast("double")
-                / ((cn_col + 1) * (F.col("tp") + K)).cast("double")
-            )
-        ).cast("long")
-
     wtab = (
         pc.join(nc, "b", "full")
         .crossJoin(F.broadcast(tp))
         .crossJoin(F.broadcast(tn))
         .select(
             "b",
-            llr_milli(
-                F.coalesce(F.col("cp"), F.lit(0)),
-                F.coalesce(F.col("cn"), F.lit(0)),
-            ).alias("w_milli"),
+            llr_milli(F.coalesce(F.col("cp"), F.lit(0)),
+                      F.coalesce(F.col("cn"), F.lit(0)),
+                      F.col("tp"), F.col("tn"), K).alias("w_milli"),
         )
     )
     # scalars every scored row needs: the unseen-bucket weight and the
@@ -475,17 +452,17 @@ def seed_classifier(
     consts = (
         tp.crossJoin(tn).crossJoin(np_).crossJoin(nn_)
         .select(
-            llr_milli(F.lit(0), F.lit(0)).alias("w_unseen_milli"),
+            llr_milli(F.lit(0), F.lit(0), F.col("tp"), F.col("tn"), K)
+            .alias("w_unseen_milli"),
             F.round(
                 1000 * F.log(F.col("np").cast("double")
                              / F.col("nn").cast("double"))
             ).cast("long").alias("prior_milli"),
         )
     )
-    db = buckets(df, with_id=True)
-    wside = F.broadcast(wtab) if broadcast_weights else wtab
     per = (
-        db.join(wside, "b", "left")
+        _hashed_features(df, text_col, (1, 2), K, id_col)
+        .join(F.broadcast(wtab), "b", "left")
         .groupBy("doc_id")
         .agg(
             F.count("*").cast("int").alias("n_feats"),
@@ -526,15 +503,13 @@ def fingerprint(df: DataFrame, id_col: str, text_col: str, window: int = 8) -> D
     portable values; 61-bit modular arithmetic overflows BIGINT in
     ANSI mode, so a rolling formulation cannot be shared with SQL."""
     from ..functions.textfns import hash60
+    from .dedupe import word_ngrams
 
     t = F.col(text_col)
-    words = F.split(F.trim(t), r"\s+")
-    n = F.size(words)
-    k = F.least(F.lit(window), n)
-    idx = F.sequence(F.lit(1), n - k + 1)
-    wins = F.transform(idx, lambda i: hash60(F.concat_ws(" ", F.slice(words, i, k))))
+    # a text of fewer than `window` words is one whole-text window
+    # (word_ngrams' rule); the min ignores repeated windows
     fp = F.when(F.length(F.trim(t)) == 0, F.lit(0).cast("long")).otherwise(
-        F.array_min(wins)
+        F.array_min(F.transform(word_ngrams(t, window), hash60))
     )
     return df.select(F.col(id_col).alias("id"), fp.alias("fingerprint"))
 

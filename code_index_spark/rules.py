@@ -166,16 +166,3 @@ def rules_for_role(role: str) -> list[Rule]:
 
 # Precomputed role → rules map; broadcast to executors by the extractor.
 RULES_BY_ROLE: dict[str, list[Rule]] = {role: rules_for_role(role) for role in ALL}
-
-
-def rules_dataframe(spark):
-    """The rule table as a (broadcastable) DataFrame, for joins/audits."""
-    rows = [
-        (r.rule_id, list(r.roles), r.category, r.pattern, r.group, r.priority, r.confidence)
-        for r in RULES
-    ]
-    return spark.createDataFrame(
-        rows,
-        "rule_id string, roles array<string>, category string, pattern string, "
-        "grp int, priority int, confidence double",
-    )

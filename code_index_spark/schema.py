@@ -24,93 +24,23 @@ TRANSCRIPTS = T.StructType(
     ]
 )
 
-# --- segments: turn text chunked like the reference's LineChunking ------
-# (reference chunking.py:25-95: greedy ~1000-char line packing, oversized
-#  chunks split with parent_block_id / split_index / split_total).
-SEGMENTS = T.StructType(
-    [
-        T.StructField("conv_id", T.StringType(), False),
-        T.StructField("turn_idx", T.IntegerType(), False),
-        T.StructField("seg_type", T.StringType(), False),  # 'chunk'
-        T.StructField("start_line", T.IntegerType(), False),
-        T.StructField("end_line", T.IntegerType(), False),
-        T.StructField("content", T.StringType(), False),
-        T.StructField("split_index", T.IntegerType(), True),  # 1-based
-        T.StructField("split_total", T.IntegerType(), True),
-        T.StructField("parent_block_id", T.StringType(), True),
-        T.StructField("segment_hash", T.StringType(), False),
-    ]
-)
-
 # --- triples: the KG facts -----------------------------------------------
 # subj = turn scope "conv#idx" (the reference's file_path scope),
 # pred ∈ {class,function,import,call,data,logic} (queries_minimal.jsonl
 # categories), obj = exact captured span text (reference semantics:
 # identifier = text[start_byte:end_byte], relationship_extractor.py:115).
-TRIPLES = T.StructType(
-    [
-        T.StructField("conv_id", T.StringType(), False),
-        T.StructField("turn_idx", T.IntegerType(), False),
-        T.StructField("subj", T.StringType(), False),
-        T.StructField("pred", T.StringType(), False),
-        T.StructField("obj", T.StringType(), False),
-        T.StructField("span_start", T.IntegerType(), False),
-        T.StructField("span_end", T.IntegerType(), False),
-        T.StructField("rule_id", T.StringType(), False),
-        T.StructField("confidence", T.DoubleType(), False),
-    ]
-)
-
-# flat UDF output (Arrow-friendly: no nested structs across the UDF
+# Flat UDF output (Arrow-friendly: no nested structs across the UDF
 # boundary, SURVEY.md §7.3); structs are assembled in SQL afterwards.
 TRIPLES_FLAT_DDL = (
     "conv_id string, turn_idx int, subj string, pred string, obj string, "
     "span_start int, span_end int, rule_id string, confidence double"
 )
 
+# --- segments: turn text chunked like the reference's LineChunking ------
+# (reference chunking.py:25-95: greedy ~1000-char line packing, oversized
+#  chunks split with parent_block_id / split_index / split_total).
 SEGMENTS_FLAT_DDL = (
     "conv_id string, turn_idx int, seg_type string, start_line int, "
     "end_line int, content string, split_index int, split_total int, "
     "parent_block_id string, segment_hash string"
-)
-
-# --- entity linking / graph ---------------------------------------------
-MENTION_PAIRS = T.StructType(
-    [
-        T.StructField("surface_a", T.StringType(), False),
-        T.StructField("surface_b", T.StringType(), False),
-        T.StructField("jaccard", T.DoubleType(), False),
-        T.StructField("cosine", T.DoubleType(), False),
-    ]
-)
-
-VERTICES = T.StructType(
-    [
-        T.StructField("entity_id", T.LongType(), False),
-        T.StructField("canonical_name", T.StringType(), False),
-        T.StructField("surface_forms", T.ArrayType(T.StringType()), False),
-        T.StructField("mention_count", T.LongType(), False),
-    ]
-)
-
-EDGES = T.StructType(
-    [
-        T.StructField("src_entity", T.LongType(), False),
-        T.StructField("pred", T.StringType(), False),
-        T.StructField("dst_entity", T.LongType(), False),
-        T.StructField("conv_id", T.StringType(), False),
-        T.StructField("turn_idx", T.IntegerType(), False),
-        T.StructField("weight", T.DoubleType(), False),
-    ]
-)
-
-# --- checkpoint/lineage table (FIXTURES.md §3) ---------------------------
-CHECKPOINTS = T.StructType(
-    [
-        T.StructField("partition_id", T.IntegerType(), False),
-        T.StructField("content_hash", T.LongType(), False),
-        T.StructField("triple_count", T.LongType(), False),
-        T.StructField("status", T.StringType(), False),
-        T.StructField("updated_at", T.TimestampType(), False),
-    ]
 )

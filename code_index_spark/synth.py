@@ -309,10 +309,3 @@ def transcripts_df(spark, n_convs: int = 50, seed: int = 42, long_conv_turns: in
 
     pdf, _ = synthesize(n_convs, seed, long_conv_turns)
     return spark.createDataFrame(pdf, schema=TRANSCRIPTS)
-
-
-def expected_triples_df(spark, n_convs: int = 50, seed: int = 42, long_conv_turns: int = 0):
-    from .schema import TRIPLES
-
-    _, pdf = synthesize(n_convs, seed, long_conv_turns)
-    return spark.createDataFrame(pdf, schema=TRIPLES)

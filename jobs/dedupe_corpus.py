@@ -7,7 +7,8 @@
 
 Writes the duplicate-pair table as parquet and prints a one-line JSON
 summary. `verified` (default) = MinHash-LSH blocking + exact raw-
-shingle Jaccard rescore — the 100 TB shape; `exact` = byte-identity
+shingle Jaccard rescore — the 100 TB shape (`minhash` is the same
+operator under its older name); `exact` = byte-identity
 groups; `simhash` = Hamming-banded 60-bit signatures; `clusters` =
 verified pairs closed into min-id-labeled components (one row per
 doc); `passages` = Lee-et-al exact-substring removal — writes the
@@ -44,7 +45,6 @@ def main(argv=None) -> None:
 
     from code_index_spark.operators.dedupe import (
         exact_duplicates,
-        minhash_lsh_pairs,
         minhash_verified_pairs,
         near_dup_clusters,
         remove_duplicated_passages,
@@ -54,17 +54,12 @@ def main(argv=None) -> None:
 
     spark = SparkSession.builder.appName("kgp-dedupe").getOrCreate()
     docs = spark.read.parquet(args.input)
-    if args.strategy == "verified":
+    if args.strategy in ("verified", "minhash"):
         pairs = minhash_verified_pairs(
             docs, args.id_col, args.text_col, threshold=args.threshold
         )
     elif args.strategy == "exact":
         pairs = exact_duplicates(docs, args.id_col, args.text_col)
-    elif args.strategy == "minhash":
-        pairs = minhash_lsh_pairs(
-            docs, args.id_col, args.text_col,
-            jaccard_max_dist=1.0 - args.threshold,
-        )
     elif args.strategy == "simhash":
         pairs = simhash_near_pairs(
             simhash(docs, args.id_col, args.text_col), args.max_hamming

@@ -57,3 +57,79 @@ def test_content_type_classes(spark):
     from code_index_spark.operators.segment import content_type_py
 
     assert {i: content_type_py(t) for i, t in rows} == got
+
+
+def _old_windows(text, n: int, whole_text: bool):
+    """The transform(sequence, slice) window builder the word_grams
+    callers used before: whole_text floors the window count at one (a
+    text of fewer than n words is one whole-text window), otherwise a
+    text without a full window has none."""
+    words = F.split(F.trim(text), r"\s+")
+    if whole_text:
+        idx = F.sequence(F.lit(1), F.greatest(F.size(words) - (n - 1), F.lit(1)))
+        return F.transform(idx, lambda i: F.concat_ws(" ", F.slice(words, i, n)))
+    n_words = F.when(F.length(F.trim(text)) == 0, 0).otherwise(F.size(words))
+    n_win = F.greatest(n_words - (n - 1), F.lit(0))
+    return F.when(
+        n_win > 0,
+        F.transform(F.sequence(F.lit(1), n_win),
+                    lambda i: F.concat_ws(" ", F.slice(words, i, n))),
+    ).otherwise(F.array().cast("array<string>"))
+
+
+@pytest.mark.parametrize("whole_text", [True, False], ids=["whole_text", "no_window"])
+@pytest.mark.parametrize("n", [1, 2, 3, 8])
+def test_word_windows_short_text_rules(spark, n, whole_text):
+    """Every word-window builder over textfns.word_grams agrees with the
+    old transform(sequence, slice) form on the texts where the
+    short-text rules decide: dedupe.word_ngrams and textstats.fingerprint
+    give a text of fewer than n words one whole-text window, dedupe's
+    hashed passage windows give it none. A NULL text has no windows:
+    word_ngrams gives NULL (the old form gave [''], which no caller
+    read: the shingle build drops NULL texts first), the hashed windows
+    give [] and the fingerprint is NULL, as before."""
+    from code_index_spark.functions.textfns import hash60
+    from code_index_spark.operators.dedupe import _hashed_windows, word_ngrams
+    from code_index_spark.operators.textstats import fingerprint
+
+    words = [f"w{i}" for i in range(n + 1)]
+    texts = [
+        "",
+        "   ",
+        "\tled by a tab",
+        "\nled by a newline",
+        "one",
+        " ".join(words[:n]),
+        " ".join(words),
+        "  spaced   out\twords  ",
+        "naïve café — ünïcödé 文字 テキスト",
+        None,
+    ]
+    df = spark.createDataFrame(list(enumerate(texts)), "doc_id long, text string")
+    text = F.col("text")
+    old = _old_windows(text, n, whole_text)
+    if whole_text:
+        # the old fingerprint's sequence(1, NULL) was NULL for NULL text
+        old = F.when(text.isNotNull(), old)
+        got = df.select(
+            "doc_id",
+            word_ngrams(text, n).alias("new"),
+            F.array_distinct(old).alias("old"),
+        ).collect()
+        fps = {r["id"]: r["fingerprint"] for r in fingerprint(df, "doc_id", "text", n).collect()}
+        old_fps = df.select(
+            "doc_id",
+            F.when(F.length(F.trim(text)) == 0, F.lit(0).cast("long"))
+            .otherwise(F.array_min(F.transform(old, hash60))).alias("fp"),
+        ).collect()
+        assert fps == {r["doc_id"]: r["fp"] for r in old_fps}
+    else:
+        _, _, hashes = _hashed_windows("text", n)
+        got = df.select(
+            "doc_id", hashes.alias("new"), F.transform(old, hash60).alias("old"),
+        ).collect()
+    for r in got:
+        assert r["new"] == r["old"], (texts[r["doc_id"]], r["new"], r["old"])
+    # the inputs exercise both sides of each rule
+    sizes = [len(r["new"]) for r in got if r["new"] is not None]
+    assert max(sizes) > 1 and (1 if whole_text else 0) in sizes

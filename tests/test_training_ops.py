@@ -6,10 +6,10 @@ import pytest
 from pyspark.sql import functions as F
 
 from code_index_spark.operators.dedupe import (
-    dedupe_exact,
     embedding_cosine_pairs,
     exact_duplicates,
-    minhash_lsh_pairs,
+    minhash_band_candidates,
+    minhash_verified_pairs,
     ngram_jaccard_pairs,
     simhash,
     simhash_near_pairs,
@@ -46,9 +46,6 @@ def test_exact_dedupe(spark, docs):
     dups = exact_duplicates(docs, "doc_id", "text").collect()
     assert len(dups) == 1
     assert dups[0]["n_dups"] == 2 and dups[0]["keep_id"] == 0
-    kept = dedupe_exact(docs, "doc_id", "text")
-    assert kept.count() == 5
-    assert kept.filter(F.col("doc_id") == 1).count() == 0  # loser dropped
 
 
 def test_ngram_jaccard(spark, docs):
@@ -61,15 +58,16 @@ def test_ngram_jaccard(spark, docs):
 
 def test_minhash_lsh_finds_near_dups(spark, docs):
     pairs = {(r["id_a"], r["id_b"])
-             for r in minhash_lsh_pairs(docs, "doc_id", "text", 3, 0.5).collect()}
+             for r in minhash_verified_pairs(docs, "doc_id", "text", 3, 0.5).collect()}
     assert (0, 1) in pairs
     assert all(3 not in p for p in pairs)
 
 
 def test_minhash_candidates_contain_all_true_pairs(spark):
-    """Containment gate: LSH candidates must be a superset of every pair
-    with exact shingle-Jaccard ≥ 1 - jaccard_max_dist (recall check the
-    driver's rows-only row can't express)."""
+    """Containment gate: band candidates, with the tables sized for
+    recall at 0.7, must be a superset of every pair with exact
+    shingle-Jaccard ≥ 0.7 (recall check the driver's rows-only row
+    can't express)."""
     import itertools
     import random
 
@@ -95,13 +93,14 @@ def test_minhash_candidates_contain_all_true_pairs(spark):
         for a, b in itertools.combinations(sorted(sh), 2)
         if len(sh[a] & sh[b]) / len(sh[a] | sh[b]) >= 0.7
     }
+    from code_index_spark.functions.minhash import tables_for_recall
+
     cands = {(r["id_a"], r["id_b"])
-             for r in minhash_lsh_pairs(df, "doc_id", "text", 3, 0.3).collect()}
+             for r in minhash_band_candidates(
+                 df, "doc_id", "text", 3, tables_for_recall(0.7, 1e-6)).collect()}
     assert true_pairs <= cands
     # and the verified (blocked + exact rescore) operator returns exactly
     # the true pair set with exact jaccard values
-    from code_index_spark.operators.dedupe import minhash_verified_pairs
-
     verified = {(r["id_a"], r["id_b"])
                 for r in minhash_verified_pairs(df, "doc_id", "text", 3, 0.7).collect()}
     assert verified == true_pairs
@@ -117,11 +116,6 @@ def test_minhash_boilerplate_clique_cap(spark):
     The cap must crush the candidate volume while leaving the VERIFIED
     output identical, because everything it drops rescores below the
     threshold anyway."""
-    from code_index_spark.operators.dedupe import (
-        minhash_band_candidates,
-        minhash_verified_pairs,
-    )
-
     rows = []
     for i in range(100):  # the clique: "zz yy xx u2i u2i+1"
         rows.append((i, f"zz yy xx u{2 * i} u{2 * i + 1}"))
@@ -244,9 +238,6 @@ def test_embedding_cosine_pairs_and_blocking(spark):
              for r in embedding_cosine_pairs(df, "id", "v", 0.99).collect()}
     assert (0, 1) in exact and exact[(0, 1)] == pytest.approx(1.0)
     assert (0, 2) in exact
-    blocked = {(r["id_a"], r["id_b"])
-               for r in embedding_cosine_pairs(df, "id", "v", 0.99, n_planes=4).collect()}
-    assert (0, 1) in blocked  # identical-direction vectors share all sign bits
 
 
 def test_ivf_topk_recall(spark):

@@ -4,31 +4,43 @@ row count, column names, and order-insensitive values.
 
 Usage: python tools/check_oracles.py [sf_dir] [only_query ...]
 
-Runs on local[$SPARK_GRAFT_CPUS] (default 16) with 16 shuffle
-partitions; the derived transcripts view is as wide as the cores.
-DuckDB runs beside the driver JVM's 8 GB heap, so it gets an explicit
-3 GB memory limit and spills under the system temp dir (its defaults,
-80% of RAM and `.tmp` in the working directory, overcommit the box
-together with the JVM).
+The query list runs in groups of GROUP_SIZE, each group in a fresh
+child process (its own Spark session and DuckDB connection), and the
+parent prints one merged OK/FAIL table. One process cannot run the
+whole list: every DuckDB `.df()` fetch of a large result (the 754k-row
+triples rows at sf0.01) leaves ~16–23k memory mappings behind, and
+once the process reaches vm.max_map_count (65,530) every DuckDB
+allocation fails. An `.arrow()` fetch releases them but types DECIMAL
+columns as Python Decimal, which breaks the `doc_quality` compare.
+
+Each child runs on local[$SPARK_GRAFT_CPUS] (default 16) with 16
+shuffle partitions; the derived transcripts view is as wide as the
+cores. DuckDB runs beside the driver JVM's 8 GB heap, so it gets an
+explicit 3 GB memory limit and spills under the system temp dir (its
+defaults, 80% of RAM and `.tmp` in the working directory, overcommit
+the box together with the JVM).
 """
 
 from __future__ import annotations
 
 import functools
+import json
 import os
+import subprocess
 import sys
 import tempfile
 import time
 
-import duckdb
 import pandas as pd
 
 print = functools.partial(print, flush=True)
 
-sys.path.insert(0, ".")
+ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, ROOT)
 import __spark_entry__ as entrymod  # noqa: E402
-from code_index_spark.session import get_spark  # noqa: E402
-from code_index_spark.sources.tpch import TABLES  # noqa: E402
+
+GROUP_SIZE = 8
+RESULT_TAG = "RESULT "
 
 
 def normalize(pdf: pd.DataFrame) -> pd.DataFrame:
@@ -45,9 +57,40 @@ def normalize(pdf: pd.DataFrame) -> pd.DataFrame:
     return pdf.sort_values(list(pdf.columns)).reset_index(drop=True)
 
 
-def main() -> int:
-    sf_dir = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.01"
-    only = set(sys.argv[2:])
+def check(spark, con, sf_dir: str, name: str, fn, oracle: str | None) -> tuple[str, str]:
+    """(status, detail) of one query: OK, FAIL, or ROWS (no oracle)."""
+    t0 = time.perf_counter()
+    try:
+        got = fn(spark, sf_dir).toPandas()
+        print(f"  [{name} spark {time.perf_counter() - t0:.1f}s]")
+    except Exception as e:
+        return "FAIL", f"spark error {type(e).__name__}: {str(e)[:300]}"
+    if oracle is None:
+        return "ROWS", f"{len(got)} rows (no oracle)"
+    try:
+        want = con.execute(oracle).df()
+    except Exception as e:
+        return "FAIL", f"duckdb error {str(e)[:300]}"
+    g, w = normalize(got), normalize(want)
+    if list(g.columns) != list(w.columns):
+        return "FAIL", f"columns {list(g.columns)} vs {list(w.columns)}"
+    if len(g) != len(w):
+        return "FAIL", f"rows {len(g)} vs {len(w)}"
+    try:
+        pd.testing.assert_frame_equal(g, w, check_dtype=False, atol=1e-6)
+    except AssertionError as e:
+        return "FAIL", f"values differ: {str(e)[:400]}"
+    return "OK", f"{len(g)} rows"
+
+
+def run_group(sf_dir: str, names: list[str]) -> None:
+    """Child: check `names` in this process, printing one tagged JSON
+    line per query for the parent."""
+    import duckdb
+
+    from code_index_spark.session import get_spark
+    from code_index_spark.sources.tpch import TABLES
+
     cores = int(os.environ.get("SPARK_GRAFT_CPUS", "16"))
     spark = get_spark("oracle-check", cores=cores, shuffle_partitions=16)
     con = duckdb.connect(config={
@@ -56,46 +99,43 @@ def main() -> int:
     })
     for t in TABLES:
         con.execute(f"CREATE VIEW {t} AS SELECT * FROM '{sf_dir}/{t}.parquet'")
+    qs, os_ = entrymod.queries(), entrymod.oracle_sql()
+    for name in names:
+        status, detail = check(spark, con, sf_dir, name, qs[name], os_.get(name))
+        print(f"{status:<4} {name}: {detail}")
+        print(RESULT_TAG + json.dumps([name, status, detail]))
 
-    qs = entrymod.queries()
-    os_ = entrymod.oracle_sql()
-    failures = []
-    for name, fn in qs.items():
-        if only and name not in only:
-            continue
-        t0 = time.perf_counter()
-        try:
-            got = fn(spark, sf_dir).toPandas()
-            print(f"  [{name} spark {time.perf_counter() - t0:.1f}s]")
-        except Exception as e:
-            failures.append(name)
-            print(f"FAIL {name}: spark error {type(e).__name__}: {str(e)[:300]}")
-            continue
-        if name not in os_:
-            print(f"ROWS {name}: {len(got)} rows (no oracle)")
-            continue
-        try:
-            want = con.execute(os_[name]).df()
-        except Exception as e:
-            failures.append(name)
-            print(f"FAIL {name}: duckdb error {str(e)[:300]}")
-            continue
-        g, w = normalize(got), normalize(want)
-        if list(g.columns) != list(w.columns):
-            failures.append(name)
-            print(f"FAIL {name}: columns {list(g.columns)} vs {list(w.columns)}")
-            continue
-        if len(g) != len(w):
-            failures.append(name)
-            print(f"FAIL {name}: rows {len(g)} vs {len(w)}")
-            continue
-        try:
-            pd.testing.assert_frame_equal(g, w, check_dtype=False, atol=1e-6)
-            print(f"OK   {name}: {len(g)} rows")
-        except AssertionError as e:
-            failures.append(name)
-            print(f"FAIL {name}: values differ: {str(e)[:400]}")
-    print(f"\n{len(failures)} failures: {failures}")
+
+def main() -> int:
+    if sys.argv[1:2] == ["--group"]:
+        run_group(sys.argv[2], sys.argv[3:])
+        return 0
+    sf_dir = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.01"
+    only = set(sys.argv[2:])
+    names = [n for n in entrymod.queries() if not only or n in only]
+    results: dict[str, tuple[str, str]] = {}
+    for i in range(0, len(names), GROUP_SIZE):
+        group = names[i:i + GROUP_SIZE]
+        child = subprocess.Popen(
+            [sys.executable, os.path.abspath(__file__), "--group", sf_dir, *group],
+            cwd=ROOT, stdout=subprocess.PIPE, text=True,
+        )
+        for line in child.stdout:
+            if line.startswith(RESULT_TAG):
+                name, status, detail = json.loads(line[len(RESULT_TAG):])
+                results[name] = (status, detail)
+            else:
+                print(line, end="")
+        rc = child.wait()
+        for name in group:
+            results.setdefault(name, ("FAIL", f"child process exited {rc} before it"))
+
+    print("\n" + "\n".join(
+        f"{results[n][0]:<4} {n}: {results[n][1][:120]}" for n in names))
+    failures = [n for n in names if results[n][0] == "FAIL"]
+    n_oracle = sum(results[n][0] != "ROWS" for n in names)
+    print(f"\n{n_oracle - len(failures)}/{n_oracle} oracles OK; "
+          f"{len(failures)} failures: {failures}")
     return 1 if failures else 0
 
 
