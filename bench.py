@@ -64,15 +64,16 @@ def headline_queries(tbl) -> dict:
 
 def main() -> None:
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    cores = int(os.environ.get("SPARK_GRAFT_CPUS", os.cpu_count() or 8))
     trials = int(os.environ.get("SPARK_GRAFT_BENCH_TRIALS", "3"))
 
     from code_index_spark.operators.extract import extract_triples, extract_triples_sql
     from code_index_spark.operators.materialize import build_edges_agg
     from code_index_spark.operators.segment import segment
     from code_index_spark.plans.pipeline import STAGES, run_stage
-    from code_index_spark.session import get_spark
+    from code_index_spark.session import default_cores, get_spark
     from code_index_spark.sources.tpch import derived_transcripts, load_tables
+
+    cores = default_cores()
 
     spark = get_spark("bench", cores=cores, shuffle_partitions=max(cores, 32))
     timings: dict[str, float] = {}

@@ -25,8 +25,11 @@ if ROOT not in sys.path:
 
 
 def cores() -> int:
-    """local[N] width of a bench session: $SPARK_GRAFT_CPUS, else 32."""
-    return int(os.environ.get("SPARK_GRAFT_CPUS", 32))
+    """local[N] width of a bench session: the session's default,
+    $SPARK_GRAFT_CPUS, else every CPU."""
+    from code_index_spark.session import default_cores
+
+    return default_cores()
 
 
 class Timing(NamedTuple):

@@ -1,12 +1,13 @@
 """End-to-end entity linking PAST the LSH cutover (round-4 VERDICT #4):
 one run at >10⁶ distinct surfaces through the composed at-scale path
 
-    candidate_pairs_lsh (r=3/b=70 AND-OR banding, stop-bucket cap)
-      → tfidf_cosine rescore
+    link_mentions' banded branch (r=3/b=70 AND-OR banding, stop-bucket
+      cap, then the in-place Jaccard + TF-IDF cosine verify)
       → connected_components (star loop — the >10⁶-edge branch)
 
-bench/lsh_recall.py measured the BLOCKING stage in isolation; this
-composes all three stages on one input and reports wall, candidate /
+The banded branch runs at any size here (LSH_ABOVE_SURFACES is set to
+0 in this process). bench/lsh_recall.py measured the BLOCKING stage in
+isolation; this composes both stages on one input and reports wall,
 pair / edge / component counts, plus an end-to-end cluster-quality
 check (planted variant families must land in one component).
 
@@ -158,13 +159,9 @@ def main() -> None:
 
     from pyspark.sql import functions as F
 
+    from code_index_spark.operators import link
     from code_index_spark.operators.canon import connected_components
-    from code_index_spark.operators.link import (
-        candidate_pairs_lsh,
-        char_ngrams,
-        normalize_surface,
-        tfidf_cosine,
-    )
+    from code_index_spark.operators.link import char_ngrams, normalize_surface
     from code_index_spark.session import get_spark
 
     spark = get_spark("link-scale", cores=cores(), shuffle_partitions=64)
@@ -205,22 +202,14 @@ def main() -> None:
     out = {"metric": "link_scale_end_to_end", "n_surfaces": n_surf,
            "n_families": n_fam}
 
+    link.LSH_ABOVE_SURFACES = 0
     t0 = time.perf_counter()
-    cands = candidate_pairs_lsh(surfaces, jaccard_max_dist=0.6)  # production defaults
-    cands = cands.localCheckpoint(eager=True)
-    out["n_candidates"] = cands.count()
-    out["wall_blocking_sec"] = round(time.perf_counter() - t0, 1)
-    print(json.dumps({k: out[k] for k in ("n_candidates", "wall_blocking_sec")}),
-          flush=True)
-
-    t0 = time.perf_counter()
-    scored = tfidf_cosine(cands, surfaces, n_docs=n_surf)
-    linked = scored.filter(F.col("cosine") >= 0.5).select(
+    linked = link.link_mentions(None, surfaces=surfaces).select(
         "surface_a", "surface_b"
     ).localCheckpoint(eager=True)
     out["n_linked_pairs"] = linked.count()
-    out["wall_rescore_sec"] = round(time.perf_counter() - t0, 1)
-    print(json.dumps({k: out[k] for k in ("n_linked_pairs", "wall_rescore_sec")}),
+    out["wall_link_sec"] = round(time.perf_counter() - t0, 1)
+    print(json.dumps({k: out[k] for k in ("n_linked_pairs", "wall_link_sec")}),
           flush=True)
 
     t0 = time.perf_counter()
@@ -251,31 +240,29 @@ def main() -> None:
         (F.col("c0") == F.col("c1")) & (F.col("c1") == F.col("c2"))
     ).count()
     out["family_cluster_rate"] = round(ok / max(n_fam, 1), 4)
-    out["wall_total_sec"] = round(
-        out["wall_blocking_sec"] + out["wall_rescore_sec"] + out["wall_cc_sec"], 1)
+    out["wall_total_sec"] = round(out["wall_link_sec"] + out["wall_cc_sec"], 1)
 
     section = (
         "## End-to-end linking past the LSH cutover\n\n"
         f"({n_surf} surfaces, local[{cores()}].) "
-        "The three at-scale stages COMPOSED on one >10⁶-surface input "
+        "The at-scale stages COMPOSED on one >10⁶-surface input "
         "(bench/link_scale.py; bench/lsh_recall.py measured blocking in "
         "isolation). Production settings throughout: r=3/b=70 AND-OR "
         "banding sized by bands_for_recall(0.4, 1%), stop-bucket cap "
-        "1000, cosine ≥ 0.5, CC via the "
+        "1000, then the in-place Jaccard + cosine verify, cosine ≥ 0.5, "
+        "CC via the "
         f"{'distributed star loop' if out['cc_path'] == 'star_loop' else 'driver union-find'} "
         f"({out['n_linked_pairs']} edges vs the 10⁶ cutover).\n\n"
         "| stage | wall (s) | output |\n|---|---|---|\n"
-        f"| candidate_pairs_lsh | {out['wall_blocking_sec']} | "
-        f"{out['n_candidates']} candidates |\n"
-        f"| tfidf_cosine ≥ 0.5 | {out['wall_rescore_sec']} | "
-        f"{out['n_linked_pairs']} linked pairs |\n"
+        f"| link_mentions, banded (blocking + verify, cosine ≥ 0.5) | "
+        f"{out['wall_link_sec']} | {out['n_linked_pairs']} linked pairs |\n"
         f"| connected_components ({out['cc_path']}) | {out['wall_cc_sec']} | "
         f"{out['n_labeled_surfaces']} labeled surfaces, "
         f"{out['n_components']} components |\n"
         f"| **total** | **{out['wall_total_sec']}** | |\n\n"
         f"End-to-end cluster quality: {out['family_cluster_rate']:.2%} of "
         f"{n_fam} planted 3-surface variant families resolve to a single "
-        "component (blocking recall × rescore acceptance × CC, composed "
+        "component (blocking recall × verify acceptance × CC, composed "
         "— not a per-stage proxy).\n"
     )
     report(out, section)

@@ -1,5 +1,6 @@
 """Measured recall of the >10⁶-surface entity-linking blocking path
-(operators/link.candidate_pairs_lsh) at the link_mentions cutover.
+(link_mentions' banded branch, functions.simjoin.minhash_join) at the
+link_mentions cutover.
 
 Why this exists: link_mentions routes to minhash banding exactly when
 the vocabulary exceeds 10⁶ distinct surfaces (link.py
@@ -93,7 +94,8 @@ def main() -> None:
     n_truth_mid = truth.filter(F.col("jaccard") < 0.6).count()
 
     from code_index_spark.functions.minhash import band_collision_pairs, minhash_bands
-    from code_index_spark.operators.link import candidate_pairs_lsh
+    from code_index_spark.functions.simjoin import minhash_join
+    from code_index_spark.operators.link import LSH_MAX_BUCKET
 
     print(f"surfaces={n_surf} truth_pairs={n_truth} (mid-band {n_truth_mid})")
     print("| r x bands | theory recall @ s=0.4 | measured | mid-band | candidates | wall (s) |")
@@ -108,18 +110,18 @@ def main() -> None:
         (1, 5), (1, 10), (2, 27), (3, 70))
     for r, k in configs:
         t0 = time.perf_counter()
-        bands = minhash_bands(
-            surfaces.select(F.col("surface").alias("id"), "grams"),
-            "id", "grams", k, rows_per_band=r,
-        )
+        sets = surfaces.select(F.col("surface").alias("id"), "grams")
+        bands = minhash_bands(sets, "id", "grams", k, rows_per_band=r)
         # count, don't checkpoint: at demo sizes the r=1 raw candidate
         # set runs to tens of millions of rows and caching it is the
-        # fastest way to OOM the measurement itself. max_bucket matches
-        # the production candidate_pairs_lsh setting (stop-bucket cap).
-        n_raw = band_collision_pairs(bands, max_bucket=1000).count()
-        cands = candidate_pairs_lsh(
-            surfaces, jaccard_max_dist=0.6, num_hash_tables=k, rows_per_band=r
-        ).select("surface_a", "surface_b").localCheckpoint(eager=True)
+        # fastest way to OOM the measurement itself. max_bucket is the
+        # banded link branch's stop-bucket cap.
+        n_raw = band_collision_pairs(bands, max_bucket=LSH_MAX_BUCKET).count()
+        cands = minhash_join(
+            sets, 0.4, k, rows_per_band=r, max_bucket=LSH_MAX_BUCKET
+        ).select(
+            F.col("id_a").alias("surface_a"), F.col("id_b").alias("surface_b")
+        ).localCheckpoint(eager=True)
         wall = round(time.perf_counter() - t0, 1)
         found = truth.join(cands, ["surface_a", "surface_b"], "left_semi")
         n_found = found.count()

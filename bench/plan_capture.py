@@ -25,14 +25,15 @@ def main() -> None:
     out_dir = os.path.join(ROOT, "plans", "r06")
     os.makedirs(out_dir, exist_ok=True)
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    cores = int(os.environ.get("SPARK_GRAFT_CPUS", os.cpu_count() or 8))
 
     from code_index_spark.operators.extract import extract_triples
     from code_index_spark.operators.materialize import build_edges_agg
     from code_index_spark.operators.segment import segment
     from code_index_spark.plans.pipeline import STAGES, keep
-    from code_index_spark.session import get_spark
+    from code_index_spark.session import default_cores, get_spark
     from code_index_spark.sources.tpch import derived_transcripts, load_tables
+
+    cores = default_cores()
 
     headline_queries = runpy.run_path(os.path.join(ROOT, "bench.py"))["headline_queries"]
     spark = get_spark("plan-capture", cores=cores, shuffle_partitions=max(cores, 32))

@@ -6,7 +6,8 @@ timed without the real sink:
 
   shingle   — dedupe._shingled materialization (the duplicated-filter
               fix: was 4.4s single-task at sf0.1, now ~0.6s at width)
-  minhash   — grams / bands / candidates / rescore phase walls
+  minhash   — grams / bands / candidates phase walls, then the whole
+              simjoin.minhash_join (bands + candidates + verify)
   extract   — full Catalyst extraction vs a regex-only probe (the
               floor argument: sizes of regexp_extract_all per rule,
               no structs/flatten/explode)
@@ -47,6 +48,7 @@ def main() -> None:
         from code_index_spark.functions.minhash import (
             band_collision_pairs, minhash_bands, tables_for_recall,
         )
+        from code_index_spark.functions.simjoin import minhash_join
         from code_index_spark.operators.dedupe import _shingled
 
         for trial in range(2):
@@ -70,18 +72,11 @@ def main() -> None:
             nc = cands.count()
             print(f"cands trial{trial}: {time.perf_counter()-t0:.2f}s "
                   f"({nc} candidates)", flush=True)
-            a = grams.select(F.col("id").alias("id_a"),
-                             F.col("grams").alias("ga")).hint("shuffle_hash")
-            b = grams.select(F.col("id").alias("id_b"),
-                             F.col("grams").alias("gb")).hint("shuffle_hash")
-            inter = F.size(F.array_intersect("ga", "gb"))
-            sc.setJobDescription("probe: rescore (shuffle-hash)")
+            sc.setJobDescription("probe: minhash_join")
             t0 = time.perf_counter()
-            n = (cands.join(a, "id_a").join(b, "id_b")
-                 .withColumn("j", inter / (F.size("ga") + F.size("gb") - inter))
-                 .filter(F.col("j") >= 0.7).count())
-            print(f"rescore trial{trial}: {time.perf_counter()-t0:.2f}s "
-                  f"({n} pairs)", flush=True)
+            n = minhash_join(grams, 0.7, k).count()
+            print(f"minhash_join trial{trial}: {time.perf_counter()-t0:.2f}s "
+                  f"({n} pairs; bands + candidates + verify)", flush=True)
 
     if "extract" in probes or "edges" in probes:
         from code_index_spark.operators.extract import extract_triples_sql
@@ -94,7 +89,8 @@ def main() -> None:
             base = transcripts.select("conv_id", "turn_idx", "role", "text")
             exprs = []
             for r in RULES:
-                m = F.size(F.regexp_extract_all("text", F.lit(r.pattern),
+                # the (?d) prefix extract.rule_matches() adds
+                m = F.size(F.regexp_extract_all("text", F.lit("(?d)" + r.pattern),
                                                 F.lit(r.group)))
                 if set(r.roles) != set(ALL):
                     m = F.when(F.col("role").isin(*r.roles), m).otherwise(F.lit(0))

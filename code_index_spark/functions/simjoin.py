@@ -7,13 +7,16 @@ Input contract for every function here: one row per distinct `id`,
 array_distinct). A gram's document frequency is then its row count
 after the explode, and tf ≡ 1.
 
- - prefix_join: exact Jaccard join (plus TF-IDF cosine when n_docs is
-   given) by prefix filtering, *Scalable and Robust Set Similarity
-   Join* (ICDE 2018).
- - minhash_join: minhash AND-OR banding blocking, then exact Jaccard
-   rescoring of the candidates only (functions.minhash).
+Every join is filter-and-verify (*Scalable and Robust Set Similarity
+Join*, ICDE 2018): a candidate generator, then _verify, the one place
+a candidate pair is scored.
+
+ - prefix_join: exact join; candidates are prefix-filtered postings.
+ - minhash_join: candidates are minhash AND-OR band collisions
+   (functions.minhash); recall is the banding's.
  - gram_weights / idf: the one TF-IDF weighting,
-   w = idf(df) = ln((N+1)/(df+1)) + 1.
+   w = idf(df) = ln((N+1)/(df+1)) + 1. Either join adds the TF-IDF
+   cosine of each pair when given n_docs.
 
 Prefix bound, stated once: with grams ordered rarest first, two sets
 of Jaccard >= t share a gram within the first sz − ceil(t·sz) + 1
@@ -62,19 +65,81 @@ def gram_weights(sets: DataFrame, n_docs: int) -> DataFrame:
     )
 
 
+def _key_vectors(sets: DataFrame) -> DataFrame:
+    """(id, v): each set as one sorted array of long keys in one global
+    gram order, df ascending then the gram (rarest first). A key is
+    df << 32 | the gram's rank among the grams of its df, so sorting
+    keys sorts by the order and idf is recomputed from the key alone."""
+    terms, df_ = _terms(sets)
+    keys = df_.select(
+        "gram",
+        F.shiftleft("df", 32)
+        .bitwiseOR(F.row_number().over(Window.partitionBy("df").orderBy("gram")))
+        .alias("key"),
+    )
+    return (
+        terms.join(F.broadcast(keys), "gram")
+        .groupBy("id")
+        .agg(F.sort_array(F.collect_list("key")).alias("v"))
+    )
+
+
+def _verify(
+    cands: DataFrame,
+    vec: DataFrame,
+    min_jaccard: float,
+    n_docs: int | None = None,
+    hint: str | None = None,
+) -> DataFrame:
+    """Score candidate pairs: the one verify step of every join here.
+
+    cands holds (id_a, id_b, ...) rows and vec one (id, v) row per set,
+    v its distinct grams or keys. Both sides' arrays are joined (with
+    `hint` on the array sides), c = array_intersect(va, vb) runs once
+    per pair and gives |x ∩ y| = size(c) and the exact Jaccard, and the
+    pairs below min_jaccard are dropped. With n_docs, v must be
+    _key_vectors' keys, and cosine = Σ_{k∈c} w(k)² / (‖va‖·‖vb‖) is
+    added, idf taken over n_docs. Returns cands' columns, c, jaccard
+    [, cosine]: callers filter on c (prefix_join's rarest shared key)
+    above this step and it still runs once."""
+    va = vec.select(F.col("id").alias("id_a"), F.col("v").alias("va"))
+    vb = vec.select(F.col("id").alias("id_b"), F.col("v").alias("vb"))
+    if hint is not None:
+        va, vb = va.hint(hint), vb.hint(hint)
+    inter = F.size("c")
+    pairs = (
+        cands.join(va, "id_a")
+        .join(vb, "id_b")
+        # one-row explode: a Generate is a pushdown barrier, so the
+        # filters above read c instead of re-running array_intersect
+        .select(*cands.columns, "va", "vb",
+                F.explode(F.array(F.array_intersect("va", "vb"))).alias("c"))
+        .withColumn("jaccard", inter / (F.size("va") + F.size("vb") - inter))
+        .filter(F.col("jaccard") >= min_jaccard)
+    )
+    out = [*cands.columns, "c", "jaccard"]
+    if n_docs is None:
+        return pairs.select(*out)
+
+    def weight(key):
+        return idf(F.shiftright(key, 32), n_docs)
+
+    def sq_norm(v):
+        return F.aggregate(v, F.lit(0.0), lambda acc, k: acc + weight(k) * weight(k))
+
+    cosine = sq_norm("c") / F.sqrt(sq_norm("va") * sq_norm("vb"))
+    return pairs.select(*out, cosine.alias("cosine"))
+
+
 def prefix_join(sets: DataFrame, min_jaccard: float, n_docs: int | None = None) -> DataFrame:
     """Exact set-similarity self-join: every pair id_a < id_b with
     Jaccard >= min_jaccard, as (id_a, id_b, jaccard), plus the TF-IDF
     cosine (idf over n_docs) when n_docs is given. Never builds the
     Σ df·(df−1)/2 gram-collision stream of an all-gram self-join.
 
-    1. Order + vectors. One global gram order, df ascending then the
-       gram (rarest first), encoded as one long key = df << 32 | the
-       gram's rank among the grams of its df: sorting keys sorts by the
-       order, and idf is recomputed from the key alone. Each set
-       becomes one row holding its sorted key array v; sizes and norms
-       are derived from v, so the postings and both verification
-       lookups read ONE aggregate exchange.
+    1. Vectors: _key_vectors, one row per set holding its sorted key
+       array v; sizes and norms are derived from v, so the postings and
+       both verification lookups read ONE aggregate exchange.
     2. Prefix filter (module docstring): only the first
        sz − ceil(t·sz) + 1 keys of each set are posted.
     3. Candidates: the prefix postings self-joined on the key, sid_a <
@@ -82,10 +147,8 @@ def prefix_join(sets: DataFrame, min_jaccard: float, n_docs: int | None = None) 
        2× the cores by an explicit repartition on sid_a: AQE does not
        coalesce a user-numbered repartition, and left to AQE the small
        postings input collapses into one task.
-    4. Verification: c = array_intersect(va, vb) over the longs;
-       |x ∩ y| = size(c) gives exact Jaccard, and Σ_{k∈c} w(k)² the
-       cosine numerator over ‖va‖·‖vb‖. A pair is kept only at its
-       rarest shared key, c[0] = key: array_intersect keeps va's
+    4. Verification: _verify over the key vectors. A pair is kept only
+       at its rarest shared key, c[0] = key: array_intersect keeps va's
        ascending order, and a qualifying pair's rarest shared key lies
        in both prefixes, so each pair survives exactly once without a
        dedupe shuffle.
@@ -95,18 +158,7 @@ def prefix_join(sets: DataFrame, min_jaccard: float, n_docs: int | None = None) 
     planner broadcasts its build side and the vector lookups, so no
     exchange carries a pair stream. Stop-grams sort last and fall out
     of every prefix but those of near-total-overlap sets."""
-    terms, df_ = _terms(sets)
-    keys = df_.select(
-        "gram",
-        F.shiftleft("df", 32)
-        .bitwiseOR(F.row_number().over(Window.partitionBy("df").orderBy("gram")))
-        .alias("key"),
-    )
-    vec = (
-        terms.join(F.broadcast(keys), "gram")
-        .groupBy("id")
-        .agg(F.sort_array(F.collect_list("key")).alias("v"))
-    )
+    vec = _key_vectors(sets)
     sz = F.size("v")
     post = vec.select(
         "id", sz.alias("sz"),
@@ -127,34 +179,10 @@ def prefix_join(sets: DataFrame, min_jaccard: float, n_docs: int | None = None) 
             & ((1.0 + min_jaccard) * overlap_ub
                >= min_jaccard * (F.col("za") + F.col("zb")) - 1e-9)
         )
-        .select("sid_a", "sid_b", "key")
+        .select(F.col("sid_a").alias("id_a"), F.col("sid_b").alias("id_b"), "key")
     )
-    va = vec.select(F.col("id").alias("sid_a"), F.col("v").alias("va"))
-    vb = vec.select(F.col("id").alias("sid_b"), F.col("v").alias("vb"))
-    inter = F.size("c")
-    pairs = (
-        cands.join(va, "sid_a")
-        .join(vb, "sid_b")
-        # one-row explode: a Generate is a pushdown barrier, so the
-        # filters below read c instead of re-running array_intersect
-        .select("key", "sid_a", "sid_b", "va", "vb",
-                F.explode(F.array(F.array_intersect("va", "vb"))).alias("c"))
-        .filter(F.get("c", 0) == F.col("key"))
-        .withColumn("jaccard", inter / (F.size("va") + F.size("vb") - inter))
-        .filter(F.col("jaccard") >= min_jaccard)
-    )
-    out = [F.col("sid_a").alias("id_a"), F.col("sid_b").alias("id_b"), "jaccard"]
-    if n_docs is None:
-        return pairs.select(*out)
-
-    def weight(key):
-        return idf(F.shiftright(key, 32), n_docs)
-
-    def sq_norm(v):
-        return F.aggregate(v, F.lit(0.0), lambda acc, k: acc + weight(k) * weight(k))
-
-    cosine = sq_norm("c") / F.sqrt(sq_norm("va") * sq_norm("vb"))
-    return pairs.select(*out, cosine.alias("cosine"))
+    pairs = _verify(cands, vec, min_jaccard, n_docs)
+    return pairs.filter(F.get("c", 0) == F.col("key")).drop("key", "c")
 
 
 def minhash_join(
@@ -164,14 +192,21 @@ def minhash_join(
     rows_per_band: int = 1,
     max_bucket: int | None = None,
     num_partitions: int | None = None,
+    n_docs: int | None = None,
 ) -> DataFrame:
     """Minhash-blocked Jaccard self-join: (id_a, id_b, jaccard) for the
     pairs id_a < id_b that collide in >= 1 band (minhash_bands →
     band_collision_pairs) and whose exact gram Jaccard, computed on the
-    candidates only, is >= min_jaccard. Recall is the banding's: a pair
-    at similarity s is missed with probability (1 − s^r)^b.
+    candidates only, is >= min_jaccard, plus the TF-IDF cosine when
+    n_docs is given. Recall is the banding's: a pair at similarity s is
+    missed with probability (1 − s^r)^b.
 
-    The rescore joins are MERGE-hinted. Left to AQE they broadcast the
+    Signatures are always built over the gram strings. _verify reads
+    the gram arrays themselves, or, with n_docs, prefix_join's key
+    vectors, so a pair found by both joins gets the same Jaccard and
+    cosine.
+
+    The verify joins are MERGE-hinted. Left to AQE they broadcast the
     whole gram-array table twice (it fits the session's 64 MB estimate
     at bench scale) — two serial driver-built hashed relations of wide
     array rows, measured 3.2-6.5s at sf0.1 vs ~0.8-1.1s for either
@@ -186,13 +221,5 @@ def minhash_join(
         minhash_bands(sets, "id", "grams", num_tables, rows_per_band=rows_per_band),
         max_bucket=max_bucket, num_partitions=num_partitions,
     )
-    ga = sets.select(F.col("id").alias("id_a"), F.col("grams").alias("ga")).hint("merge")
-    gb = sets.select(F.col("id").alias("id_b"), F.col("grams").alias("gb")).hint("merge")
-    inter = F.size(F.array_intersect("ga", "gb"))
-    return (
-        cands.join(ga, "id_a")
-        .join(gb, "id_b")
-        .withColumn("jaccard", inter / (F.size("ga") + F.size("gb") - inter))
-        .filter(F.col("jaccard") >= min_jaccard)
-        .select("id_a", "id_b", "jaccard")
-    )
+    vec = sets.select("id", F.col("grams").alias("v")) if n_docs is None else _key_vectors(sets)
+    return _verify(cands, vec, min_jaccard, n_docs, hint="merge").drop("c")

@@ -1,8 +1,8 @@
-"""Entity linking — exact prefix-filtered similarity join at vocabulary
-scale, minhash-banding blocking + TF-IDF cosine rescoring beyond it
-(J1/E4 in SURVEY.md §2.5; the Spark-first re-expression of the
-reference's ANN similarity search, vector_store.py:386-530, where a
-query embedding is matched against the corpus under cosine with a
+"""Entity linking — one prefix-filtered or minhash-banded
+set-similarity join that scores every pair's Jaccard and TF-IDF cosine
+in place (J1/E4 in SURVEY.md §2.5; the Spark-first re-expression of
+the reference's ANN similarity search, vector_store.py:386-530, where
+a query embedding is matched against the corpus under cosine with a
 score threshold).
 
 Pipeline (all DataFrame ops, zero Python UDFs):
@@ -12,24 +12,24 @@ Pipeline (all DataFrame ops, zero Python UDFs):
     batch_scheduler.py:39-72, handled structurally);
  2. normalize + character-3-gram shingles (pure SQL: sequence +
     transform + substring — stays in WholeStageCodegen);
- 3. pair scoring — size-adaptive: up to ~10^6 distinct surfaces an
-    exact set-similarity join (linked_pairs_exact) joins only the
-    rare-gram PREFIX of each surface's gram set and verifies each
-    candidate pair's Jaccard AND TF-IDF cosine in place; beyond that,
-    pure-SQL minhash banding (functions.minhash, tables sized from a
-    target miss probability — see candidate_pairs_lsh) blocks
-    candidates first, then the explode-join TF-IDF cosine rescores
-    them.
+ 3. pair scoring — size-adaptive only in how candidates are found: up
+    to LSH_ABOVE_SURFACES distinct surfaces the exact prefix join
+    (linked_pairs_exact) posts each surface's rare-gram PREFIX; beyond
+    it recall-sized AND-OR minhash banding (LSH_ROWS_PER_BAND,
+    LSH_TARGET_MISS, LSH_MAX_BUCKET) proposes the candidates. Either
+    way the same verify step of functions.simjoin scores each
+    candidate's Jaccard and cosine over the same df-ordered key
+    vectors, so a pair both branches find gets the same scores.
 
-Both joins and the TF-IDF weighting are the shared set-similarity
+The joins and the TF-IDF weighting are the shared set-similarity
 core, functions.simjoin (prefix_join, minhash_join, gram_weights); its
 docstring states the prefix bound. Bounds of this module:
- - Surface ids are xxhash64(surface) longs throughout (exact pair
-   stream, banding tables, tfidf_cosine, connected-component nodes):
-   two distinct surfaces share an id with probability about n²/2⁶⁴,
-   ≈ 5·10⁻⁸ at 10⁶ surfaces.
- - LSH blocking misses at most target_miss of the pairs at the
-   threshold (candidate_pairs_lsh).
+ - Surface ids are xxhash64(surface) longs throughout (pair streams,
+   banding tables, connected-component nodes): two distinct surfaces
+   share an id with probability about n²/2⁶⁴, ≈ 5·10⁻⁸ at 10⁶
+   surfaces.
+ - The banded branch misses at most LSH_TARGET_MISS of the pairs at
+   the threshold, less the stop buckets LSH_MAX_BUCKET drops.
 
 Returns pairs (surface_a, surface_b, jaccard, cosine) with
 surface_a < surface_b, cosine >= min_cosine.
@@ -45,6 +45,19 @@ from ..functions.simjoin import gram_weights, minhash_join, prefix_join
 # link_mentions' cutover: up to this many distinct surfaces the exact
 # prefix join runs, beyond it minhash banding blocks candidates first
 LSH_ABOVE_SURFACES = 1_000_000
+# The banded branch's sizing. Bands are bands_for_recall(t, 1%, r=3):
+# a pair at the threshold t collides per band with probability t^r and
+# is missed with probability (1 − t^r)^b, b = 70 at t = 0.4. The AND
+# width r is measured (bench/lsh_recall.py at 1.44M surfaces): short
+# surfaces over the skewed char-3-gram universe have a mean random-pair
+# Jaccard near 0.003, so candidate noise ≈ b·s̄^r per pair; r=1 flooded
+# (70M candidates from 72k surfaces), r=2 admitted 230M at 1.44M, and
+# r=3 cuts that floor ~100× at 2.6× the hash budget. Band buckets of
+# more than 1000 surfaces are stop buckets and dropped
+# (functions.minhash.band_collision_pairs).
+LSH_ROWS_PER_BAND = 3
+LSH_TARGET_MISS = 0.01
+LSH_MAX_BUCKET = 1000
 
 
 def normalize_surface(col):
@@ -82,80 +95,29 @@ def mention_surfaces(triples: DataFrame) -> DataFrame:
     )
 
 
-def _surface_pairs(pairs: DataFrame, surfaces: DataFrame, *cols: str) -> DataFrame:
-    """(id_a, id_b, *cols) keyed on xxhash64 surface ids →
-    (surface_a, surface_b, *cols): the strings re-attach to the
+def _surface_pairs(pairs: DataFrame, surfaces: DataFrame, min_cosine: float) -> DataFrame:
+    """Scored (id_a, id_b, jaccard, cosine) pairs keyed on xxhash64
+    surface ids → the linked pairs (surface_a, surface_b, jaccard,
+    cosine) with cosine >= min_cosine: the strings re-attach to the
     pair-scale output, and the canonical surface_a < surface_b STRING
     orientation is restored via least/greatest (jaccard and cosine are
     symmetric)."""
     sa = surfaces.select(F.xxhash64("surface").alias("id_a"), F.col("surface").alias("surf_a"))
     sb = surfaces.select(F.xxhash64("surface").alias("id_b"), F.col("surface").alias("surf_b"))
-    return pairs.join(sa, "id_a").join(sb, "id_b").select(
-        F.least("surf_a", "surf_b").alias("surface_a"),
-        F.greatest("surf_a", "surf_b").alias("surface_b"),
-        *cols,
+    return (
+        pairs.filter(F.col("cosine") >= min_cosine)
+        .join(sa, "id_a").join(sb, "id_b")
+        .select(
+            F.least("surf_a", "surf_b").alias("surface_a"),
+            F.greatest("surf_a", "surf_b").alias("surface_b"),
+            "jaccard", "cosine",
+        )
     )
 
 
 def _surface_sets(surfaces: DataFrame) -> DataFrame:
     """(id, grams) sets keyed on xxhash64(surface) for functions.simjoin."""
     return surfaces.select(F.xxhash64("surface").alias("id"), "grams")
-
-
-def candidate_pairs_lsh(
-    surfaces: DataFrame,
-    jaccard_max_dist: float = 0.6,
-    num_hash_tables: int | None = None,
-    target_miss: float = 0.01,
-    rows_per_band: int = 3,
-    max_bucket: int | None = 1000,
-    num_partitions: int | None = None,
-) -> DataFrame:
-    """Minhash AND-OR banding blocking self-join over surfaces →
-    candidate pairs with exact gram Jaccard (computed on candidates
-    only; functions.simjoin.minhash_join).
-
-    Recall is SIZED, not guessed (round-3 fix): the band count defaults
-    to bands_for_recall(1 - jaccard_max_dist, target_miss, r) — a pair
-    at the minimum qualifying similarity s collides per band with
-    probability s^r, so miss = (1 - s^r)^b, and the default
-    0.6/0.01/r=3 gives b=70 (the previous fixed 5 single-row tables
-    measured ~8% missed true pairs at s=0.4, and this path only runs
-    in the >10⁶-surface regime where rescoring cannot recover
-    blocked-out pairs). The AND-width r is sized by MEASUREMENT
-    (bench/lsh_recall.py at 1.44M surfaces): short surfaces (~24
-    grams) over the skewed char-3-gram universe have mean random-pair
-    jaccard s̄≈0.003, so candidate noise ≈ b·s̄^r per pair — r=1
-    floods quadratically (70M pairs from just 72k surfaces), r=2
-    still admits 230M candidates at 1.44M surfaces (measured, recall
-    0.9997), and r=3 cuts the noise floor ~100× for the same 99%
-    threshold-recall bound at 2.6× the hash budget. Hash cost is
-    linear and map-side; candidate volume is the term that breaks at
-    scale, so the trade goes to r=3. pytest gates containment at the
-    cutover shape.
-
-    max_bucket drops structurally hot band buckets (popular boundary
-    grams winning both mins) before pair enumeration — stop-bucket
-    removal; see functions.minhash.band_collision_pairs for the
-    measured straggler it prevents and the recall argument.
-
-    Internals are keyed on xxhash64(surface) longs (round 6, same id
-    convention as linked_pairs_exact/connected_components): the banding
-    table is |surfaces| × b rows and the collision join + pair dedup
-    shuffle it — carrying ~25-char surface strings through that
-    exchange roughly doubled its bytes vs (long, int, long) rows.
-    Surface strings re-attach after the jaccard filter, so the output
-    contract is unchanged."""
-    if num_hash_tables is None:
-        num_hash_tables = bands_for_recall(
-            1.0 - jaccard_max_dist, target_miss, rows_per_band
-        )
-    scored = minhash_join(
-        _surface_sets(surfaces), 1.0 - jaccard_max_dist, num_hash_tables,
-        rows_per_band=rows_per_band, max_bucket=max_bucket,
-        num_partitions=num_partitions,
-    )
-    return _surface_pairs(scored, surfaces, "jaccard")
 
 
 def linked_pairs_exact(
@@ -174,44 +136,7 @@ def linked_pairs_exact(
     Pairs are keyed on xxhash64 surface ids (module docstring); the
     strings re-attach to the linked pairs only."""
     pairs = prefix_join(_surface_sets(surfaces), min_jaccard, n_docs)
-    return _surface_pairs(
-        pairs.filter(F.col("cosine") >= min_cosine), surfaces, "jaccard", "cosine"
-    )
-
-
-def tfidf_cosine(pairs: DataFrame, surfaces: DataFrame, n_docs: int | None = None) -> DataFrame:
-    """Exact TF-IDF cosine over candidate pairs via explode-join.
-
-    functions.simjoin.gram_weights gives (sid, gram, w, nrm);
-    cosine(a,b) = Σ wa·wb / (‖a‖·‖b‖). Pure SQL — scales as a hash
-    join on gram, with AQE skew splitting for stop-grams.
-
-    Internals keyed on xxhash64(surface) longs (round 6, same
-    convention as linked_pairs_exact/candidate_pairs_lsh): the
-    dot-product stream is |pairs| × |shared grams| rows and its
-    aggregation previously hashed/exchanged two surface strings per
-    row. The pair ids are computed directly from the strings (a pure
-    hash, no mapping join on the input side); strings re-attach to the
-    dup-scale output via the vocab-sized surface map."""
-    if n_docs is None:
-        n_docs = surfaces.count()
-    weighted = gram_weights(_surface_sets(surfaces), n_docs)
-    ids = pairs.select(
-        F.xxhash64("surface_a").alias("id_a"),
-        F.xxhash64("surface_b").alias("id_b"),
-        "jaccard",
-    )
-    wa = weighted.select(F.col("id").alias("id_a"), "gram",
-                         F.col("w").alias("wa"), F.col("nrm").alias("na"))
-    wb = weighted.select(F.col("id").alias("id_b"), "gram",
-                         F.col("w").alias("wb"), F.col("nrm").alias("nb"))
-    cosine = (
-        ids.join(wa, "id_a")
-        .join(wb, ["id_b", "gram"])
-        .groupBy("id_a", "id_b", "jaccard", "na", "nb")
-        .agg((F.sum(F.col("wa") * F.col("wb")) / (F.col("na") * F.col("nb"))).alias("cosine"))
-    )
-    return _surface_pairs(cosine, surfaces, "jaccard", "cosine")
+    return _surface_pairs(pairs, surfaces, min_cosine)
 
 
 def _search_index(triples: DataFrame) -> DataFrame:
@@ -276,7 +201,8 @@ def _py_normalize(s: str) -> str:
 
     s = s.lower().replace("@", "")
     s = re.sub(r"[-_]", " ", s)
-    return re.sub(r" +", " ", s.strip())
+    # Spark's trim strips spaces only, not tabs or newlines
+    return re.sub(r" +", " ", s.strip(" "))
 
 
 def _py_char_ngrams(s: str, n: int = 3) -> list[str]:
@@ -348,39 +274,35 @@ def link_mentions(
     The checkpoint materializes a tiny table — distinct mention
     surfaces — so this is cheap at any corpus size.
 
-    Blocking strategy is size-adaptive and measured: up to
-    LSH_ABOVE_SURFACES distinct surfaces the prefix-filtered exact
-    join (linked_pairs_exact) is both faster and recall-exact; beyond it
-    recall-sized AND-OR minhash banding (candidate_pairs_lsh, measured
-    recall in BENCH.md + pytest containment gate) bounds candidate
-    generation."""
+    Candidate generation is size-adaptive and measured: up to
+    LSH_ABOVE_SURFACES distinct surfaces the prefix-filtered exact join
+    (linked_pairs_exact) is both faster and recall-exact; beyond it
+    recall-sized AND-OR minhash banding bounds candidate generation.
+    Both branches score their candidates with the same verify step."""
     if surfaces is None:
         surfaces = mention_surfaces(triples).localCheckpoint(eager=True)
-    # adaptive shuffle sizing for the pair stages: the distinct-surface
-    # table is orders of magnitude smaller than the corpus, and running
-    # its self-join at corpus-scale shuffle widths is pure scheduling
-    # overhead (same lever as connected_components)
-    spark = surfaces.sparkSession
     n_surf = surfaces.count()
+    min_jaccard = 1.0 - jaccard_max_dist
     if n_surf <= LSH_ABOVE_SURFACES:
         # the exact join sizes its own candidate stage (prefix postings
         # spread over 2× the cores); its volume is prefix-collision-
         # driven, not all-gram-collision-driven
         return linked_pairs_exact(
-            surfaces, n_surf,
-            min_jaccard=1.0 - jaccard_max_dist, min_cosine=min_cosine,
+            surfaces, n_surf, min_jaccard=min_jaccard, min_cosine=min_cosine,
         )
-    # LSH path: candidate volume is bounded by banding, so downsize the
-    # blocking join to the surface count (scheduling overhead
+    # banded branch: candidate volume is bounded by banding, so the
+    # blocking join is sized to the surface count (scheduling overhead
     # otherwise) — PLAN-LOCALLY via an explicit repartition on the
-    # bands table (round-4 ADVICE: session-conf mutation in try/finally
-    # races concurrent queries sharing the session); the rescore
-    # shuffles stay at AQE-governed width (their volume is
-    # candidate-driven and AQE coalesces the small case)
-    session_parts = int(spark.conf.get("spark.sql.shuffle.partitions"))
-    loop_parts = max(2, min(session_parts, n_surf // 50_000 + 1))
-    pairs = candidate_pairs_lsh(
-        surfaces, jaccard_max_dist, num_partitions=loop_parts
+    # bands table (session-conf mutation races concurrent queries
+    # sharing the session); the verify shuffles stay at AQE-governed
+    # width (their volume is candidate-driven and AQE coalesces the
+    # small case)
+    session_parts = int(surfaces.sparkSession.conf.get("spark.sql.shuffle.partitions"))
+    pairs = minhash_join(
+        _surface_sets(surfaces), min_jaccard,
+        bands_for_recall(min_jaccard, LSH_TARGET_MISS, LSH_ROWS_PER_BAND),
+        rows_per_band=LSH_ROWS_PER_BAND, max_bucket=LSH_MAX_BUCKET,
+        num_partitions=max(2, min(session_parts, n_surf // 50_000 + 1)),
+        n_docs=n_surf,
     )
-    scored = tfidf_cosine(pairs, surfaces, n_docs=n_surf)
-    return scored.filter(F.col("cosine") >= min_cosine)
+    return _surface_pairs(pairs, surfaces, min_cosine)

@@ -13,6 +13,12 @@ from pyspark.sql import DataFrame, SparkSession, functions as F
 from pyspark.sql.types import DataType
 
 
+def default_cores() -> int:
+    """local[N] width when none is given: $SPARK_GRAFT_CPUS, else every
+    CPU the OS reports."""
+    return int(os.environ.get("SPARK_GRAFT_CPUS", os.cpu_count() or 8))
+
+
 def get_spark(
     app_name: str = "code-index-spark",
     cores: int | None = None,
@@ -21,12 +27,12 @@ def get_spark(
 ) -> SparkSession:
     """Build (or reuse) a SparkSession.
 
-    cores: parallelism for local mode (defaults to $SPARK_GRAFT_CPUS or all).
+    cores: parallelism for local mode (defaults to default_cores()).
     shuffle_partitions: defaults to max(cores, 32) — on a real cluster this
     would be ~2-3x total executor cores; AQE coalesces the excess.
     """
     if cores is None:
-        cores = int(os.environ.get("SPARK_GRAFT_CPUS", os.cpu_count() or 8))
+        cores = default_cores()
     if shuffle_partitions is None:
         shuffle_partitions = max(cores, 32)
 

@@ -1,6 +1,7 @@
-"""Entity linking (MinHashLSH blocking + TF-IDF cosine) and
-canonicalization (large-star/small-star connected components):
-known near-duplicate surfaces must cluster, distinct entities must not."""
+"""Entity linking (prefix-join or minhash-banded candidates, one
+Jaccard + TF-IDF cosine verify) and canonicalization
+(large-star/small-star connected components): known near-duplicate
+surfaces must cluster, distinct entities must not."""
 
 import pytest
 from pyspark.sql import functions as F
@@ -144,33 +145,27 @@ def test_build_edges_agg_matches_rollup(linked, spark):
     assert a["n"] < build_edges(triples, emap).count()
 
 
-def test_lsh_blocking_recall_sized(spark):
-    """Recall gate for the >10⁶-surface blocking path (the regime where
-    rescoring cannot recover blocked-out pairs): with banding tables
-    sized by tables_for_recall (k=10 at s≥0.4 / 1% target miss),
-    candidate_pairs_lsh must retain ≥99% of the exact gram-join pairs.
-    Deterministic: signatures are md5-based, no RNG in the engine."""
+def test_lsh_blocking_recall_sized(spark, monkeypatch):
+    """Recall and score gate for link_mentions' banded branch (above
+    LSH_ABOVE_SURFACES, where verification cannot recover blocked-out
+    pairs): AND-OR banding at r=3 with b = bands_for_recall(0.4, 1%, 3)
+    = 70 bands must keep ≥99% of linked_pairs_exact's pairs and nothing
+    else, and score each kept pair as the exact branch does: bit-equal
+    Jaccard, cosine within 1e-9. Deterministic: signatures are
+    md5-based, no RNG in the engine."""
     import random
 
-    from code_index_spark.functions.minhash import tables_for_recall
-    from code_index_spark.operators.link import (
-        candidate_pairs_lsh,
-        char_ngrams,
-        linked_pairs_exact,
-        normalize_surface,
-    )
+    from code_index_spark.functions.minhash import bands_for_recall, tables_for_recall
+    from code_index_spark.operators import link
 
     assert tables_for_recall(0.4, 0.01) == 10
+    assert bands_for_recall(0.4, link.LSH_TARGET_MISS, link.LSH_ROWS_PER_BAND) == 70
     # out-of-range thresholds are caller misconfiguration: raise, don't
     # silently degrade to a single no-guarantee table (round-4 ADVICE)
-    import pytest as _pytest
-
-    from code_index_spark.functions.minhash import bands_for_recall
-
     for bad in (0.0, 1.0, -0.2, 1.5):
-        with _pytest.raises(ValueError):
+        with pytest.raises(ValueError):
             tables_for_recall(bad, 0.01)
-        with _pytest.raises(ValueError):
+        with pytest.raises(ValueError):
             bands_for_recall(bad, 0.01, 3)
 
     rnd = random.Random(7)
@@ -187,23 +182,31 @@ def test_lsh_blocking_recall_sized(spark):
     assert len(set(base + variants)) == len(base + variants)
     surfaces = (
         spark.createDataFrame([(s,) for s in base + variants], "surface string")
-        .withColumn("norm", normalize_surface(F.col("surface")))
-        .withColumn("grams", char_ngrams(F.col("norm")))
+        .withColumn("norm", link.normalize_surface(F.col("surface")))
+        .withColumn("grams", link.char_ngrams(F.col("norm")))
         .localCheckpoint(eager=True)
     )
-    exact = {(r["surface_a"], r["surface_b"]) for r in linked_pairs_exact(
-        surfaces, surfaces.count(), min_jaccard=0.4, min_cosine=0.0
-    ).collect()}
-    # candidate_pairs_lsh post-filters candidates at the same exact
-    # jaccard threshold, so candidates ⊆ exact and recall = |∩|/|exact|
-    cands = {(r["surface_a"], r["surface_b"]) for r in candidate_pairs_lsh(
-        surfaces, jaccard_max_dist=0.6
-    ).collect()}
+
+    def scored(df):
+        rows = df.collect()
+        out = {(r["surface_a"], r["surface_b"]): (r["jaccard"], r["cosine"]) for r in rows}
+        assert len(out) == len(rows)  # each pair once
+        return out
+
+    exact = scored(link.linked_pairs_exact(
+        surfaces, surfaces.count(), min_jaccard=0.4, min_cosine=0.0))
+    monkeypatch.setattr(link, "LSH_ABOVE_SURFACES", 0)
+    banded = scored(link.link_mentions(
+        None, jaccard_max_dist=0.6, min_cosine=0.0, surfaces=surfaces))
     assert len(exact) > 100, "fixture must plant enough true pairs"
-    missed = exact - cands
+    assert set(banded) <= set(exact)
+    missed = exact.keys() - banded.keys()
     assert len(missed) / len(exact) <= 0.01, (
         f"blocking missed {len(missed)}/{len(exact)} true pairs"
     )
+    for k, (j, c) in banded.items():
+        assert j == exact[k][0], k
+        assert abs(c - exact[k][1]) <= 1e-9, k
 
 
 def test_component_determinism(linked, spark):
@@ -259,6 +262,8 @@ def test_search_index_parity(linked, spark, tmp_path):
         "zzqqxx",                # OOV-only → empty
         "",                      # empty
         "acme zzqqxx corp",      # mixed: OOV grams must not change ‖q‖
+        "acme corp\t",           # trim strips spaces only, not tabs
+        "\nacme corp",           # ... nor newlines
     ]
     for q in queries:
         want = rows(search_surfaces(triples, q, k=10))

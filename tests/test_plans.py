@@ -216,6 +216,20 @@ def test_shuffle_shards_single_exchange(spark):
     assert "MapInPandas" not in main and "BatchEvalPython" not in main
 
 
+def test_minhash_verify_intersects_once(spark):
+    """minhash_verified_pairs runs array_intersect once per candidate:
+    the verify step's one-row explode stops the Jaccard filter from
+    being pushed into the join condition and projected again, each a
+    copy of the intersection."""
+    from code_index_spark.operators.dedupe import minhash_verified_pairs
+
+    docs = load_tables(spark, "/root/testdata/sf0.001")["documents"]
+    out = minhash_verified_pairs(docs, "doc_id", "text", threshold=0.7)
+    assert out.collect()  # runs THIS plan, so its AQE plan is final
+    final = _plan(out).split("== Initial Plan ==")[0]
+    assert final.count("array_intersect(") == 1
+
+
 def _plan_children(node) -> list:
     """Children of an executed plan node, descending through AQE query
     stages and reused exchanges to the operators that ran."""

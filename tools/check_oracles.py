@@ -6,19 +6,23 @@ Usage: python tools/check_oracles.py [sf_dir] [only_query ...]
 
 The query list runs in groups of GROUP_SIZE, each group in a fresh
 child process (its own Spark session and DuckDB connection), and the
-parent prints one merged OK/FAIL table. One process cannot run the
-whole list: every DuckDB `.df()` fetch of a large result (the 754k-row
-triples rows at sf0.01) leaves ~16–23k memory mappings behind, and
-once the process reaches vm.max_map_count (65,530) every DuckDB
-allocation fails. An `.arrow()` fetch releases them but types DECIMAL
-columns as Python Decimal, which breaks the `doc_quality` compare.
+parent prints one merged OK/FAIL table.
 
-Each child runs on local[$SPARK_GRAFT_CPUS] (default 16) with 16
-shuffle partitions; the derived transcripts view is as wide as the
-cores. DuckDB runs beside the driver JVM's 8 GB heap, so it gets an
-explicit 3 GB memory limit and spills under the system temp dir (its
-defaults, 80% of RAM and `.tmp` in the working directory, overcommit
-the box together with the JVM).
+Each oracle result is fetched through a parquet file (fetch): DuckDB
+COPYs it out and pandas reads it back. A `.df()` fetch of a large
+result leaves memory mappings behind: a fresh process fetching the
+754k-row `triples_rows` oracle at sf0.01 peaked at 65,545 mappings,
+past vm.max_map_count (65,530), after which every DuckDB allocation
+fails; the COPY fetch of the same rows peaked near 1,000 mappings.
+DECIMAL columns are cast to float64, as `.df()` returns them, so the
+`doc_quality` compare is unchanged.
+
+Each child runs on get_spark's default width (local[$SPARK_GRAFT_CPUS],
+else every CPU) with 16 shuffle partitions; the derived transcripts
+view is as wide as the cores. DuckDB runs beside the driver JVM's 8 GB
+heap, so it gets an explicit 3 GB memory limit and spills under the
+system temp dir (its defaults, 80% of RAM and `.tmp` in the working
+directory, overcommit the box together with the JVM).
 """
 
 from __future__ import annotations
@@ -57,6 +61,25 @@ def normalize(pdf: pd.DataFrame) -> pd.DataFrame:
     return pdf.sort_values(list(pdf.columns)).reset_index(drop=True)
 
 
+def fetch(con, sql: str) -> pd.DataFrame:
+    """The result of `sql` as `.df()` types it, read back from a
+    parquet file that DuckDB COPYs it to (module docstring)."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    fd, path = tempfile.mkstemp(suffix=".parquet")
+    os.close(fd)
+    try:
+        con.execute(f"COPY ({sql.strip().rstrip(';')}) TO '{path}' (FORMAT PARQUET)")
+        pdf = pd.read_parquet(path)
+        for field in pq.read_schema(path):
+            if pa.types.is_decimal(field.type):
+                pdf[field.name] = pdf[field.name].astype("float64")
+    finally:
+        os.remove(path)
+    return pdf
+
+
 def check(spark, con, sf_dir: str, name: str, fn, oracle: str | None) -> tuple[str, str]:
     """(status, detail) of one query: OK, FAIL, or ROWS (no oracle)."""
     t0 = time.perf_counter()
@@ -68,7 +91,7 @@ def check(spark, con, sf_dir: str, name: str, fn, oracle: str | None) -> tuple[s
     if oracle is None:
         return "ROWS", f"{len(got)} rows (no oracle)"
     try:
-        want = con.execute(oracle).df()
+        want = fetch(con, oracle)
     except Exception as e:
         return "FAIL", f"duckdb error {str(e)[:300]}"
     g, w = normalize(got), normalize(want)
@@ -91,8 +114,7 @@ def run_group(sf_dir: str, names: list[str]) -> None:
     from code_index_spark.session import get_spark
     from code_index_spark.sources.tpch import TABLES
 
-    cores = int(os.environ.get("SPARK_GRAFT_CPUS", "16"))
-    spark = get_spark("oracle-check", cores=cores, shuffle_partitions=16)
+    spark = get_spark("oracle-check", shuffle_partitions=16)
     con = duckdb.connect(config={
         "memory_limit": "3GB",
         "temp_directory": os.path.join(tempfile.gettempdir(), "check_oracles_duckdb"),
